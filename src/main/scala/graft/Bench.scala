@@ -461,8 +461,8 @@ object Bench {
       // shingle-postings index servers + the edge-artifact peelers
       "dedup_ngram", "dedup_containment", "dedup_minhash",
       "graph_kcore", "graph_ktruss",
-      // round 16: converged-state servers (walk adjacency, HITS scores)
-      "graph_walks", "graph_hits")
+      // round 16: converged-state server (HITS scores)
+      "graph_hits")
       .filter(fns.contains)
 
     def strArr(xs: Seq[String]): String =
@@ -500,7 +500,7 @@ object Bench {
         s""""build_s":${r3d(buildTimes.values.sum)},"build_queries":$builds,""" +
         s""""queries":$qs,"queries_hot":$qh,"hot_reps":$reps,""" +
         s""""hot_protocol":"min_of_reps","min_hot_reps":$minReps,""" +
-        s""""outlier_rule":"requeue_once_above_${OutlierFactor}x_prior_calib_scaled",""" +
+        s""""outlier_rule":"requeue_once_outside_prior_div_${OutlierFactor}_to_${OutlierFactor}x_prior_calib_scaled",""" +
         s""""outliers_requeued":${strArr(outliersRequeued.toSeq)},""" +
         s""""prior_ref_entries":${priorCold.size},""" +
         s""""n_queries":${states.size},"n_completed":${doneSt.size},""" +

@@ -37,12 +37,17 @@ object Engine {
     * counted from the page source, not from chunks, so chunkless pages
     * and files are represented (reference semantics: `pages =
     * len(documents)`, `pdf_reader.py:498`).
+    *
+    * A per-file fold inside the scan task, like the reference's worker
+    * (`pdf_reader.py:442-503`): one `binaryFile` scan, each file
+    * decoded once and reduced by [[ChunkPipeline.fileStatsOf]] — no
+    * shuffle, window or join. [[chunks]] is the ingestion shape that
+    * keeps the per-chunk rows and the window offsets.
     */
   def fileStats(spark: SparkSession, root: String, opts: Options = Options()): Dataset[FileStats] = {
-    val pages = FileSources.pages(
-      FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)
-    ChunkPipeline.fileStats(pages,
-      ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(pages, opts.split)))
+    import spark.implicits._
+    FileSources.perFile(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)(
+      ChunkPipeline.fileStatsOf(_, _, _, opts.split))
   }
 
   /** Formatted report with the SUM TOTAL row last

@@ -1143,48 +1143,27 @@ object Graph {
     * filtered after the fact (VERDICT r15 finding #1). The oracle
     * unrolls the identical recurrence.
     */
-  /** In-session memo of the FINISHED walk table (round 17, VERDICT
-    * r16 ask #6: hot serve was 1.11 s against the r15 ≤0.73 s bar) —
-    * the [[graphHits]] converged-state discipline: a walk corpus is
-    * literally the build artifact DeepWalk-style training consumes, so
-    * hot calls serve the checkpointed |V|-row table (order-stamp only)
-    * instead of replaying the 4 sequential broadcast-join steps, whose
-    * serve floor (4 dependent broadcast barriers, each evaluating the
-    * prior chain) measured ~1.1 s regardless of data size. Cold still
-    * pays the full step chain; `memoized_hot` already declares the
-    * serve-time semantics in the bench.
-    */
-  private val walkResCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   def graphWalks(spark: SparkSession, dir: String): DataFrame = {
-    val walked = walkResCache.synchronized {
-      if (walkResCache.size > 16) walkResCache.clear()
-      walkResCache.getOrElseUpdate(
-        (Dedup.sessionId(spark), Tables.fingerprint(spark, dir, "lineitem")), {
-          val adj = walkAdj(spark, dir)
-          var state = adj.groupBy(col("src").as("start"))
-            .agg(first(col("deg")).as("cur_deg"))
-            .withColumn("cur", col("start"))
-          for (k <- 1 to WalkSteps) {
-            val stepped = state
-              .withColumn("pick", pmod(graft.ext.TextAnalysis.polyHashCol(
-                concat(col("start"), lit(s"|$k|"), col("cur"))), col("cur_deg")))
-              .drop("cur_deg")
-            state = stepped
-              .join(adj, stepped("cur") === adj("src") &&
-                stepped("pick") === adj("idx"))
-              .drop("cur", "pick", "src", "idx", "deg")
-              .withColumnRenamed("dst", s"s$k")
-              .withColumnRenamed("dst_deg", "cur_deg")
-              .withColumn("cur", col(s"s$k"))
-          }
-          state
-            .select(col("start") +: (1 to WalkSteps).map(k => col(s"s$k")): _*)
-            .localCheckpoint(true)
-        })
+    val adj = walkAdj(spark, dir)
+    var state = adj.groupBy(col("src").as("start"))
+      .agg(first(col("deg")).as("cur_deg"))
+      .withColumn("cur", col("start"))
+    for (k <- 1 to WalkSteps) {
+      val stepped = state
+        .withColumn("pick", pmod(graft.ext.TextAnalysis.polyHashCol(
+          concat(col("start"), lit(s"|$k|"), col("cur"))), col("cur_deg")))
+        .drop("cur_deg")
+      state = stepped
+        .join(adj, stepped("cur") === adj("src") &&
+          stepped("pick") === adj("idx"))
+        .drop("cur", "pick", "src", "idx", "deg")
+        .withColumnRenamed("dst", s"s$k")
+        .withColumnRenamed("dst_deg", "cur_deg")
+        .withColumn("cur", col(s"s$k"))
     }
-    walked.orderBy("start")
+    state
+      .select(col("start") +: (1 to WalkSteps).map(k => col(s"s$k")): _*)
+      .orderBy("start")
   }
 
   val graphWalksSql: String = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Chunk, FileStats, Page}
+import graft.sources.ExtractedPage
 import graft.split.{RecursiveCharacterSplitter, SplitConfig}
 
 /** The reference's core dataflow, Spark-first (SURVEY.md §0):
@@ -18,14 +19,21 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *   - chunking `:446-453` -> typed `flatMap` (C1)
   *   - per-chunk normalize+measure `:459-477` -> codegen'd columns (C2)
   *   - running file offset `:483-485` -> window prefix-sum (C3)
-  *   - per-file aggregate `:487-503` -> `groupBy(path).agg` (A1)
+  *   - per-file aggregate `:487-503` -> `groupBy(path).agg`, or the
+  *     in-task [[fileStatsOf]] fold (A1)
   *   - corpus totals + SUM TOTAL row `:130-164` -> `rollup` (A2/U1)
   *
-  * Scale notes: the single shuffle is the hash-partition on `path` for
-  * the window; the subsequent `groupBy(path)` reuses that partitioning
-  * (no second exchange). Chunk `content` is dropped by Catalyst column
-  * pruning whenever downstream doesn't select it — the reference's
-  * manual `b_get_content=False` (`pdf_reader.py:406`) is unnecessary.
+  * Two shapes share the splitter and the normalization:
+  *   - ingestion ([[chunk]] + [[chunkMetrics]]) keeps one row per
+  *     chunk; its single shuffle is the hash-partition on `path` for
+  *     the window, and a following `groupBy(path)` reuses that
+  *     partitioning. Chunk `content` is dropped by Catalyst column
+  *     pruning whenever downstream doesn't select it — the reference's
+  *     manual `b_get_content=False` (`pdf_reader.py:406`) is
+  *     unnecessary.
+  *   - stats ([[fileStatsOf]], driven by [[graft.Engine.fileStats]])
+  *     folds each file to its row inside the scan task: no window, no
+  *     shuffle, no join; only the [[statsWithTotal]] rollup is global.
   */
 object ChunkPipeline {
 
@@ -166,14 +174,11 @@ object ChunkPipeline {
   def writeJson(stats: Dataset[graft.FileStats], out: String): Unit =
     stats.coalesce(1).write.mode("overwrite").json(out)
 
-  /** A1 with page-truth: pages counted from the page source — the
-    * reference's `pages = len(documents)` (`pdf_reader.py:498,503`) —
-    * so trailing pages that yield no chunks still count, and a file
-    * whose pages yield no chunks at all (empty/whitespace text) gets a
-    * row with `chunks = 0` and a null ratio (the documented deviation
-    * from the reference's ZeroDivisionError, SURVEY.md §7.4). The
-    * chunk-only overload above remains for sources where every page
-    * chunks (e.g. the documents table).
+  /** A1 with page-truth over a page Dataset and its [[chunkMetrics]]:
+    * two aggregations joined on `path`, so the page source is
+    * evaluated twice. [[graft.Engine.fileStats]] no longer uses it —
+    * it folds each file with [[fileStatsOf]] — and it stays only for
+    * callers that already hold both inputs.
     */
   def fileStats(pages: Dataset[Page], chunkMetrics: DataFrame): Dataset[FileStats] = {
     val spark = pages.sparkSession
@@ -182,9 +187,6 @@ object ChunkPipeline {
       .agg(
         (max(col("page")) + 1).cast("long").as("pages"),
         max(col("fileSize")).as("fileSize"),
-        // distinct-per-page counts summed: one entry per (page, font
-        // resource) whose text was dropped as opaque — the honest-
-        // telemetry flag for silently-empty CJK extractions
         sum(col("unmappedFonts")).as("unmappedFonts"))
     val chunkAgg = chunkMetrics.groupBy(col("path"))
       .agg(
@@ -201,6 +203,36 @@ object ChunkPipeline {
         col("unmappedFonts"))
       .as[FileStats]
   }
+
+  /** A1 with page-truth as a per-file fold: one file's stats from its
+    * extracted pages — the reference's `pages = len(documents)`
+    * (`pdf_reader.py:498,503`), so trailing pages that yield no chunks
+    * still count, and a file whose pages yield no chunks at all
+    * (empty/whitespace text) gets `chunks = 0` and a null ratio (the
+    * documented deviation from the reference's ZeroDivisionError,
+    * SURVEY.md §7.4). A file with no pages (undecodable) has no row.
+    * Chunk lengths are code points of the normalized chunk, the same
+    * count Spark's `length` gives in [[chunkMetrics]].
+    * `unmappedFonts` sums the per-page counts: one entry per (page,
+    * font resource) whose text was dropped as opaque — the
+    * honest-telemetry flag for silently-empty CJK extractions.
+    */
+  def fileStatsOf(
+      path: String, length: Long, pages: Seq[ExtractedPage],
+      cfg: SplitConfig): Option[FileStats] =
+    if (pages.isEmpty) None
+    else {
+      var chunks = 0L
+      var textSize = 0L
+      for (p <- pages; c <- RecursiveCharacterSplitter.splitText(p.text, cfg)) {
+        val norm = Normalize.normalize(c)
+        chunks += 1
+        textSize += norm.codePointCount(0, norm.length)
+      }
+      Some(FileStats(path, pages.map(_.page).max + 1L, chunks, length, textSize,
+        if (textSize == 0) None else Some(length.toDouble / textSize),
+        pages.map(_.unmappedFonts).sum))
+    }
 
   /** End-to-end convenience: documents dir -> per-file stats + total. */
   def docChunkStats(

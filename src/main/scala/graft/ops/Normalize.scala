@@ -18,8 +18,12 @@ import org.apache.spark.sql.functions._
   *   4. lowercase                                      (`:401`)
   *
   * Exposed both as a `Column` transform (codegen'd `regexp_replace` +
-  * `lower`, the hot path) and as a pure String function (for the typed
-  * `flatMap` path and for tests).
+  * `lower`, used by the ingestion shape's `chunkMetrics`) and as a
+  * pure String function — the stats hot path, where
+  * `ChunkPipeline.fileStatsOf` measures every chunk inside the scan
+  * task. The two forms agree, and so do their lengths when the String
+  * form is measured in code points (Spark's `length`); `PipelineSpec`
+  * pins both on non-ASCII text.
   */
 object Normalize {
 

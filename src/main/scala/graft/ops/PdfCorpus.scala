@@ -41,9 +41,9 @@ import graft.split.SplitConfig
   * Scale shape: synthesis is a fingerprint-keyed durable artifact
   * (one write per corpus state, tasks write files in parallel via
   * the Hadoop FS — a shared URI on a real cluster); the read side is
-  * the ordinary distributed scan→flatMap→groupBy pipeline with no
-  * driver materialization and no shuffle beyond the per-file
-  * aggregation.
+  * one distributed scan whose tasks decode each file once and fold it
+  * to its row (`ChunkPipeline.fileStatsOf`); nothing is collected,
+  * and only the SUM TOTAL rollup shuffles.
   */
 object PdfCorpus {
 
@@ -242,45 +242,48 @@ object PdfCorpus {
       ensureAssets(spark, dir, "pdf-cjk-assets-v7", synthesizeCjk),
       variantMod = CjkVariants.length)
 
-  /** Shared scan→extract→chunk→aggregate tail of both gate queries. */
+  /** Shared scan→extract→chunk→aggregate tail of both gate queries:
+    * the per-file fold of `Engine.fileStats` plus the md5 of the
+    * in-order page texts, both computed in the scan task, then one
+    * rollup for the SUM TOTAL row.
+    */
   private def statsOver(
       spark: SparkSession, root: String, variantMod: Int): DataFrame = {
-    val files = FileSources.binaryFiles(spark, root, "*.pdf")
-    val pages = FileSources.pages(files, PdfTextExtractor)
-    val cm = ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(pages, SplitConfig()))
-    val perChunk = cm.groupBy(col("path")).agg(
-      count(lit(1)).as("chunks"),
-      sum(col("chunk_len")).as("text_size"))
-    val perPage = pages.toDF().groupBy(col("path")).agg(
-      (max(col("page")) + 1).cast("long").as("pages"),
-      sum(col("unmappedFonts")).as("unmapped_fonts"),
-      // in-page-order concatenation == the source text (the pages
-      // PARTITION it), so its md5 must equal md5(documents.text)
-      expr("md5(array_join(transform(array_sort(collect_list(struct(page, text))), x -> x.text), ''))")
-        .as("text_md5"))
-    val perDoc = perPage
-      .join(perChunk, Seq("path"), "left")
+    import spark.implicits._
+    val cfg = SplitConfig()
+    val perDoc = FileSources.perFile(FileSources.binaryFiles(spark, root, "*.pdf"),
+        PdfTextExtractor) { (path, length, pages) =>
+      ChunkPipeline.fileStatsOf(path, length, pages, cfg).map(s =>
+        (s.path, s.pages, s.chunks, s.textSize, s.unmappedFonts, textMd5(pages)))
+    }.toDF("path", "pages", "chunks", "text_size", "unmapped_fonts", "text_md5")
       .withColumn("doc_id",
         regexp_extract(col("path"), "doc(\\d+)\\.pdf$", 1).cast("long"))
+    val isTotal = col("is_total") === 1
+    perDoc.rollup(col("doc_id"))
+      .agg(
+        sum(col("pages")).as("pages"),
+        sum(col("chunks")).as("chunks"),
+        sum(col("text_size")).as("text_size"),
+        sum(col("unmapped_fonts")).as("unmapped_fonts"),
+        max(col("text_md5")).as("text_md5"),
+        grouping(col("doc_id")).as("is_total"))
       .select(
-        col("doc_id").cast("string").as("path"),
-        (col("doc_id") % variantMod).as("variant"),
-        col("pages"),
-        coalesce(col("chunks"), lit(0L)).as("chunks"),
-        coalesce(col("text_size"), lit(0L)).as("text_size"),
-        col("unmapped_fonts"),
-        col("text_md5"))
-    val total = perDoc.agg(
-      sum(col("pages")).as("pages"),
-      sum(col("chunks")).as("chunks"),
-      sum(col("text_size")).as("text_size"),
-      sum(col("unmapped_fonts")).as("unmapped_fonts"))
-      .select(
-        lit("SUM TOTAL").as("path"),
-        lit(-1L).as("variant"),
+        when(isTotal, lit("SUM TOTAL")).otherwise(col("doc_id").cast("string")).as("path"),
+        when(isTotal, lit(-1L)).otherwise(col("doc_id") % variantMod).as("variant"),
         col("pages"), col("chunks"), col("text_size"), col("unmapped_fonts"),
-        lit(null).cast("string").as("text_md5"))
-    perDoc.unionByName(total).orderBy(col("variant"), col("path"))
+        when(isTotal, lit(null).cast("string")).otherwise(col("text_md5")).as("text_md5"))
+      .orderBy(col("variant"), col("path"))
+  }
+
+  /** md5 of the in-order page concatenation. The pages PARTITION the
+    * source text, so it must equal md5(documents.text). Each page is
+    * UTF-8 encoded on its own, as Spark's `array_join` over strings
+    * would.
+    */
+  private def textMd5(pages: Seq[graft.sources.ExtractedPage]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    pages.foreach(p => md.update(p.text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 
   /** The closed-form DuckDB twin (see class doc). The normalization

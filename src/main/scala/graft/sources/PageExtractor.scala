@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Page
@@ -65,6 +65,20 @@ object FileSources {
       .option("pathGlobFilter", glob)
       .load(root)
 
+  /** Files -> one decode per file: `f` sees each file's path, byte
+    * length and extracted pages (in page order) inside the scan task,
+    * so a per-file result needs no shuffle back to the file.
+    */
+  def perFile[T: Encoder](files: DataFrame, extractor: PageExtractor)(
+      f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): Dataset[T] = {
+    import files.sparkSession.implicits._
+    files.select(col("path"), col("length"), col("content"))
+      .as[(String, Long, Array[Byte])]
+      .flatMap { case (path, length, content) =>
+        f(path, length, extractor.extractDetailed(path, content))
+      }
+  }
+
   /** Files -> typed pages through a [[PageExtractor]] (typed flatMap:
     * streams per-file, no driver materialization; a 10 GB file's pages
     * iterate through the task, unlike the reference which holds the
@@ -73,14 +87,9 @@ object FileSources {
   def pages(
       files: DataFrame,
       extractor: PageExtractor = PlainTextExtractor): Dataset[Page] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col("path"), col("length"), col("content"))
-      .as[(String, Long, Array[Byte])]
-      .flatMap { case (path, length, content) =>
-        extractor.extractDetailed(path, content).map { p =>
-          Page(path, p.page, p.text, length, p.unmappedFonts)
-        }
-      }
+    import files.sparkSession.implicits._
+    perFile(files, extractor) { (path, length, pages) =>
+      pages.map(p => Page(path, p.page, p.text, length, p.unmappedFonts))
+    }
   }
 }

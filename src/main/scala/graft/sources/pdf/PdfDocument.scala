@@ -237,30 +237,40 @@ final class PdfDocument(data: Array[Byte]) {
     }
   })
 
+  /** Decoded object streams by stream number: payload, `/First` and
+    * the `/N` object offsets, parsed once per document, so a page-tree
+    * walk over an ObjStm file stays linear instead of inflating the
+    * whole stream again for every object it fetches.
+    */
+  private val objStms = mutable.Map.empty[Int, (Array[Byte], Int, Array[Int])]
+
   private def fetchFromObjStm(stmNum: Int, idx: Int): PdfObj = {
-    val stm = fetch(stmNum) match {
-      case s: PStream => s
-      case other => throw new PdfParseException(s"object stream $stmNum is $other")
-    }
-    val n = resolve(stm.dict.get("N").getOrElse(PNull)) match {
-      case PNum(v) => v.toInt
-      case _ => throw new PdfParseException("ObjStm missing /N")
-    }
-    val first = resolve(stm.dict.get("First").getOrElse(PNull)) match {
-      case PNum(v) => v.toInt
-      case _ => throw new PdfParseException("ObjStm missing /First")
-    }
-    val payload = decodeStream(stm)
-    val lx = new PdfLexer(payload)
-    val offsets = (0 until n).map { _ =>
-      val objNum = lx.readNumber().toInt
-      val rel = lx.readNumber().toInt
-      (objNum, rel)
-    }
+    val (payload, first, offsets) = objStms.getOrElseUpdate(stmNum, {
+      val stm = fetch(stmNum) match {
+        case s: PStream => s
+        case other => throw new PdfParseException(s"object stream $stmNum is $other")
+      }
+      val n = resolve(stm.dict.get("N").getOrElse(PNull)) match {
+        case PNum(v) => v.toInt
+        case _ => throw new PdfParseException("ObjStm missing /N")
+      }
+      val first = resolve(stm.dict.get("First").getOrElse(PNull)) match {
+        case PNum(v) => v.toInt
+        case _ => throw new PdfParseException("ObjStm missing /First")
+      }
+      val payload = decodeStream(stm)
+      // a header pair takes at least 4 bytes ("0 0 "), so a larger /N
+      // is a lie; reject it before sizing the offset array by it
+      if (n < 0 || n > payload.length / 4)
+        throw new PdfParseException(s"ObjStm $stmNum /N $n exceeds its ${payload.length}-byte payload")
+      val lx = new PdfLexer(payload)
+      // header pairs are (object number, offset relative to /First)
+      val offsets = Array.fill(n) { lx.readNumber(); lx.readNumber().toInt }
+      (payload, first, offsets)
+    })
     if (idx >= offsets.length)
       throw new PdfParseException(s"ObjStm $stmNum has no index $idx")
-    val (_, rel) = offsets(idx)
-    new PdfLexer(payload, first + rel).parseValue()
+    new PdfLexer(payload, first + offsets(idx)).parseValue()
   }
 
   /** Follow references (and cache) until a direct object. Hop-limited

@@ -682,14 +682,16 @@ object PdfFixtures {
   def encryptedXrefStreamPdf(pages: Seq[String]): Array[Byte] =
     xrefStreamPdf(pages, encrypt = Some(EncAes128))
 
-  /** PDF 1.5 structure: page tree + font packed into an object
-    * stream (type-2 xref entries), content streams as regular
-    * objects, and a FlateDecode + PNG-Up-predictor xref STREAM
-    * instead of a table.
+  /** PDF 1.5 structure: page tree + font packed into object
+    * streams (type-2 xref entries; `objStms` streams, filled in
+    * object order), content streams as regular objects, and a
+    * FlateDecode + PNG-Up-predictor xref STREAM instead of a table.
     */
   def xrefStreamPdf(
       pages: Seq[String],
-      encrypt: Option[EncVariant] = None): Array[Byte] = {
+      encrypt: Option[EncVariant] = None,
+      objStms: Int = 1): Array[Byte] = {
+    require(objStms >= 1, "objStms must be positive")
     import PdfEncryptor.{encrypt => _, _}
     val o = new Out
     o << "%PDF-1.5\n%âãÏÓ\n"
@@ -697,8 +699,8 @@ object PdfFixtures {
     val pageNums = (0 until n).map(i => 3 + i)
     val contentNums = (0 until n).map(i => 3 + n + i)
     val fontNum = 3 + 2 * n
-    val objStmNum = fontNum + 1
-    val encNum = objStmNum + 1 // unused slot when not encrypting
+    val objStmNums = (1 to objStms).map(fontNum + _)
+    val encNum = fontNum + objStms + 1 // unused slot when not encrypting
     val xrefNum = encNum + 1
 
     val id0 = md5(s"graft-xs-fixture-$n".getBytes(Ascii))
@@ -720,7 +722,7 @@ object PdfFixtures {
       o.streamObj(contentNums(i), "/Filter /FlateDecode",
         sealed_(contentNums(i), deflate(raw)))
     }
-    // object stream holding: pages node (2), page dicts, font
+    // object streams holding: pages node (2), page dicts, font
     val inStm: Seq[(Int, String)] =
       (2 -> s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] /Count $n >>") +:
       pages.indices.map { i =>
@@ -729,14 +731,17 @@ object PdfFixtures {
             s"/Resources << /Font << /F1 $fontNum 0 R >> >> /Contents ${contentNums(i)} 0 R >>")
       } :+
       (fontNum -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    val bodies = inStm.map(_._2.getBytes(Ascii))
-    val rels = bodies.scanLeft(0)((acc, b) => acc + b.length + 1).init
-    val header = inStm.zip(rels).map { case ((num, _), r) => s"$num $r" }.mkString(" ") + "\n"
-    val stmPayload = header.getBytes(Ascii) ++
-      bodies.flatMap(b => b :+ '\n'.toByte)
-    o.streamObj(objStmNum,
-      s"/Type /ObjStm /N ${inStm.length} /First ${header.length} /Filter /FlateDecode",
-      sealed_(objStmNum, deflate(stmPayload)))
+    val groups = inStm.grouped((inStm.length + objStms - 1) / objStms).toSeq
+    for ((group, stmNum) <- groups.zip(objStmNums)) {
+      val bodies = group.map(_._2.getBytes(Ascii))
+      val rels = bodies.scanLeft(0)((acc, b) => acc + b.length + 1).init
+      val header = group.zip(rels).map { case ((num, _), r) => s"$num $r" }.mkString(" ") + "\n"
+      val stmPayload = header.getBytes(Ascii) ++
+        bodies.flatMap(b => b :+ '\n'.toByte)
+      o.streamObj(stmNum,
+        s"/Type /ObjStm /N ${group.length} /First ${header.length} /Filter /FlateDecode",
+        sealed_(stmNum, deflate(stmPayload)))
+    }
     // the /Encrypt dict itself: a regular object, never compressed
     // into an ObjStm, never encrypted
     for ((v, _, oEntry, uEntry) <- enc) {
@@ -756,10 +761,12 @@ object PdfFixtures {
         ((f2 >> 24) & 0xff).toByte, ((f2 >> 16) & 0xff).toByte,
         ((f2 >> 8) & 0xff).toByte, (f2 & 0xff).toByte,
         ((f3 >> 8) & 0xff).toByte, (f3 & 0xff).toByte)
-    val stmIndex = inStm.map(_._1).zipWithIndex.toMap
+    val stmIndex: Map[Int, (Int, Int)] = groups.zip(objStmNums).flatMap {
+      case (group, stmNum) => group.map(_._1).zipWithIndex.map { case (num, i) => num -> (stmNum, i) }
+    }.toMap
     val rows: Seq[Array[Byte]] = (0 until size).map { num =>
       if (num == 0) row(0, 0, 65535)
-      else if (stmIndex.contains(num)) row(2, objStmNum, stmIndex(num))
+      else if (stmIndex.contains(num)) row(2, stmIndex(num)._1, stmIndex(num)._2)
       else if (num == xrefNum) row(1, xrefOff, 0)
       else if (!o.offsets.contains(num)) row(0, 0, 65535) // unused slot
       else row(1, o.offsets(num), 0)

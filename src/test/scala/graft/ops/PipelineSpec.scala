@@ -101,4 +101,49 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(totalRow(3) == "13,096,355" && totalRow(4) == "2,470,201")
     assert(totalRow(5) == "5.30") // ratio of sums (pdf_reader.py:148)
   }
+
+  test("fileStatsOf: chunk lengths are code points of the normalized chunk") {
+    // supplementary-plane letters are 2 UTF-16 chars but 1 code point
+    val text = "A\uD835\uDC00B \uD835\uDD38"
+    val stats = ChunkPipeline.fileStatsOf("f", 9L,
+      Seq(graft.sources.ExtractedPage(0, text)), SplitConfig()).get
+    assert(text.length == 7)
+    assert(stats.textSize == 5)
+  }
+
+  test("per-file fold equals the page/chunk join it replaced") {
+    import java.nio.file.Files
+    import graft.sources.{FileSources, PageExtractor, PlainTextExtractor}
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val txt = Files.createTempDirectory("foldtxt")
+    // chunkless trailing page (form feed), all-whitespace file,
+    // final sigma, dotted capital I, capital sharp s, titlecase
+    // digraph, supplementary-plane letters
+    Files.writeString(txt.resolve("tail.txt"), "alpha beta gamma\f  \n ")
+    Files.writeString(txt.resolve("blank.txt"), " \n\t ")
+    Files.writeString(txt.resolve("greek.txt"), "ΟΔΟΣ ΣΣ. ΣΟΦΙΑ\n\nΣΣ.\fτελοΣ")
+    Files.writeString(txt.resolve("mixed.txt"),
+      "İSTANBUL İi ẞTRASSE ǅemal Ǆǅǆ\n\\u0041 A\uD835\uDC00B \uD835\uDD38 end")
+    val pdf = Files.createTempDirectory("foldpdf")
+    Files.write(pdf.resolve("ok.pdf"),
+      PdfFixtures.xrefStreamPdf(Seq("one two three four five six", "", "seven")))
+    Files.write(pdf.resolve("bad.pdf"), "not a pdf at all".getBytes)
+    val cfg = SplitConfig(chunkSize = 12, chunkOverlap = 0)
+    def viaJoin(root: String, glob: String, ex: PageExtractor) = {
+      val pages = FileSources.pages(FileSources.binaryFiles(spark, root, glob), ex)
+      ChunkPipeline.fileStats(pages, ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(pages, cfg)))
+        .collect().toSet
+    }
+    def viaFold(root: String, glob: String, ex: PageExtractor) =
+      graft.Engine.fileStats(spark, root, graft.Engine.Options(glob, cfg, ex)).collect().toSet
+    val txtFold = viaFold(txt.toString, "*.txt", PlainTextExtractor)
+    assert(txtFold == viaJoin(txt.toString, "*.txt", PlainTextExtractor))
+    val byName = txtFold.map(s => s.path.split('/').last -> s).toMap
+    assert(byName("tail.txt").pages == 2 && byName("tail.txt").chunks == 2)
+    assert(byName("blank.txt").chunks == 0 && byName("blank.txt").ratio.isEmpty)
+    val pdfFold = viaFold(pdf.toString, "*.pdf", PdfTextExtractor)
+    assert(pdfFold == viaJoin(pdf.toString, "*.pdf", PdfTextExtractor))
+    assert(pdfFold.map(_.path.split('/').last) == Set("ok.pdf"))
+    assert(pdfFold.head.pages == 3)
+  }
 }

@@ -947,4 +947,20 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(!phys.contains("CartesianProduct") &&
       !phys.contains("BroadcastNestedLoopJoin"), phys)
   }
+
+  test("Engine.fileStats is one binaryFile scan folded per file: no join, " +
+    "window or shuffle") {
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val root = java.nio.file.Files.createTempDirectory("statsplan")
+    java.nio.file.Files.write(root.resolve("a.pdf"), PdfFixtures.classicPdf(Seq("one", "two")))
+    java.nio.file.Files.write(root.resolve("b.pdf"), PdfFixtures.xrefStreamPdf(Seq("three")))
+    val stats = graft.Engine.fileStats(spark, root.toString,
+      graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor))
+    val plan = stats.queryExecution.executedPlan.toString
+    assert("FileScan binaryFile".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("Join"), plan)
+    assert(!plan.contains("Window"), plan)
+    assert(!plan.contains("Exchange"), plan)
+    assert(stats.collect().map(_.pages).sorted.toSeq == Seq(1L, 2L))
+  }
 }

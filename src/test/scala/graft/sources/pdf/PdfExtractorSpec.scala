@@ -35,6 +35,49 @@ class PdfExtractorSpec extends AnyFunSuite with SparkTestBase {
     assert(out.map(_._2) == Seq("alpha beta", "gamma\ndelta", "epsilon"))
   }
 
+  test("object stream over 1000 pages: every page extracts, in order") {
+    val texts = (0 until 1100).map(i => s"page $i text")
+    val out = PdfTextExtractor.extract("big.pdf", PdfFixtures.xrefStreamPdf(texts))
+    assert(out.map(_._1) == texts.indices)
+    assert(out.map(_._2) == texts)
+  }
+
+  test("an ObjStm index beyond /N still fails the parse: no pages") {
+    val ascii = java.nio.charset.StandardCharsets.ISO_8859_1
+    val pdf = new String(PdfFixtures.xrefStreamPdf(Seq("a", "b", "c")), ascii)
+    // pages node + 3 pages + font = 5 objects; /N 1 keeps only the
+    // pages node addressable (same byte length, offsets stay valid)
+    assert(pdf.contains("/Type /ObjStm /N 5 "))
+    val lying = pdf.replace("/Type /ObjStm /N 5 ", "/Type /ObjStm /N 1 ").getBytes(ascii)
+    assert(PdfTextExtractor.extract("n.pdf", lying) == Nil)
+  }
+
+  test("an ObjStm /N larger than its payload fails the parse: no pages") {
+    val ascii = java.nio.charset.StandardCharsets.ISO_8859_1
+    val pdf = new String(PdfFixtures.xrefStreamPdf(Seq("a", "b", "c")), ascii)
+    // only the xref stream follows the ObjStm, so growing its dict by
+    // k bytes needs just startxref moved by k to stay well formed
+    def withN(n: String): Array[Byte] = {
+      val grown = pdf.replace("/Type /ObjStm /N 5 ", s"/Type /ObjStm /N $n ")
+      val k = grown.length - pdf.length
+      "startxref\n(\\d+)\n".r.replaceAllIn(grown,
+        m => s"startxref\n${m.group(1).toLong + k}\n").getBytes(ascii)
+    }
+    assert(pdf.contains("/Type /ObjStm /N 5 "))
+    // same edit with the true count (leading zeros) still extracts
+    assert(PdfTextExtractor.extract("z.pdf", withN("0000000005")).map(_._2) == Seq("a", "b", "c"))
+    assert(PdfTextExtractor.extract("n.pdf", withN("2000000000")) == Nil)
+  }
+
+  test("objects in two object streams of one file both resolve") {
+    val texts = Seq("first page", "second page", "third page", "fourth page")
+    val pdf = PdfFixtures.xrefStreamPdf(texts, objStms = 2)
+    val ascii = java.nio.charset.StandardCharsets.ISO_8859_1
+    assert("/Type /ObjStm".r.findAllIn(new String(pdf, ascii)).size == 2)
+    // the pages node sits in the first stream, the font in the second
+    assert(PdfTextExtractor.extract("two.pdf", pdf).map(_._2) == texts)
+  }
+
   test("literal string escapes (parens, backslash) survive the round trip") {
     val tricky = "balanced (parens) and \\ backslash"
     val out = PdfTextExtractor.extract("t.pdf", PdfFixtures.classicPdf(Seq(tricky)))
