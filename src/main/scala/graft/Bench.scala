@@ -386,6 +386,7 @@ object Bench {
       @volatile var hots: Vector[Double] = Vector.empty
       @volatile var ok: Boolean = true   // false once any rep throws
       @volatile var ran: Boolean = false // false = deadline skipped it entirely
+      @volatile var memoHot: Boolean = false // a hot rep read a session memo
       // MIN of reps, not median — deliberate, sandbox-specific: this
       // box runs the oracle, the driver, and neighboring queries'
       // GC/page-cache churn concurrently with the bench, so a rep's
@@ -450,20 +451,15 @@ object Bench {
     val coreSet = Set("doc_chunk_stats", "doc_chunks", "doc_chunks_overlap",
       "chunk_fixed", "chunk_multipage", "doc_stats_fixed", "doc_normalize",
       "multi_root", "doc_report", "sql_chunk_split")
-    // Queries whose hot runs serve a build-once memo (IVF centroid model,
-    // cluster labeling, graph edge artifact, BPE merge table) rather than
-    // recomputing: hot numbers there are SERVE time, not compute time.
-    val memoized = Seq("sim_ivf", "sim_pq", "sim_ivfpq", "dedup_cluster",
-      "pipeline_prep", "graph_pagerank", "graph_triangles", "graph_jaccard",
-      "graph_bfs", "graph_components", "pipeline_holdout", "dedup_semantic",
-      "text_rank", "text_bpe", "text_bpe_encode", "sim_recall",
-      "pipeline_survivor", "text_fertility", "chunk_token_budget",
-      // shingle-postings index servers + the edge-artifact peelers
-      "dedup_ngram", "dedup_containment", "dedup_minhash",
-      "graph_kcore", "graph_ktruss",
-      // round 16: converged-state server (HITS scores)
-      "graph_hits")
-      .filter(fns.contains)
+    // A hot rep that reads an index from the ArtifactStore session tier
+    // (IVF model, cluster labeling, graph edges, BPE merge table, ...)
+    // skips that index's build: its hot number excludes build time.
+    def hotRun(st: QState): Double = {
+      val hits0 = graft.sources.ArtifactStore.totalHits
+      val t = timedRun(st)
+      if (graft.sources.ArtifactStore.totalHits > hits0) st.memoHot = true
+      t
+    }
 
     def strArr(xs: Seq[String]): String =
       xs.map(s => s""""$s"""").mkString("[", ",", "]")
@@ -508,7 +504,7 @@ object Bench {
         s""""failed":${strArr(states.filter(s => s.ran && !s.ok).map(_.name))},""" +
         s""""order":${strArr(coldOrder.map(_.name))},""" +
         s""""core_queries":${strArr(coreSet.toSeq.sorted)},""" +
-        s""""memoized_hot":${strArr(memoized)},""" +
+        s""""memoized_hot":${strArr(states.filter(_.memoHot).map(_.name))},""" +
         s""""deadline_sec":$deadlineSec,"sf":"$sfDir"}"""
     }
 
@@ -586,10 +582,9 @@ object Bench {
     // (dedup-cluster-v1), graph_pagerank (graph-edges-v1),
     // graph_components (graph-cc-v1). With warm artifacts this phase
     // costs ~4 s; with a fresh corpus it pays the honest build cost
-    // where a reader can SEE it. Side effect: these queries' in-
-    // session memos are warm too, so their "cold" numbers are serve
-    // time — exactly the semantics already documented for the
-    // `memoized_hot` list, which contains all of them.
+    // where a reader can SEE it. Side effect: these queries' session
+    // memos are warm too, so their "cold" numbers exclude the build,
+    // as their hot numbers (listed in `memoized_hot`) do.
     for (name <- artifactBuilders) {
       // Leave ≥ 150 s for the cold pass: a pathological fresh-corpus
       // build sequence must degrade to in-cold-pass builds (the old
@@ -665,7 +660,7 @@ object Bench {
       }
       if (timeLeftSec < 2.0) halted = true
       else if (timeLeftSec > math.max(2.0, headroomBase * 1.3)) {
-        val t = timedRun(st)
+        val t = hotRun(st)
         if (st.ok) {
           st.hots :+= t
           // Sole-hot-rep outlier rule: a first rep outside the
@@ -680,7 +675,7 @@ object Bench {
             System.err.println(
               f"[bench] ${st.name} hot $t%.2f s outside ${OutlierFactor}x band " +
                 f"of prior $prior%.2f s (calib-scaled) — requeueing once")
-            val t2 = timedRun(st)
+            val t2 = hotRun(st)
             if (st.ok) st.hots :+= t2
           }
         }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Data-LAYOUT operators: how rows are arranged on storage is a
   * first-class 100 TB concern — it decides what a scan can SKIP.
@@ -330,12 +330,6 @@ object Layout {
 
   private val BucketCount = 8
 
-  /** Keys of (session, corpus) whose bucketed tables are already
-    * published — the graph-edge/IVF memo discipline, value unused.
-    */
-  private val layoutPublishOnce =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
-
   /** BUCKETED co-located join — the layout that deletes the join
     * shuffle outright. Both fact (`orders`) and dimension
     * (`customer`) publish as catalog tables hash-bucketed INTO
@@ -358,41 +352,26 @@ object Layout {
     * broadcasts, and the bucketed SMJ shape shown here is the plan
     * that survives.
     *
-    * Each call republishes the two bucketed tables from the corpus
-    * (idempotent overwrite into the session warehouse) — write cost
-    * is the one-time layout price the read path amortizes. The
-    * RESULT is layout-independent (same rows bucketed or not),
+    * The bucketed pair is an index over BOTH tables, published once
+    * per (session, orders and customer state) — the one-time write
+    * cost the read path amortizes — under names derived from the two
+    * tables' state, so a run over corpus A, then B, then A reads A's
+    * buckets and an in-place rewrite of either table republishes.
+    * The RESULT is layout-independent (same rows bucketed or not),
     * which is what lets a plain DuckDB join oracle the query.
     */
   def layoutBucket(spark: SparkSession, dir: String): DataFrame = {
-    // Publish-once memo (round 17, VERDICT r16 ask #4, guide §6): the
-    // bucketed layout is by its own doc "the one-time write cost the
-    // read path amortizes", yet every invocation re-dropped and
-    // re-wrote BOTH tables — the write dominated the timed query (the
-    // before-plan's cost is 2 saveAsTable jobs + the zero-shuffle
-    // join). Same in-session build-once discipline as the IVF model /
-    // graph edge artifact: first call per (session, corpus) pays the
-    // layout write, later calls run the query the layout exists FOR —
-    // the shuffle-free bucketed SMJ + agg. Result is layout- and
-    // memo-independent (same rows either way).
-    layoutPublishOnce.synchronized {
-      if (layoutPublishOnce.size > 16) layoutPublishOnce.clear()
-      layoutPublishOnce.getOrElseUpdate(
-        (graft.ext.Dedup.sessionId(spark),
-          Tables.fingerprint(spark, dir, "orders")), {
-          val orders = Tables.table(spark, dir, "orders")
-            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          val cust = Tables.table(spark, dir, "customer")
-            .select(col("c_custkey"), col("c_mktsegment"))
-          publishBucketed(spark, orders, "graft_bkt_orders", "o_custkey")
-          publishBucketed(spark, cust, "graft_bkt_customer", "c_custkey")
-          true
-        })
+    val (bo, bc) = ArtifactStore.memoNamed(
+        spark, "layout-bucket-v1", dir, "orders", "customer") { tag =>
+      val orders = Tables.table(spark, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+      val cust = Tables.table(spark, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment"))
+      (publishBucketed(spark, orders, s"graft_bkt_orders_$tag", "o_custkey"),
+        publishBucketed(spark, cust, s"graft_bkt_customer_$tag", "c_custkey"))
     }
-    val bo = spark.table("graft_bkt_orders")
-    val bc = spark.table("graft_bkt_customer")
-    bo.hint("merge")
-      .join(bc, col("o_custkey") === col("c_custkey"))
+    spark.table(bo).hint("merge")
+      .join(spark.table(bc), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_mktsegment"))
       .agg(
         count(lit(1)).as("n_orders"),
@@ -403,13 +382,13 @@ object Layout {
   }
 
   /** Overwrite-publish `df` as a parquet catalog table bucketed on
-    * `key`. The warehouse directory is cleared first: a fresh
-    * session's in-memory catalog does not know about a previous
-    * session's managed-table location, and CREATE refuses a
-    * non-empty location it never registered.
+    * `key`; returns the table name. The warehouse directory is
+    * cleared first: a fresh session's in-memory catalog does not know
+    * about a previous session's managed-table location, and CREATE
+    * refuses a non-empty location it never registered.
     */
   private def publishBucketed(
-      spark: SparkSession, df: DataFrame, table: String, key: String): Unit = {
+      spark: SparkSession, df: DataFrame, table: String, key: String): String = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val warehouse = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
@@ -418,6 +397,7 @@ object Layout {
     df.write.mode("overwrite")
       .bucketBy(BucketCount, key).sortBy(key)
       .format("parquet").saveAsTable(table)
+    table
   }
 
   val layoutBucketSql: String =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NativeFunctions, VectorOps}
+import graft.sources.ArtifactStore
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (builder prompt north star). Two tiers:
@@ -712,53 +713,26 @@ object Similarity {
     centroids
   }
 
-  /** Train-once model memo: a query invocation must not re-pay the
-    * ≥ IvfIters full data passes the coarse quantizer costs — the
-    * index is built once per corpus and reused (the
-    * `EventStreams.stagedDirs` pattern). The key includes the
-    * embeddings files' (path, length, mtime) listing — metadata-only,
-    * no data pass — so rewriting a corpus in place invalidates the
-    * model instead of serving stale centroids (which would
-    * hash-mismatch the always-retraining oracle). Bounded: the memo
-    * clears wholesale past 16 corpora (models are up to ~32 MB each;
-    * wholesale-clear is simpler than LRU and retraining is cheap
-    * relative to a leak). Test-observable via [[trainCount]].
-    */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Array[Array[Double]]]
-  private[ext] val trainCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def corpusFingerprint(spark: SparkSession, dir: String): String =
-    graft.sources.Tables.fingerprint(spark, dir, "embeddings")
-
-  /** Shared coarse-quantizer model accessor: the in-memory memo over
-    * the durable parquet artifact over the Lloyd training passes.
-    * Factored out of [[simIvf]] so `Dedup.dedupSemantic` (which
-    * clusters with the SAME model) builds the index once per corpus
-    * regardless of which operator runs first.
+  /** The coarse-quantizer model, a durable index read into the driver
+    * once per session: a query invocation must not re-pay the
+    * ≥ IvfIters full data passes the Lloyd training costs. Shared by
+    * [[simIvf]] and `Dedup.dedupSemantic` (which clusters with the SAME
+    * model), so the model is built once per corpus whichever runs
+    * first. The vector count that sizes the model is read inside the
+    * build: the table fingerprint already determines it.
     */
   private[ext] def centroidModel(spark: SparkSession, dir: String): Array[Array[Double]] = {
     import spark.implicits._
-    val vecs = emb(spark, dir)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-    val n = vecs.count()
-    if (centroidCache.size > 16) centroidCache.clear()
-    // durable tier below the in-memory memo: the K × dim model rides
-    // a parquet artifact keyed by the corpus fingerprint — a fresh
-    // session reloads (model-scale read) instead of re-paying the
-    // Lloyd data passes; a corpus rewrite re-keys and retrains
-    centroidCache.getOrElseUpdate((corpusFingerprint(spark, dir), n), {
-      graft.sources.ArtifactStore
-        .loadOrBuild(spark, dir, "embeddings", "ivf-model-v1") {
-          trainCount.incrementAndGet()
-          val cs = trainCentroids(vecs, ivfKFor(n))
-          spark.createDataFrame(cs.toIndexedSeq.zipWithIndex.map {
-            case (c, i) => (i, c.toIndexedSeq)
-          }).toDF("centroid_id", "coords")
-        }
-        .as[(Int, Array[Double])].collect()
-        .sortBy(_._1).map(_._2)
-    })
+    ArtifactStore.artifact(spark, "ivf-model-v1", dir, "embeddings") {
+      val vecs = emb(spark, dir)
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      val cs = trainCentroids(vecs, ivfKFor(vecs.count()))
+      spark.createDataFrame(cs.toIndexedSeq.zipWithIndex.map {
+        case (c, i) => (i, c.toIndexedSeq)
+      }).toDF("centroid_id", "coords")
+    } {
+      _.as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+    }
   }
 
   /** Every vector tagged with its nearest-centroid list id:
@@ -778,19 +752,18 @@ object Similarity {
     */
   private[ext] def assignedBuckets(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.sources.ArtifactStore
-      .loadOrBuild(spark, dir, "embeddings", "ivf-assign-v1") {
-        val vecs = emb(spark, dir)
-          .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        val bc = spark.sparkContext.broadcast(centroidModel(spark, dir))
-        vecs.mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (id, v) => (id, v, nearestCentroid(cs, v)) }
-        }.toDF("vec_id", "embedding", "bucket")
-          // bucket-major layout: rows of one inverted list are
-          // contiguous, (vec_id) secondary for deterministic files
-          .sortWithinPartitions("bucket", "vec_id")
-      }
+    ArtifactStore.frame(spark, "ivf-assign-v1", dir, "embeddings") {
+      val vecs = emb(spark, dir)
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      val bc = spark.sparkContext.broadcast(centroidModel(spark, dir))
+      vecs.mapPartitions { it =>
+        val cs = bc.value
+        it.map { case (id, v) => (id, v, nearestCentroid(cs, v)) }
+      }.toDF("vec_id", "embedding", "bucket")
+        // bucket-major layout: rows of one inverted list are
+        // contiguous, (vec_id) secondary for deterministic files
+        .sortWithinPartitions("bucket", "vec_id")
+    }
   }
 
   /** IVF ANN top-k: vectors assigned to their nearest centroid's
@@ -1223,6 +1196,33 @@ object Similarity {
   private val PqM = 4  // subspaces
   private val PqK = 16 // centroids per subspace codebook (4-bit codes)
 
+  /** Per-subspace codebook model, a durable index like
+    * [[centroidModel]]. Factored out of [[simPq]] so [[simIvfPq]]
+    * re-ranks with the SAME codebooks.
+    */
+  private[ext] def pqModel(
+      spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
+    import spark.implicits._
+    ArtifactStore.artifact(spark, "pq-model-v1", dir, "embeddings") {
+      val vecs = emb(spark, dir)
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      val subModels = (0 until PqM).flatMap { m =>
+        val sub = vecs.map { case (id, v) =>
+          val d = v.length / PqM
+          (id, v.slice(m * d, (m + 1) * d))
+        }.toDF("vec_id", "embedding").as[(Long, Array[Float])]
+        trainCentroids(sub, PqK).zipWithIndex.map {
+          case (c, k) => (m, k, c.toIndexedSeq)
+        }
+      }
+      spark.createDataFrame(subModels).toDF("sub", "centroid_id", "coords")
+    } {
+      _.as[(Int, Int, Array[Double])].collect()
+        .groupBy(_._1).toArray.sortBy(_._1)
+        .map(_._2.sortBy(_._2).map(_._3))
+    }
+  }
+
   /** PQ ANN top-k (Jégou/Douze/Schmid 2011 "Product Quantization for
     * Nearest Neighbor Search"): each vector compresses to [[PqM]]
     * sub-codes (its nearest codebook centroid per subspace — dim·4
@@ -1237,46 +1237,12 @@ object Similarity {
     * Codebooks train per subspace with the [[trainCentroids]]
     * fixed-point Lloyd discipline (strided seeds, floor(x·2²⁰) Long
     * sums, lowest-id tie-breaks), so training, encoding, and the ADC
-    * ranking all replay exactly in DuckDB. The model memoizes like
-    * IVF (fingerprint-keyed memo over a durable parquet artifact);
+    * ranking all replay exactly in DuckDB. The model is [[pqModel]];
     * the [[NumQueries]] query vectors broadcast (query-batch-scale
     * traffic) and LUTs build once per task. Distances fold
     * left-to-right; the ranking uses the 6-dp-rounded distance with
     * id tie-breaks, the suite's cross-engine ordering discipline.
     */
-  /** Per-subspace codebook model accessor (the [[centroidModel]]
-    * discipline): fingerprint-keyed memo over the durable parquet
-    * artifact over the per-subspace Lloyd runs. Factored out of
-    * [[simPq]] so [[simIvfPq]] re-ranks with the SAME codebooks.
-    */
-  private[ext] def pqModel(
-      spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    import spark.implicits._
-    val vecs = emb(spark, dir)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-    val n = vecs.count()
-    if (pqCache.size > 16) pqCache.clear()
-    pqCache.getOrElseUpdate((corpusFingerprint(spark, dir), n), {
-      graft.sources.ArtifactStore
-        .loadOrBuild(spark, dir, "embeddings", "pq-model-v1") {
-          trainCount.incrementAndGet()
-          val subModels = (0 until PqM).flatMap { m =>
-            val sub = vecs.map { case (id, v) =>
-              val d = v.length / PqM
-              (id, v.slice(m * d, (m + 1) * d))
-            }.toDF("vec_id", "embedding").as[(Long, Array[Float])]
-            trainCentroids(sub, PqK).zipWithIndex.map {
-              case (c, k) => (m, k, c.toIndexedSeq)
-            }
-          }
-          spark.createDataFrame(subModels).toDF("sub", "centroid_id", "coords")
-        }
-        .as[(Int, Int, Array[Double])].collect()
-        .groupBy(_._1).toArray.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3))
-    })
-  }
-
   def simPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = emb(spark, dir)
@@ -1325,9 +1291,6 @@ object Similarity {
       .select(col("q_id"), col("rn"), col("c_id"), col("adist"))
       .orderBy("q_id", "rn")
   }
-
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Array[Array[Array[Double]]]]
 
   /** Oracle: per-subspace k-means replayed with `m` as DATA (one
     * CTE chain trains all four codebooks at once), then encoding,
@@ -1492,7 +1455,8 @@ object Similarity {
         val cs = bcPq.value
         val luts = scala.collection.mutable.LongMap.empty[Array[Array[Double]]]
         it.map { case (qid, qv, cid, cv) =>
-          val lut = luts.getOrElseUpdate(qid, pqLut(cs, qv))
+          var lut = luts.getOrNull(qid)
+          if (lut == null) { lut = pqLut(cs, qv); luts(qid) = lut }
           val d = cv.length / PqM
           var s = 0.0
           var m = 0
@@ -1935,11 +1899,10 @@ object Similarity {
       }
       // bounded per-vector selection: insert into a ≤ k list ordered
       // by (cos desc, nbr asc) — constant work per scored pair
-      val best = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
+      val best = (a.iterator ++ b.iterator).map(x =>
+        x._1 -> scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]).toMap
       def offer(id: Long, cos: Double, nbr: Long): Unit = {
-        val buf = best.getOrElseUpdate(id,
-          scala.collection.mutable.ArrayBuffer.empty)
+        val buf = best(id)
         var i = 0
         while (i < buf.length &&
           (buf(i)._1 > cos || (buf(i)._1 == cos && buf(i)._2 < nbr))) i += 1

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ArtifactStore
+
 /** Text-analysis operators for LLM training-data pipelines (builder
   * prompt north star; absent from the reference, which only measures
   * sizes): quality scoring, language ID, token counting, document
@@ -1372,6 +1374,38 @@ object TextAnalysis {
   private val TrScale = 1000000000000L
   private val TrBaseNum = TrScale * 15L / 100L // (1−d)·scale, d = 0.85
 
+  /** Word-graph INDEX for [[textRank]]: the degree-annotated
+    * symmetric co-occurrence edge set `(src, dst, deg)`, a durable
+    * artifact — hot invocations read a plain scan instead of re-running
+    * the explode/filter/distinct build, and pre-joining the degree
+    * removes one join from every damped iteration.
+    */
+  private def textRankEdges(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.frame(spark, "textrank-edges-v1", dir, "documents") {
+      val ws = docs(spark, dir)
+        .select(col("doc_id"),
+          expr("filter(split(text, ' +'), x -> x != '')").as("ws"))
+      val words = ws.select(explode(col("ws")).as("w"))
+        .filter(length(col("w")) >= TrMinLen)
+        .groupBy("w").agg(count(lit(1)).as("c"))
+        .filter(col("c") >= TrMinCount)
+        .select("w")
+      val bg = ws.select(explode(expr(
+        """zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),
+          |         slice(ws, 2, greatest(size(ws) - 1, 0)),
+          |         (a, b) -> named_struct('w1', a, 'w2', b))""".stripMargin))
+        .as("b"))
+        .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
+        .filter(col("w1") =!= col("w2"))
+        .join(words.select(col("w").as("w1")), "w1")
+        .join(words.select(col("w").as("w2")), "w2")
+      val edges = bg.select(col("w1").as("src"), col("w2").as("dst"))
+        .union(bg.select(col("w2").as("src"), col("w1").as("dst")))
+        .distinct()
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      edges.join(deg, "src").select("src", "dst", "deg")
+    }
+
   /** TEXTRANK keyword extraction (Mihalcea & Tarau 2004): PageRank
     * over the word CO-OCCURRENCE graph — words are nodes, adjacent
     * content-word pairs are undirected edges, and the stationary
@@ -1389,53 +1423,6 @@ object TextAnalysis {
     * driver scalar. The oracle replays the identical unrolled
     * rounds.
     */
-  /** Word-graph INDEX for [[textRank]]: the degree-annotated
-    * symmetric co-occurrence edge set `(src, dst, deg)`, built once
-    * per corpus and published as a durable fingerprint-keyed parquet
-    * artifact (the `Graph.edges` discipline) — hot invocations serve
-    * a plain scan instead of re-running the explode/filter/distinct
-    * build, and pre-joining the degree removes one join from every
-    * damped iteration.
-    */
-  private val trEdgeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private[ext] val trEdgeBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def textRankEdges(spark: SparkSession, dir: String): DataFrame =
-    trEdgeCache.synchronized {
-      if (trEdgeCache.size > 16) trEdgeCache.clear()
-      trEdgeCache.getOrElseUpdate(
-        (Dedup.sessionId(spark), graft.sources.Tables.fingerprint(spark, dir, "documents")), {
-          graft.sources.ArtifactStore
-            .loadOrBuild(spark, dir, "documents", "textrank-edges-v1") {
-              trEdgeBuildCount.incrementAndGet()
-              val ws = docs(spark, dir)
-                .select(col("doc_id"),
-                  expr("filter(split(text, ' +'), x -> x != '')").as("ws"))
-              val words = ws.select(explode(col("ws")).as("w"))
-                .filter(length(col("w")) >= TrMinLen)
-                .groupBy("w").agg(count(lit(1)).as("c"))
-                .filter(col("c") >= TrMinCount)
-                .select("w")
-              val bg = ws.select(explode(expr(
-                """zip_with(slice(ws, 1, greatest(size(ws) - 1, 0)),
-                  |         slice(ws, 2, greatest(size(ws) - 1, 0)),
-                  |         (a, b) -> named_struct('w1', a, 'w2', b))""".stripMargin))
-                .as("b"))
-                .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-                .filter(col("w1") =!= col("w2"))
-                .join(words.select(col("w").as("w1")), "w1")
-                .join(words.select(col("w").as("w2")), "w2")
-              val edges = bg.select(col("w1").as("src"), col("w2").as("dst"))
-                .union(bg.select(col("w2").as("src"), col("w1").as("dst")))
-                .distinct()
-              val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-              edges.join(deg, "src").select("src", "dst", "deg")
-            }
-        })
-    }
-
   def textRank(spark: SparkSession, dir: String): DataFrame = {
     val edges = textRankEdges(spark, dir)
     val nodes = edges.select(col("src").as("node")).distinct()
@@ -1639,44 +1626,26 @@ object TextAnalysis {
           concat(acc, x))
         .otherwise(concat(acc, lit(BpeSep), x)))
 
-  /** Session+fingerprint-keyed memo of the learned merge table (the
-    * model-memo pattern of the IVF centroids / cluster labeling):
-    * the 8-iteration train runs once per corpus; `text_bpe` and
-    * `text_bpe_encode` both serve from it. Model-scale driver
+  /** The learned merge table, a durable index read into the driver
+    * once per session: the 8-iteration train runs once per corpus, and
+    * `text_bpe` and `text_bpe_encode` both read it. Model-scale driver
     * traffic only — [[BpeMerges]] single-row argmaxes.
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, String, String, Long)]]
-  private[ext] val bpeBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def bpeMergeTable(
       spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
     import spark.implicits._
-    if (bpeCache.size > 16) bpeCache.clear()
-    bpeCache.getOrElseUpdate(
-      (Dedup.sessionId(spark),
-        graft.sources.Tables.fingerprint(spark, dir, "documents")), {
-        // durable tier below the session memo (the cluster/IVF
-        // discipline): the learned table publishes as a
-        // fingerprint-keyed parquet artifact — a restarted session
-        // reloads 8 rows instead of re-running the train; an
-        // in-place corpus rewrite re-keys and retrains
-        graft.sources.ArtifactStore
-          .loadOrBuild(spark, dir, "documents", "bpe-merges-v1") {
-            buildBpeMerges(spark, dir)
-              .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-          }
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-            r.getLong(3)))
-          .sortBy(_._1).toList
-      })
+    ArtifactStore.artifact(spark, "bpe-merges-v1", dir, "documents") {
+      buildBpeMerges(spark, dir)
+        .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
+    } {
+      _.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1).toList
+    }
   }
 
   private def buildBpeMerges(
       spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    bpeBuildCount.incrementAndGet()
     val vocab0 = docs(spark, dir)
           .select(explode(
             expr("filter(split(text, ' +'), x -> x != '')")).as("word"))

@@ -18,16 +18,17 @@ import org.apache.spark.sql.functions._
   * hash-match PROVES the encode→decode roundtrip is lossless —
   * fields, types, and every character — not merely row-count-equal.
   *
-  * Staging is once per (corpus, format) per JVM (same memo contract
-  * as the streaming replay's staged dir): re-runs measure
-  * read+aggregate, the write is the one-time cost.
+  * Staging is once per (corpus, `documents` state, format) per JVM
+  * (same memo contract as the streaming replay's staged dir): re-runs
+  * measure read+aggregate, the write is the one-time cost, and an
+  * in-place rewrite of `documents` restages.
   */
 object SourceFormats {
 
-  private val staged = TrieMap.empty[(String, String), String]
+  private val staged = TrieMap.empty[(String, String, String), String]
 
   private def stage(spark: SparkSession, dir: String, fmt: String): String =
-    staged.getOrElseUpdate((dir, fmt), {
+    staged.getOrElseUpdate((dir, Tables.fingerprint(spark, dir, "documents"), fmt), {
       val tmp = java.nio.file.Files
         .createTempDirectory(s"graft_src_$fmt").toString
       val docs = Tables.table(spark, dir, "documents")
@@ -165,8 +166,9 @@ object SourceFormats {
 
   /** Staged-dir lookup for the spec (the corpus must already have
     * been staged by the gate query). */
-  private[graft] def stagedPathForTest(dir: String, fmt: String): String =
-    staged((dir, fmt))
+  private[graft] def stagedPathForTest(
+      spark: SparkSession, dir: String, fmt: String): String =
+    staged((dir, Tables.fingerprint(spark, dir, "documents"), fmt))
 
   /** The PERMISSIVE attribute-shape read, exposed for the spec's
     * corrupt-row count pin. */

@@ -80,7 +80,7 @@ object EventStreams {
         col("event_type"), col("n"), col("cents"))
 
   def streamHopping(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, stagedEventsDir(dir), "graft_stream_hopping",
+    runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_hopping",
         hoppingCounts, "complete")
       .orderBy("win_start_us", "event_type")
 
@@ -93,9 +93,11 @@ object EventStreams {
     * `event_tumbling` — whose DuckDB oracle it shares in the driver's
     * correctness gate (VERDICT r1 task 6).
     */
-  // staged stream-source dirs, one per source dir per JVM (repeated
-  // bench/verify invocations must not accumulate copies in /tmp)
-  private val stagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+  // staged stream-source dirs, one per (source dir, events file state)
+  // per JVM (repeated bench/verify invocations must not accumulate
+  // copies in /tmp; an in-place rewrite of the events file restages)
+  private val stagedDirs =
+    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   /** Stage `dir`'s events file into a directory usable as a
     * file-stream source (the source wants a directory of files).
@@ -121,8 +123,8 @@ object EventStreams {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile): Unit))
 
-  private def stagedEventsDir(dir: String): String =
-    stagedDirs.getOrElseUpdate(dir, {
+  private def stagedEventsDir(spark: SparkSession, dir: String): String =
+    stagedDirs.getOrElseUpdate((dir, Tables.fingerprint(spark, dir, "events")), {
       val tmp = java.nio.file.Files.createTempDirectory("graft_stream_events")
       val file = tmp.resolve("events.parquet")
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"), file)
@@ -131,7 +133,7 @@ object EventStreams {
     })
 
   def streamTumbling(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, stagedEventsDir(dir), "graft_stream_tumbling",
+    runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_tumbling",
         tumblingCounts, "complete")
       .orderBy("hour_s", "event_type")
 
@@ -152,7 +154,7 @@ object EventStreams {
     * which is what the gate proves.
     */
   def streamTopk(spark: SparkSession, dir: String): DataFrame = {
-    val counts = runToMemory(spark, stagedEventsDir(dir),
+    val counts = runToMemory(spark, stagedEventsDir(spark, dir),
       "graft_stream_topk",
       ev => ev.withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("user_id"))
@@ -195,7 +197,7 @@ object EventStreams {
     * split.
     */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val raw = runToMemory(spark, stagedEventsDir(dir), "graft_stream_sessionize",
+    val raw = runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_sessionize",
       sessionWindows, "complete")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("start_s")
@@ -268,7 +270,7 @@ object EventStreams {
     * (type, day) state — day-grain cardinality, never fact-scale.
     */
   def streamAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    val daily = runToMemory(spark, stagedEventsDir(dir),
+    val daily = runToMemory(spark, stagedEventsDir(spark, dir),
       "graft_stream_anomaly", dailyCounts, "complete")
     val z = graft.ext.Relational.AnomalyZ
     // the batch twin joins a broadcast stats agg (map-side combine at
@@ -322,7 +324,7 @@ object EventStreams {
     * from the window start), sharing its oracle.
     */
   def streamOhlc(spark: SparkSession, dir: String): DataFrame = {
-    runToMemory(spark, stagedEventsDir(dir), "graft_stream_ohlc",
+    runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_ohlc",
       ohlcBars, "complete")
       .select(col("event_type"),
         expr("start_ns div 86400000000000").as("day_idx"),
@@ -332,7 +334,7 @@ object EventStreams {
   }
 
   def streamDedup(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, stagedEventsDir(dir), "graft_stream_dedup",
+    runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_dedup",
         dedupWithinWatermark, "append")
       .orderBy("event_id")
 
@@ -370,7 +372,7 @@ object EventStreams {
     * through [[enrichedTumbling]], converged in complete mode.
     */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame =
-    runToMemory(spark, stagedEventsDir(dir), "graft_stream_enrich",
+    runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_enrich",
         enrichedTumbling(spark, dir), "complete")
       .orderBy("hour_s", "segment")
 
@@ -416,7 +418,7 @@ object EventStreams {
     * the source), and the lag is emitted as µs BIGINT.
     */
   def streamJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, 8) {
-    val staged = stagedEventsDir(dir)
+    val staged = stagedEventsDir(spark, dir)
     val views = readEventStream(spark, staged)
       .filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id"),
@@ -536,10 +538,11 @@ object EventStreams {
     * state at stream end. Kept separate from [[stagedEventsDir]]: the
     * other eight gate queries depend on a SINGLE staged file.
     */
-  private val stagedFlushDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val stagedFlushDirs =
+    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   private def stagedEventsWithFlushDir(spark: SparkSession, dir: String): String =
-    stagedFlushDirs.getOrElseUpdate(dir, {
+    stagedFlushDirs.getOrElseUpdate((dir, Tables.fingerprint(spark, dir, "events")), {
       val tmp = java.nio.file.Files.createTempDirectory("graft_stream_flush")
       val file = tmp.resolve("00-events.parquet")
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"), file)
@@ -785,7 +788,7 @@ object EventStreams {
     */
   def streamKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.NativeFunctions.register(spark)
-    runToMemory(spark, stagedEventsDir(dir), "graft_stream_kmv",
+    runToMemory(spark, stagedEventsDir(spark, dir), "graft_stream_kmv",
       ev => ev.withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 day").as("w"))
         .agg(

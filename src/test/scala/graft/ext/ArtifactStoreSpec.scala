@@ -46,10 +46,10 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("cluster labeling: build once, reload cross-session, rebuild on rewrite") {
     val corpus = copyCorpus().toString
-    val before = Dedup.clusterBuildCount.get()
+    val before = ArtifactStore.builds("dedup-cluster-v1")
 
     val first = Dedup.dedupCluster(spark, corpus).collect()
-    assert(Dedup.clusterBuildCount.get() == before + 1)
+    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 1)
     assert(first.nonEmpty)
 
     // artifact published with a completion marker
@@ -61,31 +61,31 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
     // must reload the artifact, not rebuild
     val s2 = spark.newSession()
     val second = Dedup.dedupCluster(s2, corpus).collect()
-    assert(Dedup.clusterBuildCount.get() == before + 1, "second session rebuilt")
+    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 1, "second session rebuilt")
     assert(second.map(_.toString).sorted.sameElements(first.map(_.toString).sorted))
 
     // in-place rewrite -> fingerprint changes -> rebuild
     rewriteInPlace(java.nio.file.Paths.get(corpus), "documents")
     Dedup.dedupCluster(spark.newSession(), corpus).collect()
-    assert(Dedup.clusterBuildCount.get() == before + 2, "rewrite did not invalidate")
+    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 2, "rewrite did not invalidate")
   }
 
   test("IVF model: train once, reload cross-session, retrain on rewrite") {
     val corpus = copyCorpus().toString
-    val before = Similarity.trainCount.get()
+    val before = ArtifactStore.builds("ivf-model-v1")
 
     val first = Similarity.simIvf(spark, corpus).collect()
-    assert(Similarity.trainCount.get() == before + 1)
+    assert(ArtifactStore.builds("ivf-model-v1") == before + 1)
     assert(first.nonEmpty)
 
     val s2 = spark.newSession()
     val second = Similarity.simIvf(s2, corpus).collect()
-    assert(Similarity.trainCount.get() == before + 1, "second session retrained")
+    assert(ArtifactStore.builds("ivf-model-v1") == before + 1, "second session retrained")
     assert(second.map(_.toString).sameElements(first.map(_.toString)))
 
     rewriteInPlace(java.nio.file.Paths.get(corpus), "embeddings")
     Similarity.simIvf(spark.newSession(), corpus).collect()
-    assert(Similarity.trainCount.get() == before + 2, "rewrite did not retrain")
+    assert(ArtifactStore.builds("ivf-model-v1") == before + 2, "rewrite did not retrain")
   }
 
   test("IVF assignment: published once as the inverted-list artifact, " +
@@ -147,6 +147,60 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("session tier: concurrent cold callers build once; a build may " +
+    "call another kind's build") {
+    val corpus = copyCorpus().toString
+    val outer = s"spec-outer-${java.util.UUID.randomUUID()}"
+    val inner = s"spec-inner-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map(_ => pool.submit(() =>
+        ArtifactStore.memo(spark, outer, corpus, "documents", "embeddings") {
+          Thread.sleep(200)
+          ArtifactStore.memo(spark, inner, corpus, "embeddings")(41) + 1
+        }))
+      assert(calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)) == Seq.fill(4)(42))
+    } finally pool.shutdown()
+    assert(ArtifactStore.builds(outer) == 1)
+    assert(ArtifactStore.builds(inner) == 1)
+    assert(ArtifactStore.hits(outer) == 3)
+    // an in-place rewrite of either input table re-keys
+    rewriteInPlace(java.nio.file.Paths.get(corpus), "embeddings")
+    ArtifactStore.memo(spark, outer, corpus, "documents", "embeddings")(0)
+    assert(ArtifactStore.builds(outer) == 2)
+  }
+
+  test("session tier: the wholesale clear counts entries per kind") {
+    val kept = s"spec-kept-${java.util.UUID.randomUUID()}"
+    val churn = s"spec-churn-${java.util.UUID.randomUUID()}"
+    val corpus = copyCorpus().toString
+    ArtifactStore.memo(spark, kept, corpus, "documents")(1)
+    // 20 corpora of another kind: that kind clears, `kept` does not
+    val dirs = (1 to 20).map(i => s"$corpus/churn-$i")
+    dirs.foreach(d => ArtifactStore.memo(spark, churn, d, "documents")(1))
+    ArtifactStore.memo(spark, kept, corpus, "documents")(1)
+    assert(ArtifactStore.builds(kept) == 1, "another kind's corpora evicted this kind")
+    ArtifactStore.memo(spark, churn, dirs.head, "documents")(1)
+    assert(ArtifactStore.builds(churn) == 21, "past 16 entries the kind clears")
+  }
+
+  test("no hand-rolled memo under graft/ext: no TrieMap, no getOrElseUpdate") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft/ext")
+    val files = {
+      val it = Files.walk(root).iterator()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val offenders = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).toArray(Array.empty[String]).zipWithIndex
+      if line.contains("TrieMap") || line.contains("getOrElseUpdate")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "session memos go through graft.sources.ArtifactStore:\n" + offenders.mkString("\n"))
+  }
+
   test("half-written artifact (no _SUCCESS) is discarded and rebuilt") {
     val corpus = copyCorpus().toString
     val ap = ArtifactStore.artifactPath(spark, corpus, "documents", "dedup-cluster-v1")
@@ -156,9 +210,9 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
     val out = fs.create(new org.apache.hadoop.fs.Path(ap, "part-garbage.parquet"))
     out.write(Array[Byte](1, 2, 3)); out.close()
 
-    val before = Dedup.clusterBuildCount.get()
+    val before = ArtifactStore.builds("dedup-cluster-v1")
     val rows = Dedup.dedupCluster(spark.newSession(), corpus).collect()
-    assert(Dedup.clusterBuildCount.get() == before + 1)
+    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 1)
     assert(rows.nonEmpty)
     assert(fs.exists(new org.apache.hadoop.fs.Path(ap, "_SUCCESS")))
   }

@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.sources.ArtifactStore
 
 /** Dedup fidelity on the sf0.001 testdata (which carries engineered
   * near-duplicate documents) plus constructed corner cases.
@@ -604,9 +605,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
     // the clustering reuses the sim_ivf coarse quantizer: invoking
     // the ANN query afterwards must not retrain
-    val before = Similarity.trainCount.get()
+    val before = ArtifactStore.builds("ivf-model-v1")
     Similarity.simIvf(spark, dir).count()
-    assert(Similarity.trainCount.get() == before,
+    assert(ArtifactStore.builds("ivf-model-v1") == before,
       "sim_ivf retrained a model dedup_semantic already built")
   }
 

@@ -135,24 +135,64 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     assert(out(6) == (7L, 1L, 16L, 2L, 2L, 128L, 32L), out(6).toString)
   }
 
+  private def tuples(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+
+  private def bucketed(d: String) = tuples(Layout.layoutBucket(spark, d).collect())
+
+  /** layout_bucket's rows by the plain shuffle join over corpus `d`. */
+  private def plainJoin(d: String) = tuples(
+    graft.sources.Tables.table(spark, d, "orders")
+      .join(graft.sources.Tables.table(spark, d, "customer"),
+        col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_custkey"), col("c_mktsegment"))
+      .agg(count(lit(1)).as("n_orders"),
+        (sum(col("o_totalprice").cast(
+          org.apache.spark.sql.types.DecimalType(18, 2))) * 100)
+          .cast("long").as("total_cents"))
+      .collect())
+
+  /** A writable corpus of sf0.001's `orders` (through `orders`) and
+    * `customer`.
+    */
+  private def bucketCorpus(
+      orders: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
+    val d = java.nio.file.Files.createTempDirectory("bucket-corpus").toString
+    orders(graft.sources.Tables.table(spark, dir, "orders"))
+      .write.parquet(s"$d/orders.parquet")
+    graft.sources.Tables.table(spark, dir, "customer")
+      .write.parquet(s"$d/customer.parquet")
+    d
+  }
+
   test("layoutBucket: equals the plain shuffle join; republish is idempotent") {
-    val dir = "/root/testdata/sf0.001"
-    def tuples(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val out = tuples(Layout.layoutBucket(spark, dir).collect())
-    val plain = tuples(
-      graft.sources.Tables.table(spark, dir, "orders")
-        .join(graft.sources.Tables.table(spark, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          (sum(col("o_totalprice").cast(
-            org.apache.spark.sql.types.DecimalType(18, 2))) * 100)
-            .cast("long").as("total_cents"))
-        .collect())
+    val out = bucketed(dir)
+    val plain = plainJoin(dir)
     assert(out.toSet == plain.toSet)
     assert(out.sortBy(_._1).sameElements(out), "presentation order is c_custkey")
     // a second publish over the same corpus must serve the same rows
-    assert(tuples(Layout.layoutBucket(spark, dir).collect()).toSeq == out.toSeq)
+    assert(bucketed(dir).toSeq == out.toSeq)
+  }
+
+  test("layoutBucket: corpus A, then B, then A in one session reads A's buckets") {
+    val a = bucketCorpus(identity)
+    val b = bucketCorpus(_.filter(col("o_custkey") % 2 === 0))
+    val first = bucketed(a)
+    assert(first.toSet == plainJoin(a).toSet)
+    assert(bucketed(b).toSet == plainJoin(b).toSet)
+    assert(plainJoin(b).toSet != plainJoin(a).toSet, "B must differ from A")
+    assert(bucketed(a).toSeq == first.toSeq, "A served B's buckets")
+  }
+
+  test("layoutBucket: rewriting customer in place republishes the buckets") {
+    val c = bucketCorpus(identity)
+    assert(bucketed(c).toSet == plainJoin(c).toSet)
+    graft.sources.Tables.table(spark, dir, "customer")
+      .withColumn("c_mktsegment", lit("REWRITTEN"))
+      .write.mode("overwrite").parquet(s"$c/customer.parquet")
+    val after = bucketed(c)
+    assert(after.nonEmpty && after.forall(_._2 == "REWRITTEN"),
+      "served the buckets of the customer table before the rewrite")
+    assert(after.toSet == plainJoin(c).toSet)
   }
 }

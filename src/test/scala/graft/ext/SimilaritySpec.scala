@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.sources.ArtifactStore
 import graft.functions.VectorOps
 
 /** ANN fidelity: brute-force baseline sanity plus LSH recall on
@@ -93,9 +94,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     // train-once: a second invocation on the same corpus reuses the
     // cached centroids instead of re-paying the Lloyd passes
     Similarity.simIvf(spark, dir).collect()
-    val after = Similarity.trainCount.get()
+    val after = ArtifactStore.builds("ivf-model-v1")
     Similarity.simIvf(spark, dir).collect()
-    assert(Similarity.trainCount.get() == after, "second invocation retrained")
+    assert(ArtifactStore.builds("ivf-model-v1") == after, "second invocation retrained")
   }
 
   test("IVF recall on clustered vectors >= 0.9 of brute-force top-10") {
@@ -150,10 +151,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       assert(ds.zip(ds.tail).forall { case (a, b) => a <= b }, "not ascending")
     }
     // deterministic replay + train-once memo
-    val before = Similarity.trainCount.get()
+    val before = ArtifactStore.builds("pq-model-v1")
     val again = Similarity.simPq(spark, tmp).collect()
     assert(again.map(_.toString).sameElements(rows.map(_.toString)))
-    assert(Similarity.trainCount.get() == before, "second invocation retrained")
+    assert(ArtifactStore.builds("pq-model-v1") == before, "second invocation retrained")
   }
 
   test("simPq: a corpus smaller than the codebook width still answers") {

@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.sources.ArtifactStore
 
 /** Round-5 pipeline additions: repetition quality signals and
   * exact-rate stratified sampling (the oracle gate carries the
@@ -766,10 +767,10 @@ class TextPipelineOpsSpec extends AnyFunSuite with SparkTestBase {
   test("graph edge set builds once per corpus, shared by pagerank and triangles") {
     val d = "/root/testdata/sf0.001"
     Graph.graphPagerank(spark, d).collect()
-    val after = Graph.edgeBuildCount.get()
+    val after = ArtifactStore.builds("graph-edges-v1")
     Graph.graphTriangles(spark, d).collect()
     Graph.graphPagerank(spark, d).collect()
-    assert(Graph.edgeBuildCount.get() == after, "edge memo rebuilt")
+    assert(ArtifactStore.builds("graph-edges-v1") == after, "edge memo rebuilt")
   }
 
   test("textBpe: merges match an independent BPE trainer on the real corpus") {
@@ -840,7 +841,7 @@ class TextPipelineOpsSpec extends AnyFunSuite with SparkTestBase {
 
   test("textBpe/textBpeEncode: exact merges + compression on a crafted corpus; one train per corpus") {
     val dir = corpus(Seq((1L, "aaaa aaaa aaaa", "s")))
-    val before = TextAnalysis.bpeBuildCount.get()
+    val before = ArtifactStore.builds("bpe-merges-v1")
     val merges = TextAnalysis.textBpe(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     // word "aaaa" (n=3): merge 1 = (a,a) weight 9, merge 2 = (aa,aa)
@@ -853,7 +854,7 @@ class TextPipelineOpsSpec extends AnyFunSuite with SparkTestBase {
     // 3 words x 4 chars -> 3 single-symbol tokens: 750000 ppm saved
     assert(enc.toSeq == Seq((1L, 3L, 12L, 3L, 750000L)), enc.mkString(", "))
     TextAnalysis.textBpe(spark, dir).collect()
-    assert(TextAnalysis.bpeBuildCount.get() == before + 1,
+    assert(ArtifactStore.builds("bpe-merges-v1") == before + 1,
       "merge table retrained despite the session memo")
   }
 

@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.sources.ArtifactStore
 
 /** Semantics pins for the PMI collocation operator (the oracle gate
   * carries hash equality; this fixes the statistic on a corpus where
@@ -82,9 +83,9 @@ class TextPmiSpec extends AnyFunSuite with SparkTestBase {
   test("textRank: word-graph index builds once per corpus, served thereafter") {
     val d = "/root/testdata/sf0.001"
     TextAnalysis.textRank(spark, d).collect()
-    val after = TextAnalysis.trEdgeBuildCount.get()
+    val after = ArtifactStore.builds("textrank-edges-v1")
     TextAnalysis.textRank(spark, d).collect()
-    assert(TextAnalysis.trEdgeBuildCount.get() == after,
+    assert(ArtifactStore.builds("textrank-edges-v1") == after,
       "word-graph edge artifact rebuilt on a hot invocation")
   }
 

@@ -810,10 +810,10 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
       ("q19_discounted", graft.ext.TpchMore.q19Discounted(spark, dir), true),
       ("q20_dominant_suppliers",
         graft.ext.TpchMore.q20DominantSuppliers(spark, dir), true),
-      // graph_hits returns the SERVE plan since the converged-scores
-      // memo (round 16): the broadcast L1 normalizers run inside the
-      // memo build; the returned plan must be the checkpointed-state
-      // rank (TakeOrdered over ExistingRDD), pinned separately below.
+      // graph_hits checkpoints each round eagerly, so the broadcast L1
+      // normalizers run before the plan is returned; the returned plan
+      // must be the rank over the last round's checkpointed state
+      // (TakeOrdered over ExistingRDD), pinned separately below.
       ("graph_hits", graft.ext.Graph.graphHits(spark, dir), false),
       ("graph_walks", graft.ext.Graph.graphWalks(spark, dir), false),
       ("ts_bollinger", graft.ext.TimeSeries.tsBollinger(spark, dir), false),

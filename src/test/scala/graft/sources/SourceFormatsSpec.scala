@@ -25,11 +25,25 @@ class SourceFormatsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("staging follows an in-place rewrite of documents") {
+    val d = java.nio.file.Files.createTempDirectory("staged-corpus").toString
+    Tables.table(spark, dir, "documents").write.parquet(s"$d/documents.parquet")
+    val first = SourceFormats.sourceJsonl(spark, d).collect().map(_.toString).toSeq
+    Tables.table(spark, dir, "documents").filter(col("doc_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$d/documents.parquet")
+    val expected = SourceFormats
+      .fingerprinted(Tables.table(spark, d, "documents"))
+      .collect().map(_.toString).toSeq
+    assert(expected != first, "the rewrite must change the fingerprint")
+    assert(SourceFormats.sourceJsonl(spark, d).collect().map(_.toString).toSeq == expected,
+      "served the staged copy of documents from before the rewrite")
+  }
+
   test("xml attribute shape: exactly one corrupt row isolates in PERMISSIVE mode") {
     // drive the gate query first so the attribute corpus (incl. the
     // malformed shard) is staged
     SourceFormats.sourceXmlAttrs(spark, dir).collect()
-    val path = SourceFormats.stagedPathForTest(dir, "xml_attrs")
+    val path = SourceFormats.stagedPathForTest(spark, dir, "xml_attrs")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("_doc_id",
         org.apache.spark.sql.types.LongType),
