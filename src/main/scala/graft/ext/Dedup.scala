@@ -153,107 +153,117 @@ object Dedup {
       }.toDF("doc_id", "band", "bh")
   }
 
-  /** Exact-verify candidate (doc_a, doc_b) pairs with a postings
-    * count-join: |A∩B| = number of co-occurring shingles, counted by
-    * joining each pair's a-side postings against the b-side on the
-    * shingle — fully codegen'd equi-joins, no shingle arrays shipped
-    * per pair, no interpreted array lambdas (the array_intersect
-    * formulation cost ~8 s at 120k candidates on sf0.1; this shape is
-    * ~1 s). Keeps pairs with exact Jaccard ≥ the threshold. Shared
-    * verify tier of [[dedupMinhash]] and [[dedupNgram]].
-    *
-    * Candidate postings come from the [[rankedPosts]] index — a
-    * pruned parquet scan semi-joined to the candidate docs (no
-    * shingling kernel on the verify path) — so verify stays
-    * O(|candidate docs|), not O(corpus), per the 100 TB posture.
-    */
-  /** Corpus-df bound for the verify tier's counting self-join (round
-    * 17, ADVICE r16 medium): the r16 PPJoin count costs Σ_shingle
-    * df_cand² — one corpus-common shingle (df ≈ N/2) among the
-    * candidate docs makes it quadratic in N, a cliff the old
-    * candidate-anchored shape could not hit. Shingles at or below
-    * this corpus df stay on the self-join path (per-shingle cost ≤
-    * df², so the light arm is ≤ HeavyDf·Σdf); rarer-than-never
-    * shingles above it are counted by anchoring on the CANDIDATE
-    * pairs instead (cost |candidates| × heavy-shingles-per-doc). The
-    * split is exact — see [[verifyJaccardPairsAt]]. 64 is far above
-    * every gate corpus's df (plans unchanged where it cannot bind)
-    * and far below the N/2 cliff at warehouse N.
+  /** Corpus-df bound of the verify tier's counting self-join, whose
+    * cost is Σ_shingle df_cand²: one corpus-common shingle (df ≈ N/2)
+    * among the candidate docs makes it quadratic in N. Shingles above
+    * this df are counted on [[overlapCounts]]' candidate-anchored arm
+    * instead. 64 is far above the max shingle df of every gate and
+    * bench corpus (9, 7 and 25 at sf0.001, sf0.01 and sf0.1) and far
+    * below the N/2 cliff at warehouse N.
     */
   private[ext] val VerifyHeavyDf = 64L
+
+  /** Max shingle df of the corpus, from the [[rankedPosts]] index: one
+    * job per corpus state, then a session-tier scalar.
+    */
+  private def maxShingleDf(spark: SparkSession, dir: String): Long =
+    ArtifactStore.memo(spark, "shingle-max-df-v1", dir, "documents") {
+      rankedPosts(spark, dir).agg(coalesce(max(col("df")), lit(0L))).head().getLong(0)
+    }
+
+  /** The verify tier's one exact |A∩B| kernel, shared by the Jaccard
+    * tiers ([[verifyJaccardPairsAt]]) and [[dedupContainment]]: for
+    * candidate `pairs` (doc_a, doc_b) it returns (doc_a, sza, doc_b,
+    * szb, inter), with sz = |shingle set| and inter = |A∩B|.
+    *
+    * Counting (PPJoin): the candidate docs' df > 1 postings, read from
+    * the [[rankedPosts]] index (a df = 1 shingle lives in one doc and
+    * never co-occurs; |A| rides the carried `sz`), self-join on the
+    * shingle and count per (doc_a, sza, doc_b, szb). `sz` is constant
+    * per doc, so carrying it keeps the grouping and needs no sizes
+    * join-back. `directed` keeps `doc_a =!= doc_b` with the pairs as
+    * given (containment) or `doc_a < doc_b` with canonical pairs
+    * (Jaccard). No shingle arrays ship per pair and no array lambdas
+    * run: fully codegen'd equi-joins over pruned index scans, so verify
+    * stays O(|candidate docs|), not O(corpus).
+    *
+    * Hybrid: the self-join costs df² per shingle. When some shingle has
+    * df > `heavyDf`, light shingles (df ≤ `heavyDf`) stay on the
+    * self-join and heavy ones anchor on the distinct candidate pairs
+    * (cost |pairs| × heavy shingles per doc); a full-outer join sums the
+    * two arms. Exact: a candidate pair gets both arms in full, and any
+    * other pair can only be under-counted (its heavy arm is missing).
+    * Callers drop non-candidate pairs: the Jaccard tiers by a candidate
+    * semi-join, containment because every pair with C ≥ t shares a
+    * prefix shingle and so is a candidate, while an under-count cannot
+    * lift a pair over a threshold it truly fails. The output is the
+    * same at any `heavyDf` (DedupSpec runs both forms at 1,
+    * [[VerifyHeavyDf]] and Long.MaxValue).
+    *
+    * The arm comes from the corpus max df, not from a probe of the
+    * candidate postings: when no shingle in the corpus exceeds
+    * `heavyDf`, no candidate holds one, and the plan is the light
+    * self-join alone — one postings exchange read by both join sides,
+    * no pairs materialized, no full-outer join. The scalar is memoized
+    * per corpus state, so building the plan starts no Spark job. Only
+    * the hybrid checkpoints the postings, since three distinct
+    * exchanges read them there.
+    */
+  private def overlapCounts(
+      spark: SparkSession, dir: String, pairs: DataFrame,
+      directed: Boolean, heavyDf: Long): DataFrame = {
+    val cdocs = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id")))
+      .distinct()
+    // `sz` is never null; filtering on it keeps both self-join sides
+    // one plan (a threshold on sza alone would infer the filter on
+    // side a only), so they share one exchange
+    val posts = rankedPosts(spark, dir)
+      .filter(col("df") > 1 && col("sz").isNotNull)
+      .select("doc_id", "sz", "shingle", "df")
+      .join(cdocs, Seq("doc_id"), "left_semi")
+    def side(p: DataFrame, s: String): DataFrame =
+      p.select(col("doc_id").as(s"doc_$s"), col("sz").as(s"sz$s"), col("shingle"))
+    val keys = Seq("doc_a", "sza", "doc_b", "szb")
+    def counted(joined: DataFrame, name: String): DataFrame =
+      joined.groupBy(keys.map(col): _*).agg(count(lit(1)).as(name))
+    def selfCount(p: DataFrame, name: String): DataFrame =
+      counted(side(p, "a").join(side(p, "b"), "shingle")
+        .filter(if (directed) col("doc_a") =!= col("doc_b")
+          else col("doc_a") < col("doc_b")), name)
+    if (maxShingleDf(spark, dir) <= heavyDf) selfCount(posts, "inter")
+    else {
+      val cp = posts.localCheckpoint(true)
+      val heavy = cp.filter(col("df") > heavyDf)
+      val anchors =
+        if (directed) pairs.select("doc_a", "doc_b")
+        else pairs.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+          greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      // (doc, shingle) is unique in the postings, so the b-side inner
+      // join filters like a semi-join and carries szb
+      val interH = counted(anchors.distinct()
+        .join(side(heavy, "a"), "doc_a")
+        .join(side(heavy, "b"), Seq("doc_b", "shingle")), "ch")
+      selfCount(cp.filter(col("df") <= heavyDf), "cl")
+        .join(interH, keys, "full_outer")
+        .select(keys.map(col) :+
+          (coalesce(col("cl"), lit(0L)) + coalesce(col("ch"), lit(0L))).as("inter"): _*)
+    }
+  }
 
   private def verifyJaccardPairs(
       spark: SparkSession, dir: String, candidates: DataFrame): DataFrame =
     verifyJaccardPairsAt(spark, dir, candidates, VerifyHeavyDf)
 
+  /** Exact-verify candidate (doc_a, doc_b) pairs through
+    * [[overlapCounts]], keeping pairs with Jaccard ≥ the threshold.
+    * Shared verify tier of [[dedupMinhash]], [[dedupNgram]],
+    * [[dedupIncremental]] and [[dedupSortedNeighborhood]].
+    */
   private[ext] def verifyJaccardPairsAt(
       spark: SparkSession, dir: String, candidates: DataFrame,
       heavyDf: Long): DataFrame = {
-    val cdocs = candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id")))
-      .distinct()
-    // df > 1 prune (round 16, guide §2.3/§3.2): a df=1 shingle lives
-    // in exactly one document, so it can never co-occur and never
-    // contributes to |A∩B| — only the co-occurring postings enter the
-    // count-join. |A|/|B| stay exact via the carried `sz` column.
-    val posts = rankedPosts(spark, dir)
-      .filter(col("df") > 1)
-      .select("doc_id", "sz", "shingle", "df")
-      .join(cdocs, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true) // five consumers below
-    // Hybrid intersection count (round 17, ADVICE r16): |A∩B| =
-    // |A∩B over light shingles| + |A∩B over heavy shingles|, counted
-    // on two differently-bounded paths. LIGHT (df ≤ heavyDf): the r16
-    // PPJoin self-join, per-shingle cost capped at heavyDf². HEAVY
-    // (df > heavyDf): anchor doc_a's heavy postings on the canonical
-    // candidate pairs and semi-join the (doc_b, shingle) side — the
-    // pre-r16 candidate-anchored shape, restricted to the few heavy
-    // shingles per doc. EXACTNESS: candidate pairs get both arms in
-    // full (the full-outer sum is the exact |A∩B| split by df);
-    // non-candidate pairs can only be UNDER-counted (heavy arm
-    // missing), and they are discarded by the final candidate
-    // semi-join regardless of the threshold verdict — so the emitted
-    // relation is bit-identical at any heavyDf (DedupSpec pins both
-    // extremes against each other).
-    val light = posts.filter(col("df") <= heavyDf)
-    val heavy = posts.filter(col("df") > heavyDf)
-    val interL = light.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(light.select(col("doc_id").as("doc_b"), col("shingle")),
-        Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("cl"))
-    // The heavy arm only enters the plan when heavy shingles EXIST
-    // (a driver boolean over the checkpointed posts — near-free): on
-    // every gate corpus the df ceiling keeps the plan exactly the
-    // light self-join, with no candidate-pair canonicalize/distinct
-    // shuffle spent on an empty arm.
-    val inter =
-      if (heavy.isEmpty)
-        interL.withColumnRenamed("cl", "inter")
-      else {
-        val canon = candidates.select(
-            least(col("doc_a"), col("doc_b")).as("doc_a"),
-            greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-          .distinct()
-        val interH = canon
-          .join(heavy.select(col("doc_id").as("doc_a"), col("shingle")),
-            "doc_a")
-          .join(heavy.select(col("doc_id").as("doc_b"), col("shingle")),
-            Seq("doc_b", "shingle"), "left_semi")
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("ch"))
-        interL.join(interH, Seq("doc_a", "doc_b"), "full_outer")
-          .withColumn("inter",
-            coalesce(col("cl"), lit(0L)) + coalesce(col("ch"), lit(0L)))
-      }
-    // every doc with a df>1 posting carries its full |A| on each row
-    val sizes = posts.groupBy(col("doc_id")).agg(max(col("sz")).as("sz"))
-    val qualified = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")),
-        "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")),
-        "doc_b")
+    val qualified = overlapCounts(spark, dir, candidates, directed = false, heavyDf)
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("sza") + col("szb") - col("inter")).cast("double"))
@@ -409,87 +419,33 @@ object Dedup {
     * pairs). The prefix kills the ubiquitous-shingle buckets on the
     * probe side; residual hot keys on the full index side are
     * equi-join skew, which AQE splits. Candidates are exact-verified
-    * with the same postings count-join as the Jaccard tiers —
-    * containment is one IEEE division of two integers (|A∩B|, |A|),
-    * bit-identical in both engines, so the threshold can't flip.
+    * by [[overlapCounts]]' directed form — containment is one IEEE
+    * division of two integers (|A∩B|, |A|), bit-identical in both
+    * engines, so the threshold can't flip.
     */
-  def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
-    val idx = rankedPosts(spark, dir)
+  def dedupContainment(spark: SparkSession, dir: String): DataFrame =
+    dedupContainmentAt(spark, dir, VerifyHeavyDf)
+
+  private[ext] def dedupContainmentAt(
+      spark: SparkSession, dir: String, heavyDf: Long): DataFrame = {
     // df > 1 prune (round 16, guide §2.3/§3.2): a df=1 shingle lives
     // in exactly one document — it can never join a DIFFERENT doc on
-    // either side of the candidate join, and never contributes to the
-    // |A∩B| count (containment's |A| comes from the carried `sz`
-    // column, not from counting postings). Pruning both sides removes
+    // either side of the candidate join. Pruning both sides removes
     // the dominant unique-shingle mass from the exchanges.
-    val shared = idx.filter(col("df") > 1)
+    val shared = rankedPosts(spark, dir).filter(col("df") > 1)
     val prefix = shared
       .filter(col("r") <=
         (col("sz") - ceil(col("sz") * ContainmentThreshold) + 1).cast("int"))
       .select(col("doc_id").as("doc_a"), col("shingle"))
-    // Candidate PAIRS are never materialized (round 16, guide §1.2):
-    // the prefix filter is LOSSLESS (pigeonhole: every pair with
-    // C(A,B) ≥ t shares a probe-prefix shingle), so the pair-level
-    // semi-join the old shape paid for could only remove pairs the
-    // threshold filter rejects anyway — and its verify attached each
-    // of 300k candidate pairs to ALL of doc_a's postings (candidates
-    // × |A| ≈ 15.6M rows at sf0.1) before trimming. The candidate
-    // join now only DECIDES which docs enter verify (cand0 stays
-    // pre-distinct — only doc ids are distinct'd), and |A∩B| is
-    // counted directly from the candidate-doc postings self-join
-    // (Σ_shingle df_cand² ≈ 2.8M rows here — the PPJoin counting
-    // phase over df>1 postings; AQE splits residual hot-shingle
-    // skew). Output identical: exact counts, same threshold, and the
-    // prefix's pigeonhole guarantees no qualifying pair is lost.
+    // Candidate pairs stay pre-distinct (round 16, guide §1.2): on the
+    // light path they only decide which docs enter the count, and the
+    // prefix filter is lossless (pigeonhole: every pair with
+    // C(A,B) ≥ t shares a probe-prefix shingle), so a pair-level
+    // semi-join could only remove pairs the threshold rejects anyway.
     val cand0 = prefix
       .join(shared.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
       .filter(col("doc_a") =!= col("doc_b"))
-    val cdocs = cand0.select(col("doc_a").as("doc_id"))
-      .union(cand0.select(col("doc_b").as("doc_id")))
-      .distinct()
-    val cposts = shared.select("doc_id", "sz", "shingle", "df")
-      .join(cdocs, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true) // five consumers below
-    // Hybrid |A∩B| count (round 17, ADVICE r16 — the
-    // [[verifyJaccardPairsAt]] df bound, directed form): shingles with
-    // corpus df ≤ [[VerifyHeavyDf]] count on the self-join (per-
-    // shingle cost ≤ df²); heavier shingles anchor on the DISTINCT
-    // prefix-candidate pairs — bounded by |pairs| × heavy-per-doc,
-    // never df_cand². Exact by the same argument: a pair with true
-    // C(A,B) ≥ t shares a prefix shingle (pigeonhole), so it is in
-    // `pairs` and both arms count in full; any other pair can only be
-    // UNDER-counted, and under-counting cannot push it over the
-    // threshold it truly fails.
-    val light = cposts.filter(col("df") <= VerifyHeavyDf)
-    val heavy = cposts.filter(col("df") > VerifyHeavyDf)
-    val interL = light.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(light.select(col("doc_id").as("doc_b"), col("shingle")), "shingle")
-      .filter(col("doc_a") =!= col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("cl"))
-    // heavy arm only when heavy shingles exist (driver boolean over
-    // the checkpointed cposts) — gate corpora keep the pure light
-    // shape; candidate pairs stay unmaterialized there (the r16
-    // invariant)
-    val inter =
-      if (heavy.isEmpty)
-        interL.withColumnRenamed("cl", "inter")
-      else {
-        val pairs = cand0.select("doc_a", "doc_b").distinct()
-        val interH = pairs
-          .join(heavy.select(col("doc_id").as("doc_a"), col("shingle")),
-            "doc_a")
-          .join(heavy.select(col("doc_id").as("doc_b"), col("shingle")),
-            Seq("doc_b", "shingle"), "left_semi")
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("ch"))
-        interL.join(interH, Seq("doc_a", "doc_b"), "full_outer")
-          .withColumn("inter",
-            coalesce(col("cl"), lit(0L)) + coalesce(col("ch"), lit(0L)))
-      }
-    val sizes = cposts.groupBy(col("doc_id")).agg(max(col("sz")).as("sz"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")),
-        "doc_a")
+    overlapCounts(spark, dir, cand0, directed = true, heavyDf)
       .withColumn("containment",
         col("inter").cast("double") / col("sza").cast("double"))
       .filter(col("containment") >= ContainmentThreshold)
@@ -547,8 +503,8 @@ object Dedup {
   // Near-dup embeddings: cosine threshold
   // ----------------------------------------------------------------
 
-  // private[graft]: tools/AnnGateRecheck and the DedupSpec banding-
-  // floor case reference the shipped value instead of duplicating the
+  // private[graft]: the DedupSpec banding-floor case and the test-side
+  // tools/AnnGateRecheck reference the shipped value instead of duplicating the
   // literal (ADVICE r11 #2)
   private[graft] val CosineThreshold = 0.45
 
@@ -846,8 +802,8 @@ object Dedup {
     * planes): (a) by the now-exact θ/π envelope, width 4 × 64 bands
     * gives per-pair miss (1−0.6486⁴)⁶⁴ ≈ 3.6e-6, inside the 1e-5
     * design target where the envelope alone would ask for 60; (b)
-    * measured with `tools.AnnGateRecheck` under the shipped Gaussian
-    * planes at every gate SF and the ×100-derived sf1 — 0 of the
+    * measured with the test-side `tools.AnnGateRecheck` under the
+    * shipped Gaussian planes at every gate SF and the ×100-derived sf1 — 0 of the
     * exact grid relation's qualifying pairs escape the banding
     * (sf0.001: 7/7, sf0.01: 14/14, sf0.1 [floor-binding w=4×B=64]:
     * 144/144, sf1 [w=6×B=149]: 106290/106290 covered). Note the
@@ -896,8 +852,8 @@ object Dedup {
     * shape that wins at scale and is kept deliberately.
     */
   /** Round-14 coda (VERDICT r13 ask #3 — the f1000 hot exponent
-    * 1.054 "superlinearity"): measured by `tools.AnnPairCurve`
-    * (ANN_PAIR_CURVE_r14.json), no banding ever runs on this query —
+    * 1.054 "superlinearity"): measured in
+    * ANN_PAIR_CURVE_r14.json, no banding ever runs on this query —
     * the tier rule grid-delegates every 0.45-envelope geometry
     * (`grid_delegated:true` at n = 500 / 50k / 500k), so pair work is
     * exactly C(n,2) (1.25e5 / 1.25e9 / 1.25e11): quadratic by the
@@ -971,7 +927,7 @@ object Dedup {
     * the full-suite factor-100 audit measures the hot exponent at
     * 0.904 (SCALEUP_r10), UNDER the staircase bound as the theory
     * says it should be, and the planted-pair audit
-    * (`tools/AnnHiPlanted`) confirms the 1e-2 recall envelope at
+    * (test-side `tools/AnnHiPlanted`) confirms the 1e-2 recall envelope at
     * n = 10⁵ (20 misses of 50 000 planted pairs; binomial tail 1.0).
     *
     * The staircase prices the BACKGROUND; the r9 factor-100 audit

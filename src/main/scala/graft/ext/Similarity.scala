@@ -397,9 +397,9 @@ object Similarity {
     * agreement at 0.785 vs the theoretical 0.823 for cos 0.85 pairs
     * (a ~1/√dim discretization bias) — which at the n=100k geometry
     * (width 14 × 112 bands) inflated the 1e-2 per-pair miss envelope
-    * 40× (observed 2.1e-2; binomial tail p ≈ 1e-102 — see
-    * `tools/AnnHiPlanted`). Gaussian coordinates restore the exact
-    * θ/π law, keeping the envelope a theorem instead of an
+    * 40× (observed 2.1e-2; binomial tail p ≈ 1e-102 — see the
+    * test-side `tools/AnnHiPlanted`). Gaussian coordinates restore
+    * the exact θ/π law, keeping the envelope a theorem instead of an
     * approximation. The multi-probe query path keeps discrete
     * [[planes]] deliberately: its oracle REGENERATES the planes in
     * SQL, where the 4-bit-popcount entry is replayable and recall is

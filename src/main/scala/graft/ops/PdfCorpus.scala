@@ -163,22 +163,15 @@ object PdfCorpus {
   }
 
   /** Materialize a synthesized PDF corpus for `dir`'s documents table
-    * under the artifact root, once per corpus state ([[ArtifactStore]]'s
-    * fingerprint + atomic-rename discipline, but writing raw `.pdf`
-    * files from tasks instead of a parquet frame). Returns the
-    * directory to scan.
+    * under the artifact root, once per corpus state
+    * ([[ArtifactStore.publish]], writing raw `.pdf` files from tasks
+    * instead of a parquet frame). Returns the directory to scan.
     */
   private[graft] def ensureAssets(
       spark: SparkSession, dir: String,
       tag: String = "pdf-assets-v1",
-      synth: (Long, String) => Array[Byte] = synthesize): String = {
-    val p = ArtifactStore.artifactPath(spark, dir, "documents", tag)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val success = new Path(p, "_SUCCESS")
-    if (!fs.exists(success)) {
-      val tmp = new Path(p.getParent,
-        s".${p.getName}.inprogress-${java.util.UUID.randomUUID()}")
-      fs.mkdirs(tmp)
+      synth: (Long, String) => Array[Byte] = synthesize): String =
+    ArtifactStore.publish(spark, dir, "documents", tag) { tmp =>
       val tmpStr = tmp.toString
       import spark.implicits._
       Tables.table(spark, dir, "documents")
@@ -200,16 +193,7 @@ object PdfCorpus {
             finally out.close()
           }
         }
-      fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      if (fs.exists(p)) fs.delete(p, true)
-      if (!fs.rename(tmp, p)) {
-        fs.delete(tmp, true) // lost the publish race: same corpus, same bytes
-        if (!fs.exists(success))
-          throw new IllegalStateException(s"pdf asset publish failed: $p")
-      }
-    }
-    p.toString
-  }
+    }.toString
 
   /** The registered query: synthesize (memoized), scan, extract,
     * chunk, aggregate — per-doc stats plus the SUM TOTAL rollup row.

@@ -24,8 +24,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * wholesale — per kind, so the dozen kinds of one bench session
   * never evict each other.
   *
-  * '''Durable tier''' ([[frame]], [[artifact]]): the session tier over
-  * a parquet publication at `<root>/<kind>/<fingerprint-hash>/`, where
+  * '''Durable tier''' ([[frame]], [[artifact]], [[staged]]): the
+  * session tier over a publication at `<root>/<kind>/<fingerprint-hash>/`
+  * (parquet, or the files a staging writer lays down), where
   *   - `root` is `spark.graft.artifactDir` — on a real cluster a
   *     shared HDFS/S3 URI; defaults to the local tmp dir (the corpus
   *     dir itself may be read-only, as the gate's is);
@@ -35,10 +36,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - the hash is over the input table's fingerprint.
   * A restarted driver, or another session on the cluster, reloads the
   * publication instead of rebuilding; executor loss cannot invalidate
-  * it. Publication is atomic: build → write to a hidden sibling temp
-  * path → rename into place. Readers accept only directories whose
-  * `_SUCCESS` marker exists, so a crashed writer leaves garbage, never
-  * a half-artifact; a lost publish race defers to the winner.
+  * it. Publication is atomic ([[publish]]): build → write to a hidden
+  * sibling temp path → rename into place. Readers accept only
+  * directories whose `_SUCCESS` marker exists, so a crashed writer
+  * leaves garbage, never a half-artifact.
   *
   * '''Index-only rule.''' A value held here is an index that queries
   * READ — never a query's finished answer. Serving an answer from a
@@ -144,7 +145,21 @@ object ArtifactStore {
   def artifact[V](spark: SparkSession, kind: String, dir: String, table: String)(
       build: => DataFrame)(read: DataFrame => V): V =
     served(spark, kind, dir, Seq(table)) { _ =>
-      read(loadOrBuild(spark, dir, table, kind)(counted(kind)(build)))
+      val p = publish(spark, dir, table, kind) { tmp =>
+        counted(kind)(build).write.mode("overwrite").parquet(tmp.toString)
+      }
+      read(spark.read.parquet(p.toString))
+    }
+
+  /** Durable directory of `kind` over `table` that `write` fills with
+    * files of its own (a copy of the table in an interchange format, a
+    * stream-source replay): the session tier over the publication, so
+    * a hot run reads it without restaging. Returns the directory.
+    */
+  def staged(spark: SparkSession, kind: String, dir: String, table: String)(
+      write: Path => Unit): String =
+    served(spark, kind, dir, Seq(table)) { _ =>
+      publish(spark, dir, table, kind)(tmp => counted(kind)(write(tmp))).toString
     }
 
   /** Durable index of `kind` over `table` as a frame: always a plain
@@ -166,26 +181,32 @@ object ArtifactStore {
     new Path(new Path(root(spark), kind),
       digest(Tables.fingerprint(spark, corpusDir, table)))
 
-  /** Reload a complete publication of (kind, corpus-table state), or
-    * run `build`, publish atomically, and read back.
+  /** The one publish protocol of (kind, corpus-table state): unless a
+    * complete publication exists, `write` fills a hidden sibling temp
+    * directory, which gets a `_SUCCESS` marker if the writer left none,
+    * replaces a crashed writer's half-artifact and is renamed into
+    * place. A lost publish race defers to the winner (same corpus
+    * state, same content). Returns the publication's directory.
     */
-  private def loadOrBuild(
+  private[graft] def publish(
       spark: SparkSession, corpusDir: String, table: String, kind: String)(
-      build: => DataFrame): DataFrame = {
+      write: Path => Unit): Path = {
     val p = artifactPath(spark, corpusDir, table, kind)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val success = new Path(p, "_SUCCESS")
     if (!fs.exists(success)) {
       val tmp = new Path(p.getParent,
         s".${p.getName}.inprogress-${java.util.UUID.randomUUID()}")
-      build.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(p)) fs.delete(p, true) // crashed writer's half-artifact
+      write(tmp)
+      val marker = new Path(tmp, "_SUCCESS")
+      if (!fs.exists(marker)) fs.create(marker, true).close()
+      if (fs.exists(p)) fs.delete(p, true)
       if (!fs.rename(tmp, p)) {
         fs.delete(tmp, true)
         if (!fs.exists(success))
           throw new IllegalStateException(s"artifact publish failed: $p")
       }
     }
-    spark.read.parquet(p.toString)
+    p
   }
 }

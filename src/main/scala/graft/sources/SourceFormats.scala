@@ -1,7 +1,6 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,19 +17,16 @@ import org.apache.spark.sql.functions._
   * hash-match PROVES the encode→decode roundtrip is lossless —
   * fields, types, and every character — not merely row-count-equal.
   *
-  * Staging is once per (corpus, `documents` state, format) per JVM
-  * (same memo contract as the streaming replay's staged dir): re-runs
+  * Each format's copy is a durable [[ArtifactStore.staged]]
+  * publication (`staged-<fmt>-v1`) over the `documents` state: re-runs
   * measure read+aggregate, the write is the one-time cost, and an
   * in-place rewrite of `documents` restages.
   */
 object SourceFormats {
 
-  private val staged = TrieMap.empty[(String, String, String), String]
-
   private def stage(spark: SparkSession, dir: String, fmt: String): String =
-    staged.getOrElseUpdate((dir, Tables.fingerprint(spark, dir, "documents"), fmt), {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_src_$fmt").toString
+    ArtifactStore.staged(spark, s"staged-$fmt-v1", dir, "documents") { path =>
+      val tmp = path.toString
       val docs = Tables.table(spark, dir, "documents")
       fmt match {
         case "jsonl" => docs.write.mode("overwrite").json(tmp)
@@ -59,14 +55,14 @@ object SourceFormats {
           // A mere TYPE mismatch is not enough: the native source
           // nulls the field and keeps the row; only structural
           // malformation reaches the corrupt column.
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(tmp, "part-zz-corrupt.xml"),
-            ("<docs><doc _doc_id=\"-12345\" _lang=\"xx\" " +
+          val out = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .create(new Path(path, "part-zz-corrupt.xml"))
+          try out.write(("<docs><doc _doc_id=\"-12345\" _lang=\"xx\" " +
               "_source=\"corrupt\" _n_chars=\"7\"><text>truncated shard" +
               "</docs>").getBytes("UTF-8"))
+          finally out.close()
       }
-      tmp
-    })
+    }
 
   private[graft] def fingerprinted(back: DataFrame): DataFrame =
     back
@@ -163,12 +159,6 @@ object SourceFormats {
         col("text"))
     fingerprinted(back)
   }
-
-  /** Staged-dir lookup for the spec (the corpus must already have
-    * been staged by the gate query). */
-  private[graft] def stagedPathForTest(
-      spark: SparkSession, dir: String, fmt: String): String =
-    staged((dir, Tables.fingerprint(spark, dir, "documents"), fmt))
 
   /** The PERMISSIVE attribute-shape read, exposed for the spec's
     * corrupt-row count pin. */

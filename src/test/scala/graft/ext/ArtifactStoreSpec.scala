@@ -184,14 +184,17 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(ArtifactStore.builds(churn) == 21, "past 16 entries the kind clears")
   }
 
-  test("no hand-rolled memo under graft/ext: no TrieMap, no getOrElseUpdate") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft/ext")
-    val files = {
+  test("no hand-rolled memo under graft/ext, sources or streaming: no TrieMap") {
+    // sources/pdf is exempt: its per-document object caches are not memos
+    val pdf = java.nio.file.Paths.get("src/main/scala/graft/sources/pdf")
+    val files = List("ext", "sources", "streaming").flatMap { d =>
+      val root = java.nio.file.Paths.get(s"src/main/scala/graft/$d")
       val it = Files.walk(root).iterator()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .filter(_.toString.endsWith(".scala")).toList
+      val found = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(f => f.toString.endsWith(".scala") && !f.startsWith(pdf)).toList
+      assert(found.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+      found
     }
-    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
     val offenders = for {
       f <- files
       (line, i) <- Files.readAllLines(f).toArray(Array.empty[String]).zipWithIndex

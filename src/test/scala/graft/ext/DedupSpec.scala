@@ -35,29 +35,66 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(ngram == minhash)
   }
 
-  test("verify tier is heavyDf-invariant: all-light and all-heavy splits agree") {
-    // Round 17 (ADVICE r16): the hybrid intersection count routes
-    // shingles above the corpus-df bound through a candidate-anchored
-    // arm instead of the quadratic self-join. The split must be
-    // invisible in the output at ANY bound — pin the two extremes
-    // (heavyDf = MaxValue: pure self-join, the r16 shape; heavyDf = 1:
-    // every df>1 shingle on the candidate-anchored arm) against each
-    // other through a real caller's candidate set.
+  private def triples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** Every (doc_a < doc_b) pair of `d`'s documents. */
+  private def allPairs(d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val ids = docs.select(col("doc_id"))
-    val candidates = ids.toDF("doc_a")
-      .crossJoin(ids.toDF("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-    def run(heavyDf: Long): Set[(Long, Long, Double)] =
-      Dedup.verifyJaccardPairsAt(spark, dir, candidates, heavyDf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val allLight = run(Long.MaxValue)
-    val allHeavy = run(1L)
-    assert(allLight.nonEmpty, "gate corpus must exercise the verify tier")
-    assert(allLight == allHeavy)
-    // and the production bound agrees with both
-    assert(run(Dedup.VerifyHeavyDf) == allLight)
+    val ids = spark.read.parquet(s"$d/documents.parquet").select(col("doc_id"))
+    ids.toDF("doc_a").crossJoin(ids.toDF("doc_b")).filter(col("doc_a") < col("doc_b"))
+  }
+
+  test("verify tier is heavyDf-invariant: all-light and all-heavy splits agree") {
+    // The exact |A∩B| kernel routes shingles above the corpus-df bound
+    // through a candidate-anchored arm instead of the quadratic
+    // self-join. The split must be invisible in the output at ANY
+    // bound — pin the two extremes (heavyDf = MaxValue: pure
+    // self-join; heavyDf = 1: every df>1 shingle on the
+    // candidate-anchored arm) and the production bound against each
+    // other, in both forms of the kernel: symmetric (Jaccard, through
+    // a real caller's candidate set) and directed (containment).
+    val candidates = allPairs(dir)
+    val forms: Seq[(String, Long => Set[(Long, Long, Double)])] = Seq(
+      "symmetric" -> (h => triples(Dedup.verifyJaccardPairsAt(spark, dir, candidates, h))),
+      "directed" -> (h => triples(Dedup.dedupContainmentAt(spark, dir, h))))
+    for ((form, run) <- forms) {
+      val allLight = run(Long.MaxValue)
+      val allHeavy = run(1L)
+      assert(allLight.nonEmpty, s"$form: gate corpus must exercise the verify tier")
+      assert(allLight == allHeavy, form)
+      // and the production bound agrees with both
+      assert(run(Dedup.VerifyHeavyDf) == allLight, form)
+    }
+  }
+
+  test("hub corpus: a shingle in more than VerifyHeavyDf docs takes the hybrid " +
+    "arm at the production bound and changes no output") {
+    import spark.implicits._
+    // 95 docs share a 10-word boilerplate sentence: its 8 shingles
+    // have df 95 > VerifyHeavyDf. Twins add one word to a base doc;
+    // the short docs are mostly boilerplate, so their qualifying pairs
+    // (containment 8/9 into every doc, Jaccard 8/10 among themselves)
+    // are counted on the heavy arm alone.
+    val boiler = "all rights reserved by the publisher and its licensors worldwide"
+    def own(i: Int) = (0 until 6).map(k => s"w${i}x$k").mkString(" ")
+    val texts = (0 until 80).map(i => (i.toLong, s"$boiler ${own(i)}")) ++
+      (0 until 10).map(i => (1000L + i, s"$boiler ${own(i)} extra")) ++
+      (0 until 5).map(i => (2000L + i, s"$boiler z$i"))
+    val hub = java.nio.file.Files.createTempDirectory("dedup-hub").toString
+    texts.toDF("doc_id", "text").write.parquet(s"$hub/documents.parquet")
+    def hybrid(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("FullOuter"), s"the production bound must take the hybrid:\n$plan")
+      triples(df)
+    }
+    val containment = hybrid(Dedup.dedupContainment(spark, hub))
+    assert(containment.count(_._1 >= 2000L) == 5 * 94)
+    assert(containment == triples(Dedup.dedupContainmentAt(spark, hub, Long.MaxValue)))
+    val ngram = hybrid(Dedup.dedupNgram(spark, hub))
+    assert(ngram.count(_._1 >= 2000L) == 10)
+    assert(ngram.size == 20)
+    assert(ngram == triples(Dedup.verifyJaccardPairsAt(spark, hub, allPairs(hub), Long.MaxValue)))
   }
 
   test("embedding grid stays correct and balanced under skewed ids") {

@@ -353,6 +353,49 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
+  test("dedup verify tier: building dedup_containment and dedup_sorted_nbhd " +
+    "over a warm index starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    /** Call sites of the jobs `body` starts on this thread. */
+    def jobsDuring(body: => Unit): List[String] = {
+      val group = s"verify-build-${java.util.UUID.randomUUID()}"
+      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            started.add(e.stageInfos.map(_.name).mkString("; "))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        try body finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.ListenerDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+      started.toArray(Array.empty[String]).toList
+    }
+    // warms the shingle-postings index and its max-df scalar
+    graft.ext.Dedup.dedupContainment(spark, dir)
+    // Spark resolves a parquet table's schema with a footer-read job;
+    // dedup_sorted_nbhd reads `documents` once, the index is memoized
+    val tableRead = jobsDuring(graft.sources.Tables.table(spark, dir, "documents"))
+    var built = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsDuring {
+      built = Seq(graft.ext.Dedup.dedupContainment(spark, dir),
+        graft.ext.Dedup.dedupSortedNeighborhood(spark, dir))
+    }
+    assert(jobs == tableRead, s"jobs beyond the documents schema read: $jobs")
+    // the gate corpus's max df is below VerifyHeavyDf: the plain
+    // self-join count, no hybrid full-outer join, no checkpointed scan
+    for (df <- built) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("FullOuter"), plan)
+      assert(!plan.contains("ExistingRDD"), plan)
+    }
+  }
+
   test("dedup_sorted_nbhd: no global window — every window is block-partitioned") {
     val df = graft.ext.Dedup.dedupSortedNeighborhood(spark, dir)
     val plan = df.queryExecution.executedPlan.toString

@@ -43,7 +43,7 @@ class SourceFormatsSpec extends AnyFunSuite with SparkTestBase {
     // drive the gate query first so the attribute corpus (incl. the
     // malformed shard) is staged
     SourceFormats.sourceXmlAttrs(spark, dir).collect()
-    val path = SourceFormats.stagedPathForTest(spark, dir, "xml_attrs")
+    val path = ArtifactStore.artifactPath(spark, dir, "documents", "staged-xml_attrs-v1").toString
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("_doc_id",
         org.apache.spark.sql.types.LongType),

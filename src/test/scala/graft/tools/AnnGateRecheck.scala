@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * come from the shipped `Dedup` constants, not duplicated literals
   * (ADVICE r11 #2).
   *
-  * Usage: runMain graft.tools.AnnGateRecheck <sfDir> <outJson>
+  * Usage: sbt "Test/runMain graft.tools.AnnGateRecheck <sfDir> <outJson>"
   * Prints one JSON line and writes it to outJson.
   */
 object AnnGateRecheck {

@@ -38,7 +38,7 @@ import org.apache.spark.sql.SparkSession
   * gives the non-empty parity evidence: recall holds at BOTH scales
   * on the SAME planted relation shape.
   *
-  * Usage: runMain graft.tools.AnnHiPlanted <sfDir> <outJson>
+  * Usage: sbt "Test/runMain graft.tools.AnnHiPlanted <sfDir> <outJson>"
   * Prints one JSON line and writes it to outJson.
   */
 object AnnHiPlanted {
