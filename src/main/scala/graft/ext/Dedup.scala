@@ -1988,6 +1988,11 @@ object Dedup {
       .filter(col("y").isNotNull)
       .select(least(col("x"), col("y")).as("doc_a"),
         greatest(col("x"), col("y")).as("doc_b"))
+      // never null (y is not); stated so that the three consumers in
+      // the verify tier (two `cdocs` branches, the candidate semi-join)
+      // do not each infer a different not-null filter, which would
+      // plan this window subtree three times instead of reusing it
+      .filter(col("doc_a").isNotNull && col("doc_b").isNotNull)
       .distinct()
     verifyJaccardPairs(spark, dir, cands)
   }

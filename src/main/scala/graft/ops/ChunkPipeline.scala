@@ -21,7 +21,8 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *   - running file offset `:483-485` -> window prefix-sum (C3)
   *   - per-file aggregate `:487-503` -> `groupBy(path).agg`, or the
   *     in-task [[fileStatsOf]] fold (A1)
-  *   - corpus totals + SUM TOTAL row `:130-164` -> `rollup` (A2/U1)
+  *   - corpus totals + SUM TOTAL row `:130-164` -> `rollup` (A2/U1),
+  *     ordered inside the one partition the CSV sink writes
   *
   * Two shapes share the splitter and the normalization:
   *   - ingestion ([[chunk]] + [[chunkMetrics]]) keeps one row per
@@ -33,7 +34,9 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *     unnecessary.
   *   - stats ([[fileStatsOf]], driven by [[graft.Engine.fileStats]])
   *     folds each file to its row inside the scan task: no window, no
-  *     shuffle, no join; only the [[statsWithTotal]] rollup is global.
+  *     shuffle, no join, and a one-pass [[Normalize.normalize]] per
+  *     chunk; only the [[statsWithTotal]] rollup is global, and its
+  *     exchange is the report's only one.
   */
 object ChunkPipeline {
 
@@ -118,6 +121,12 @@ object ChunkPipeline {
     * grand-total row labeled `SUM TOTAL` and ordered last
     * (`pdf_reader.py:154-164` append-last invariant). The total ratio
     * is ratio-of-sums, NOT mean-of-ratios (`pdf_reader.py:148`).
+    *
+    * The report is one row per file, and its sinks write one file, so
+    * it is ordered in a single partition (`coalesce(1)` +
+    * `sortWithinPartitions`): the rollup's exchange stays the only one
+    * and the last stage boundary, so the scan keeps its parallelism,
+    * and no range-partitioning sample job or sort shuffle runs.
     */
   def statsWithTotal(stats: Dataset[FileStats]): DataFrame = {
     stats.toDF()
@@ -133,7 +142,8 @@ object ChunkPipeline {
         when(col("text_size") === 0, lit(null).cast("double"))
           .otherwise(col("file_size").cast("double") / col("text_size")))
       .withColumn("path", coalesce(col("path"), lit("SUM TOTAL")))
-      .orderBy(col("is_total"), col("path"))
+      .coalesce(1)
+      .sortWithinPartitions(col("is_total"), col("path"))
       .drop("is_total")
   }
 

@@ -1,7 +1,6 @@
 package graft.ops
 
 import java.util.Locale
-import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -21,9 +20,11 @@ import org.apache.spark.sql.functions._
   * `lower`, used by the ingestion shape's `chunkMetrics`) and as a
   * pure String function — the stats hot path, where
   * `ChunkPipeline.fileStatsOf` measures every chunk inside the scan
-  * task. The two forms agree, and so do their lengths when the String
-  * form is measured in code points (Spark's `length`); `PipelineSpec`
-  * pins both on non-ASCII text.
+  * task. The String form runs no regex: steps 1-3 are one left-to-right
+  * pass, then one lowercase. The two forms agree, and so do their
+  * lengths when the String form is measured in code points (Spark's
+  * `length`); `NormalizeSpec` pins the pass against the regex chain and
+  * `PipelineSpec` pins both forms on non-ASCII text.
   */
 object Normalize {
 
@@ -36,15 +37,37 @@ object Normalize {
           "\\n+", " "),
         "\\\\u[0-9a-fA-F]{4}", ""))
 
-  private val blankLines = Pattern.compile("\n{2,}")
-  private val newlines = Pattern.compile("\n+")
-  private val unicodeEscape = Pattern.compile("\\\\u[0-9a-fA-F]{4}")
-
-  /** Pure form — identical semantics to [[normalizeCol]]. */
+  /** Pure form — identical semantics to [[normalizeCol]]. One pass can
+    * do steps 1-3 because neither creates a match for another: a
+    * newline run becomes a space, never part of an escape, and an
+    * escape skipped between two newline runs leaves two spaces, as the
+    * chain does, which collapses newlines before removing escapes.
+    */
   def normalize(s: String): String = {
-    val a = blankLines.matcher(s).replaceAll("\n")
-    val b = newlines.matcher(a).replaceAll(" ")
-    val c = unicodeEscape.matcher(b).replaceAll("")
-    c.toLowerCase(Locale.ROOT)
+    val n = s.length
+    val out = new java.lang.StringBuilder(n)
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == '\n') {
+        out.append(' ')
+        i += 1
+        while (i < n && s.charAt(i) == '\n') i += 1
+      } else if (c == '\\' && isEscapeAt(s, i)) i += 6
+      else {
+        out.append(c)
+        i += 1
+      }
+    }
+    out.toString.toLowerCase(Locale.ROOT)
   }
+
+  /** `s(i)` is a backslash: is `s(i..i+5)` a `\uXXXX` escape? */
+  private def isEscapeAt(s: String, i: Int): Boolean =
+    i + 5 < s.length && s.charAt(i + 1) == 'u' &&
+      isHex(s.charAt(i + 2)) && isHex(s.charAt(i + 3)) &&
+      isHex(s.charAt(i + 4)) && isHex(s.charAt(i + 5))
+
+  private def isHex(c: Char): Boolean =
+    (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
 }

@@ -55,9 +55,14 @@ object FileSources {
   /** S1 + S2: recursive directory scan with extension filter pushed to
     * the listing (the reference's `os.walk` + lowercase-endswith,
     * `/root/reference/pdf_reader.py:327-359`), file size for free.
-    * `binaryFile` partitions the listing across tasks by size packing —
-    * the reference's LPT big-files-first heuristic (O1,
-    * `pdf_reader.py:361-388`) is subsumed by task scheduling.
+    * `binaryFile` partitions the listing across tasks by Spark's
+    * next-fit size packing, which does NOT reproduce the reference's
+    * LPT big-files-first heuristic (O1, `pdf_reader.py:361-388`): files
+    * are taken largest first, but each costs its length plus a 4 MB
+    * open cost, and on a corpus of many small files that cost lifts
+    * the split cap to 128 MB, so the largest files share one task.
+    * Spark has no per-read option for this; the split size comes only
+    * from session confs (ROADMAP A).
     */
   def binaryFiles(spark: SparkSession, root: String, glob: String = "*.txt"): DataFrame =
     spark.read.format("binaryFile")

@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.util.Locale
+import java.util.regex.Pattern
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -37,5 +40,36 @@ class NormalizeSpec extends AnyFunSuite with SparkTestBase {
     val df = ins.toDF("s")
     val got = df.select(Normalize.normalizeCol($"s")).as[String].collect()
     assert(got.toSeq == ins.map(Normalize.normalize))
+  }
+
+  /** The reference's three-regex chain, as the String form ran it
+    * before it became one pass.
+    */
+  private def regexChain(s: String): String = {
+    val a = Pattern.compile("\n{2,}").matcher(s).replaceAll("\n")
+    val b = Pattern.compile("\n+").matcher(a).replaceAll(" ")
+    val c = Pattern.compile("\\\\u[0-9a-fA-F]{4}").matcher(b).replaceAll("")
+    c.toLowerCase(Locale.ROOT)
+  }
+
+  test("one-pass normalize equals the regex chain on seeded random strings") {
+    val pieces = Array(
+      "\n", "\n\n", "\n\n\n\n",
+      "\\u0041", "\\uBEEF", "\\uabcd", "\\u00e9", // escapes
+      "\\u", "\\u0", "\\u00", "\\u004", "\\u00GG", "\\U0041", "\\ug041",
+      "\\u12 ", "\\x0041", "\\", "u", "\\\\u0041", "\\\\", // near misses
+      "0", "9", "a", "f", "F", "g", "G", "Z", " ", ".",
+      "\u0130", "\u03a3", "\u1e9e", "\u01c5", "\r", "\t", "\r\n",
+      "\uD835\uDC00", "\uD835", "\uDC00") // paired and lone surrogates
+    val rnd = new scala.util.Random(20261019L)
+    for (_ <- 0 until 120000) {
+      val sb = new StringBuilder
+      for (_ <- 0 until rnd.nextInt(16))
+        sb ++= pieces(rnd.nextInt(pieces.length))
+      val s = sb.toString
+      assert(Normalize.normalize(s) == regexChain(s),
+        "input=" + s.flatMap(c =>
+          if (c < 0x20 || c > 0x7e || c == '\\') "\\u" + "%04x".format(c.toInt) else c.toString))
+    }
   }
 }

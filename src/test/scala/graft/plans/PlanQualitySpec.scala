@@ -3,6 +3,9 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.SparkTestBase
 
@@ -406,6 +409,15 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("Window"), plan)
   }
 
+  test("dedup_sorted_nbhd: the candidate window runs once, its exchange reused") {
+    val df = graft.ext.Dedup.dedupSortedNeighborhood(spark, dir)
+    df.collect()
+    // the verify tier reads the candidate pairs three times; the final
+    // adaptive plan runs the window once and reuses its exchange
+    val plan = df.queryExecution.executedPlan
+    assert(FinalPlan.collect(plan) { case w: WindowExec => w }.size == 1, plan)
+  }
+
   test("corpus_overlap: signature mins partial-aggregate map-side") {
     val df = graft.ext.Dedup.corpusOverlap(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
@@ -458,10 +470,10 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     // exactly two hash exchanges: one hash-partition on path feeding
     // BOTH the offset window and the per-file aggregate (a third
-    // would mean the agg re-shuffled), plus the rollup's re-agg;
-    // the only other exchange is the final presentation sort
+    // would mean the agg re-shuffled), plus the rollup's re-agg; the
+    // report is ordered inside its one output partition, no range sort
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2, plan)
-    assert("Exchange rangepartitioning".r.findAllIn(plan).size == 1, plan)
+    assert("Exchange rangepartitioning".r.findAllIn(plan).isEmpty, plan)
   }
 
   test("rewrite does NOT fire when the rank column is observed") {
@@ -1006,4 +1018,23 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(!plan.contains("Exchange"), plan)
     assert(stats.collect().map(_.pages).sorted.toSeq == Seq(1L, 2L))
   }
+
+  test("Engine.report: the rollup's exchange is the only one, no range sort") {
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val root = java.nio.file.Files.createTempDirectory("reportplan")
+    for ((name, text) <- Seq("c.pdf" -> "three", "a.pdf" -> "one", "b.pdf" -> "two"))
+      java.nio.file.Files.write(root.resolve(name), PdfFixtures.classicPdf(Seq(text)))
+    val report = graft.Engine.report(spark, root.toString,
+      graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor))
+    val rows = report.collect().map(_.getString(0)).toSeq
+    assert(rows == Seq("a.pdf", "b.pdf", "c.pdf", "SUM TOTAL"))
+    val plan = report.queryExecution.executedPlan
+    assert(FinalPlan.collect(plan) { case e: Exchange => e }.size == 1, plan)
+    assert(!plan.toString.contains("rangepartitioning"), plan)
+  }
 }
+
+/** Walks an executed adaptive plan's final stages (a reused exchange is
+  * a leaf there, so each planned subtree counts once).
+  */
+private object FinalPlan extends AdaptiveSparkPlanHelper
