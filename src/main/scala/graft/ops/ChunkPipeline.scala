@@ -34,9 +34,10 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *     unnecessary.
   *   - stats ([[fileStatsOf]], driven by [[graft.Engine.fileStats]])
   *     folds each file to its row inside the scan task: no window, no
-  *     shuffle, no join, and a one-pass [[Normalize.normalize]] per
-  *     chunk; only the [[statsWithTotal]] rollup is global, and its
-  *     exchange is the report's only one.
+  *     shuffle, no join, and each chunk's normalized length counted in
+  *     one pass that builds no String ([[Normalize.normalizedLength]]);
+  *     only the [[statsWithTotal]] rollup is global, and its exchange is
+  *     the report's only one.
   */
 object ChunkPipeline {
 
@@ -222,7 +223,8 @@ object ChunkPipeline {
     * documented deviation from the reference's ZeroDivisionError,
     * SURVEY.md §7.4). A file with no pages (undecodable) has no row.
     * Chunk lengths are code points of the normalized chunk, the same
-    * count Spark's `length` gives in [[chunkMetrics]].
+    * count Spark's `length` gives in [[chunkMetrics]], counted without
+    * building the normalized chunk.
     * `unmappedFonts` sums the per-page counts: one entry per (page,
     * font resource) whose text was dropped as opaque — the
     * honest-telemetry flag for silently-empty CJK extractions.
@@ -235,9 +237,8 @@ object ChunkPipeline {
       var chunks = 0L
       var textSize = 0L
       for (p <- pages; c <- RecursiveCharacterSplitter.splitText(p.text, cfg)) {
-        val norm = Normalize.normalize(c)
         chunks += 1
-        textSize += norm.codePointCount(0, norm.length)
+        textSize += Normalize.normalizedLength(c)
       }
       Some(FileStats(path, pages.map(_.page).max + 1L, chunks, length, textSize,
         if (textSize == 0) None else Some(length.toDouble / textSize),

@@ -16,15 +16,20 @@ import org.apache.spark.sql.functions._
   *                                                     (`:399`)
   *   4. lowercase                                      (`:401`)
   *
-  * Exposed both as a `Column` transform (codegen'd `regexp_replace` +
-  * `lower`, used by the ingestion shape's `chunkMetrics`) and as a
-  * pure String function — the stats hot path, where
-  * `ChunkPipeline.fileStatsOf` measures every chunk inside the scan
-  * task. The String form runs no regex: steps 1-3 are one left-to-right
-  * pass, then one lowercase. The two forms agree, and so do their
-  * lengths when the String form is measured in code points (Spark's
-  * `length`); `NormalizeSpec` pins the pass against the regex chain and
-  * `PipelineSpec` pins both forms on non-ASCII text.
+  * Three forms:
+  *   - [[normalizeCol]], a `Column` transform (codegen'd
+  *     `regexp_replace` + `lower`), used by the ingestion shape's
+  *     `chunkMetrics`;
+  *   - [[normalizedLength]], the stats hot path: `ChunkPipeline.fileStatsOf`
+  *     only counts each chunk's normalized code points inside the scan
+  *     task, so it builds no String;
+  *   - [[normalize]], the String function, one left-to-right pass then
+  *     one lowercase; it is off the hot path and stays as the readable
+  *     twin of the other two (the benchmark's closed-form check and the
+  *     tests call it).
+  * All three agree, lengths in code points (Spark's `length`);
+  * `NormalizeSpec` pins the pass against the regex chain and the count
+  * against the pass, and `PipelineSpec` pins the forms on non-ASCII text.
   */
 object Normalize {
 
@@ -60,6 +65,36 @@ object Normalize {
       }
     }
     out.toString.toLowerCase(Locale.ROOT)
+  }
+
+  /** `normalize(s).codePointCount(...)` in one pass that builds nothing.
+    * Lowercasing keeps the code point count of every code point but
+    * U+0130 (`İ` becomes `i` + U+0307 under `Locale.ROOT`), and it never
+    * joins or splits a surrogate pair, so the count is taken on the
+    * chars the pass emits: a low surrogate right after an emitted high
+    * one joins it, even when a removed escape stood between them.
+    */
+  def normalizedLength(s: String): Int = {
+    val n = s.length
+    var len = 0
+    var afterHigh = false
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == '\n') {
+        len += 1
+        afterHigh = false
+        i += 1
+        while (i < n && s.charAt(i) == '\n') i += 1
+      } else if (c == '\\' && isEscapeAt(s, i)) i += 6
+      else {
+        if (!(afterHigh && Character.isLowSurrogate(c))) len += 1
+        if (c == '\u0130') len += 1
+        afterHigh = Character.isHighSurrogate(c)
+        i += 1
+      }
+    }
+    len
   }
 
   /** `s(i)` is a backslash: is `s(i..i+5)` a `\uXXXX` escape? */

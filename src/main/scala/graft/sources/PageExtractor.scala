@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.Page
 
@@ -55,12 +59,16 @@ object FileSources {
   /** S1 + S2: recursive directory scan with extension filter pushed to
     * the listing (the reference's `os.walk` + lowercase-endswith,
     * `/root/reference/pdf_reader.py:327-359`), file size for free.
-    * `binaryFile` partitions the listing across tasks by Spark's
-    * next-fit size packing, which does NOT reproduce the reference's
-    * LPT big-files-first heuristic (O1, `pdf_reader.py:361-388`): files
-    * are taken largest first, but each costs its length plus a 4 MB
-    * open cost, and on a corpus of many small files that cost lifts
-    * the split cap to 128 MB, so the largest files share one task.
+    * [[perFile]] selects only `path` and `length`, so Catalyst prunes
+    * `content` and the scan reads no file bytes: each file is read
+    * once, in the task that decodes it, and the length bound lives in
+    * [[perFile]]. `binaryFile` partitions the listing across tasks by
+    * Spark's next-fit size packing, which does NOT reproduce the
+    * reference's LPT big-files-first heuristic (O1,
+    * `pdf_reader.py:361-388`): files are taken largest first, but each
+    * costs its length plus a 4 MB open cost, and on a corpus of many
+    * small files that cost lifts the split cap to 128 MB, so the
+    * largest files share one task.
     * Spark has no per-read option for this; the split size comes only
     * from session confs (ROADMAP A).
     */
@@ -73,15 +81,36 @@ object FileSources {
   /** Files -> one decode per file: `f` sees each file's path, byte
     * length and extracted pages (in page order) inside the scan task,
     * so a per-file result needs no shuffle back to the file.
+    *
+    * The scan lists `path` and `length` only; the task reads each file
+    * through the session's Hadoop FileSystem into one array of exactly
+    * `length` bytes, with none of the copies a `content` column makes
+    * into and out of the scan's rows. With `content` pruned, `binaryFile`
+    * no longer checks `spark.sql.sources.binaryFile.maxLength`, so this
+    * does, failing the task with `binaryFile`'s own error.
     */
   def perFile[T: Encoder](files: DataFrame, extractor: PageExtractor)(
       f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): Dataset[T] = {
-    import files.sparkSession.implicits._
-    files.select(col("path"), col("length"), col("content"))
-      .as[(String, Long, Array[Byte])]
-      .flatMap { case (path, length, content) =>
-        f(path, length, extractor.extractDetailed(path, content))
+    val spark = files.sparkSession
+    import spark.implicits._
+    val hadoopConf = ColumnBridge.hadoopConfInTask(spark)
+    val maxLength = spark.conf.get(SQLConf.SOURCES_BINARY_FILE_MAX_LENGTH.key).toInt
+    files.select(col("path"), col("length")).as[(String, Long)]
+      .flatMap { case (path, length) =>
+        val bytes = readFile(new Path(path), length, hadoopConf(), maxLength)
+        f(path, length, extractor.extractDetailed(path, bytes))
       }
+  }
+
+  /** The whole file in one array of exactly `length` bytes. */
+  private def readFile(
+      path: Path, length: Long, conf: Configuration, maxLength: Int): Array[Byte] = {
+    val fs = path.getFileSystem(conf)
+    if (length > maxLength) throw ColumnBridge.fileTooLong(fs.getFileStatus(path), maxLength)
+    val bytes = new Array[Byte](length.toInt)
+    val in = fs.open(path)
+    try in.readFully(bytes) finally in.close()
+    bytes
   }
 
   /** Files -> typed pages through a [[PageExtractor]] (typed flatMap:

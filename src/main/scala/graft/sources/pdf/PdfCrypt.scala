@@ -31,6 +31,11 @@ final class PdfCrypt private (
     stmCfm: String,
     strCfm: String) {
 
+  // One MD5 and one AES-CBC cipher per document: a provider lookup
+  // costs more than hashing a key or decrypting a short string.
+  private lazy val md5 = MessageDigest.getInstance("MD5")
+  private lazy val aesCbc = Cipher.getInstance("AES/CBC/NoPadding")
+
   /** Decrypt a stream payload owned by object `num gen`. */
   def decryptStream(num: Int, gen: Int, bytes: Array[Byte]): Array[Byte] =
     decrypt(stmCfm, num, gen, bytes)
@@ -54,24 +59,22 @@ final class PdfCrypt private (
     * gen[2 LE] (+ "sAlT" for AES)), truncated to min(len+5, 16).
     */
   private def objectKey(num: Int, gen: Int, aes: Boolean): Array[Byte] = {
-    val md = MessageDigest.getInstance("MD5")
-    md.update(fileKey)
-    md.update(Array[Byte](
+    md5.update(fileKey)
+    md5.update(Array[Byte](
       (num & 0xff).toByte, ((num >> 8) & 0xff).toByte, ((num >> 16) & 0xff).toByte,
       (gen & 0xff).toByte, ((gen >> 8) & 0xff).toByte))
-    if (aes) md.update(PdfCrypt.AesSalt)
-    md.digest().take(math.min(fileKey.length + 5, 16))
+    if (aes) md5.update(PdfCrypt.AesSalt)
+    md5.digest().take(math.min(fileKey.length + 5, 16))
   }
 
   private def aesCbcDecrypt(key: Array[Byte], data: Array[Byte]): Array[Byte] = {
     if (data.isEmpty) return data
     if (data.length < 32 || data.length % 16 != 0)
       throw new PdfParseException(s"bad AES payload length ${data.length}")
-    val cipher = Cipher.getInstance("AES/CBC/NoPadding")
-    cipher.init(Cipher.DECRYPT_MODE,
+    aesCbc.init(Cipher.DECRYPT_MODE,
       new SecretKeySpec(key, "AES"),
       new IvParameterSpec(data, 0, 16))
-    val plain = cipher.doFinal(data, 16, data.length - 16)
+    val plain = aesCbc.doFinal(data, 16, data.length - 16)
     // strip PKCS#7 padding; a bad pad byte means the key was wrong —
     // fail the parse rather than return garbage text
     val pad = plain(plain.length - 1) & 0xff
@@ -242,6 +245,9 @@ object PdfCrypt {
     sha256.update(password); sha256.update(salt); sha256.update(udata)
     var k = sha256.digest()
     if (r == 5) return k
+    val sha2 = Array(sha256,
+      MessageDigest.getInstance("SHA-384"), MessageDigest.getInstance("SHA-512"))
+    val c = Cipher.getInstance("AES/CBC/NoPadding")
     var round = 0
     var lastByte = 0
     do {
@@ -255,7 +261,6 @@ object PdfCrypt {
       val k1 = new Array[Byte](unit.length * 64)
       var i = 0
       while (i < 64) { System.arraycopy(unit, 0, k1, i * unit.length, unit.length); i += 1 }
-      val c = Cipher.getInstance("AES/CBC/NoPadding")
       c.init(Cipher.ENCRYPT_MODE,
         new SecretKeySpec(k, 0, 16, "AES"),
         new IvParameterSpec(k, 16, 16))
@@ -263,12 +268,8 @@ object PdfCrypt {
       var sum = 0
       i = 0
       while (i < 16) { sum += e(i) & 0xff; i += 1 }
-      val algo = (sum % 3: @unchecked) match {
-        case 0 => "SHA-256"
-        case 1 => "SHA-384"
-        case 2 => "SHA-512"
-      }
-      k = MessageDigest.getInstance(algo).digest(e)
+      // sum % 3 picks SHA-256, SHA-384 or SHA-512
+      k = sha2(sum % 3).digest(e)
       lastByte = e(e.length - 1) & 0xff
     } while (round < 64 || lastByte > round - 32)
     k.take(32)
@@ -298,9 +299,8 @@ object PdfCrypt {
     if (r >= 3) {
       var i = 0
       while (i < 50) {
-        val m2 = MessageDigest.getInstance("MD5")
-        m2.update(hash, 0, keyLenBytes)
-        hash = m2.digest()
+        md.update(hash, 0, keyLenBytes)
+        hash = md.digest()
         i += 1
       }
     }

@@ -379,16 +379,18 @@ object PdfFixtures {
   /** One-page PDF with a caller-supplied font dictionary body (obj 5)
     * and raw content-stream operators — the shape for exercising
     * simple-font `/Encoding` variants (`/Differences`, named base
-    * encodings) end-to-end.
+    * encodings) end-to-end. `fontName` is the font's resource name as
+    * written in the file, `#` escapes included.
     */
-  def simpleFontPdf(contentOps: String, fontBody: String): Array[Byte] = {
+  def simpleFontPdf(
+      contentOps: String, fontBody: String, fontName: String = "F1"): Array[Byte] = {
     val o = new Out
     o << "%PDF-1.4\n%âãÏÓ\n"
     o.obj(1) { o << "<< /Type /Catalog /Pages 2 0 R >>" }
     o.obj(2) { o << "<< /Type /Pages /Kids [3 0 R] /Count 1 >>" }
     o.obj(3) {
       o << "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-        "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>"
+        s"/Resources << /Font << /$fontName 5 0 R >> >> /Contents 4 0 R >>"
     }
     o.streamObj(4, "", contentOps.getBytes(Ascii))
     o.obj(5) { o << fontBody }

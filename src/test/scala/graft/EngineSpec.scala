@@ -118,4 +118,41 @@ class EngineSpec extends AnyFunSuite with SparkTestBase {
     assert(got == 1) // Spark: code points, same as Python len
     assert(emoji.codePointCount(0, emoji.length) == 1)
   }
+
+  test("in-task reads give the rows the binaryFile content column gives") {
+    import graft.sources.{FileSources, PageExtractor}
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val dir = Files.createTempDirectory("engineread")
+    Files.write(dir.resolve("empty.pdf"), Array.emptyByteArray)
+    Files.write(dir.resolve("two.pdf"), PdfFixtures.classicPdf(Seq("one page", "two pages")))
+    Files.writeString(dir.resolve("a.txt"), "alpha beta gamma delta epsilon zeta")
+    Files.writeString(dir.resolve("odd name %41 #1.txt"), "one two three\ffour five")
+    Files.write(dir.resolve("empty.txt"), Array.emptyByteArray)
+    // the stats fold over binaryFile's own `content`, as before the
+    // scan stopped reading it
+    def viaContent(glob: String, ex: PageExtractor): Set[FileStats] =
+      FileSources.binaryFiles(spark, dir.toString, glob)
+        .select("path", "length", "content").collect()
+        .flatMap { r =>
+          graft.ops.ChunkPipeline.fileStatsOf(r.getString(0), r.getLong(1),
+            ex.extractDetailed(r.getString(0), r.getAs[Array[Byte]](2)), opts.split)
+        }.toSet
+    val pdfOpts = opts.copy(glob = "*.pdf", extractor = PdfTextExtractor)
+    val pdfs = Engine.fileStats(spark, dir.toString, pdfOpts).collect().toSet
+    assert(pdfs == viaContent("*.pdf", PdfTextExtractor))
+    assert(pdfs.map(_.path.split('/').last) == Set("two.pdf"))
+    val texts = Engine.fileStats(spark, dir.toString, opts).collect().toSet
+    assert(texts == viaContent("*.txt", graft.sources.PlainTextExtractor))
+    assert(texts.map(_.path.split('/').last).contains("odd name %41 #1.txt"))
+  }
+
+  test("a file over spark.sql.sources.binaryFile.maxLength fails the scan, as binaryFile does") {
+    val key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, "10")
+    val err = try intercept[Exception](Engine.fileStats(spark, root, opts).collect())
+      finally spark.conf.unset(key)
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage))
+    assert(messages.exists(_.contains("exceeds the max length allowed: 10")), err)
+  }
 }

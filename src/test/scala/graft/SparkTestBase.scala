@@ -28,6 +28,10 @@ object SparkTestBase {
       // the code under test)
       .config("spark.graft.artifactDir",
         java.nio.file.Files.createTempDirectory("graft-artifacts-test").toString)
+      // and a fresh warehouse: saved tables (bucketed layouts, published
+      // indexes) must not pile up in the checkout's spark-warehouse/
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse-test").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -52,24 +52,70 @@ class NormalizeSpec extends AnyFunSuite with SparkTestBase {
     c.toLowerCase(Locale.ROOT)
   }
 
-  test("one-pass normalize equals the regex chain on seeded random strings") {
-    val pieces = Array(
-      "\n", "\n\n", "\n\n\n\n",
-      "\\u0041", "\\uBEEF", "\\uabcd", "\\u00e9", // escapes
-      "\\u", "\\u0", "\\u00", "\\u004", "\\u00GG", "\\U0041", "\\ug041",
-      "\\u12 ", "\\x0041", "\\", "u", "\\\\u0041", "\\\\", // near misses
-      "0", "9", "a", "f", "F", "g", "G", "Z", " ", ".",
-      "\u0130", "\u03a3", "\u1e9e", "\u01c5", "\r", "\t", "\r\n",
-      "\uD835\uDC00", "\uD835", "\uDC00") // paired and lone surrogates
-    val rnd = new scala.util.Random(20261019L)
-    for (_ <- 0 until 120000) {
+  /** Pieces of the seeded generator: newline runs, escapes and near
+    * misses, and chars whose lowercase or surrogate pairing matters.
+    */
+  private val pieces = Array(
+    "\n", "\n\n", "\n\n\n\n",
+    "\\u0041", "\\uBEEF", "\\uabcd", "\\u00e9", // escapes
+    "\\u", "\\u0", "\\u00", "\\u004", "\\u00GG", "\\U0041", "\\ug041",
+    "\\u12 ", "\\x0041", "\\", "u", "\\\\u0041", "\\\\", // near misses
+    "0", "9", "a", "f", "F", "g", "G", "Z", " ", ".",
+    "\u0130", "\u03a3", "\u1e9e", "\u01c5", "\r", "\t", "\r\n",
+    "\uD835\uDC00", "\uD835", "\uDC00") // paired and lone surrogates
+
+  /** `n` seeded strings of up to 15 random pieces. */
+  private def randomStrings(seed: Long, n: Int): Iterator[String] = {
+    val rnd = new scala.util.Random(seed)
+    Iterator.fill(n) {
       val sb = new StringBuilder
       for (_ <- 0 until rnd.nextInt(16))
         sb ++= pieces(rnd.nextInt(pieces.length))
-      val s = sb.toString
-      assert(Normalize.normalize(s) == regexChain(s),
-        "input=" + s.flatMap(c =>
-          if (c < 0x20 || c > 0x7e || c == '\\') "\\u" + "%04x".format(c.toInt) else c.toString))
+      sb.toString
     }
+  }
+
+  private def show(s: String): String =
+    "input=" + s.flatMap(c =>
+      if (c < 0x20 || c > 0x7e || c == '\\') "\\u" + "%04x".format(c.toInt) else c.toString)
+
+  test("one-pass normalize equals the regex chain on seeded random strings") {
+    for (s <- randomStrings(20261019L, 120000))
+      assert(Normalize.normalize(s) == regexChain(s), show(s))
+  }
+
+  private def cpLength(s: String): Int = {
+    val n = Normalize.normalize(s)
+    n.codePointCount(0, n.length)
+  }
+
+  test("normalizedLength counts the code points of normalize on seeded random strings") {
+    for (s <- randomStrings(20261020L, 120000))
+      assert(Normalize.normalizedLength(s) == cpLength(s), show(s))
+  }
+
+  test("normalizedLength: surrogates joined across an escape, İ, newline runs, Σ") {
+    val cases = Seq(
+      "\uD835\\u0041\uDC00" -> 1, // escape removed: lone high + lone low join
+      "\uD835\uDC00" -> 1,
+      "\u0130" -> 2, // İ lowercases to i + U+0307
+      "A\u0130b" -> 4,
+      "\uD835\n\n\uDC00" -> 3, // a newline run keeps them apart
+      "\uD835\n\uDC00\uD835" -> 4,
+      "\u03a3" -> 1, "O\u03a3" -> 2, // final sigma: still one code point
+      "\uDC00\uD835" -> 2, // low then high: two lone code points
+      "" -> 0)
+    for ((s, want) <- cases) {
+      assert(cpLength(s) == want, show(s))
+      assert(Normalize.normalizedLength(s) == want, show(s))
+    }
+  }
+
+  test("U+0130 is the only code point whose Locale.ROOT lowercase is not one code point") {
+    val odd = (0 to Character.MAX_CODE_POINT).filter { cp =>
+      val l = new String(Character.toChars(cp)).toLowerCase(Locale.ROOT)
+      l.codePointCount(0, l.length) != 1
+    }
+    assert(odd == Seq(0x130))
   }
 }

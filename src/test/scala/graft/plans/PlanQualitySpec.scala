@@ -1016,6 +1016,9 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Window"), plan)
     assert(!plan.contains("Exchange"), plan)
+    // the scan lists files only; each task reads its file's bytes itself
+    val readSchemas = "ReadSchema: struct<[^>]*>".r.findAllIn(plan).toSeq
+    assert(readSchemas == Seq("ReadSchema: struct<path:string,length:bigint>"), plan)
     assert(stats.collect().map(_.pages).sorted.toSeq == Seq(1L, 2L))
   }
 

@@ -99,6 +99,71 @@ class PdfExtractorSpec extends AnyFunSuite with SparkTestBase {
     assert(text == "kerned pair\nHi!\u0000\nABC\nXy")
   }
 
+  test("one lexer parses a run of strings through its reused buffer; each PStr is exact") {
+    val big = ("x" * 1000 + "\\(") * 70 // over 64 KB, escapes across bulk runs
+    val bigWant = ("x" * 1000 + "(") * 70
+    val src =
+      "(a (nested (deep)) b) (back\\\\slash) (oct\\051al\\7z) " +
+        "(cr\\\r\ncontinued) (lf\\\ncontinued) (cr\\\ronly) <414> < 4 1 4 2 > " +
+        s"($big) () <> (never closed"
+    val lx = new PdfLexer(src.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    val want = Seq(
+      "a (nested (deep)) b", "back\\slash", "oct)al\u0007z",
+      "crcontinued", "lfcontinued", "cronly", "A@", "AB", bigWant, "", "")
+    val got = want.map(_ => lx.parseValue(allowRefs = false).asInstanceOf[PStr])
+    def latin1(p: PStr) = new String(p.bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
+    assert(got.map(latin1) == want)
+    assert(got.map(_.bytes.length) == want.map(_.length))
+    java.util.Arrays.fill(got.head.bytes, 0.toByte) // no sharing with the lexer or each other
+    assert(latin1(got(1)) == "back\\slash")
+    assert(latin1(got(8)) == bigWant)
+    intercept[PdfParseException](lx.parseValue(allowRefs = false))
+  }
+
+  test("names: #xx decodes only with two hex digits; any other # is literal") {
+    def name(s: String) = new PdfLexer(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+      .parseValue() match { case PName(n) => n; case other => fail(s"$other") }
+    assert(name("/A#41B") == "AAB")
+    assert(name("/A#zzB") == "A#zzB")
+    assert(name("/A#+4B") == "A#+4B")
+    assert(name("/A#-1B") == "A#-1B")
+    assert(name("/A#4") == "A#4")
+    assert(name("/A#") == "A#")
+  }
+
+  test("numbers read without a String equal String.toDouble; refs need `digits R`") {
+    def lexer(s: String) = new PdfLexer(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    for (tok <- Seq("0", "-0", "+5", "720", "-12", "007", "3.5", "-.5", ".5", "5.",
+        "123456789012345678", "-123456789012345678", "1234567890123456789",
+        "9007199254740993", "99999999999999999999999")) {
+      val got = lexer(tok).readNumber().value
+      assert(java.lang.Double.doubleToRawLongBits(got) ==
+        java.lang.Double.doubleToRawLongBits(tok.toDouble), tok)
+    }
+    intercept[NumberFormatException](lexer("-").readNumber())
+    intercept[NumberFormatException](lexer("1.2.3").readNumber())
+    val refs = Seq(
+      "12 0 R" -> PRef(12, 0), "12 00\nR" -> PRef(12, 0), "12 0 R/X" -> PRef(12, 0),
+      "12 0 Rx" -> PNum(12), "12 0a R" -> PNum(12), "1.5 0 R" -> PNum(1.5), "12 0" -> PNum(12),
+      "[1 2 3 R 4]" -> PArr(Vector(PNum(1), PRef(2, 3), PNum(4))))
+    for ((src, want) <- refs) assert(lexer(src).parseValue() == want, src)
+    val lx = lexer("12 0 Rx")
+    lx.parseValue()
+    assert(lx.readToken() == "0") // a failed ref lookahead consumes only the number
+    intercept[NumberFormatException](lexer("12 12345678901 R").parseValue())
+  }
+
+  test("a font resource named with #zz still resolves, and its page extracts") {
+    // the /Differences font maps Z -> ß, so the text shows whether the
+    // Tf name found the resource
+    val pdf = PdfFixtures.simpleFontPdf(
+      "BT /F#zz1 12 Tf 72 720 Td (aZb) Tj ET",
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Courier " +
+        "/Encoding << /Differences [ 90 /germandbls ] >> >>",
+      fontName = "F#zz1")
+    assert(PdfTextExtractor.extract("n.pdf", pdf).map(_._2) == Seq("aßb"))
+  }
+
   test("filter round-trips: ASCIIHex, ASCII85 (z runs, partial groups), LZW width boundaries") {
     val rnd = new scala.util.Random(31)
     val samples = Seq(
