@@ -129,6 +129,24 @@ object Bench {
         else Seq("target/bench.json", s"bench_run_$stampSec.json")
     }
 
+  /** Ambient-calibration probe: a FIXED synthetic job — seeded 1e8-row
+    * shuffle + hash agg, no data dependence, no disk reads after
+    * warm-up — timed at JVM start and recorded as `calib_s` in the
+    * artifact, so a reader comparing runs can normalize by it to
+    * separate code regressions from degraded-box windows. Callers take
+    * the min of 2 reps (the additive-noise argument of the hot
+    * statistic). `tools.CalibProbe` calls this too, on the same kind of
+    * session, so the probe times exactly the job the bench times.
+    */
+  private[graft] def calibRun(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 100000000L, 1L, 64)
+      .selectExpr("id % 1024 AS k", "id AS v")
+      .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
+      .count()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   // Locale.ROOT: the default locale could be decimal-comma → bad JSON.
   private[graft] def r3d(v: Double): String =
     if (v < 0) "-1"
@@ -136,7 +154,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 375 s default (round 16): the 270 s budget stopped fitting at 290
     // queries — the r15 round-head run completed 268/290 cold with zero
     // hot coverage. The driver's external timeout is bounded from below
@@ -158,16 +175,7 @@ object Bench {
       mainStart - uptimeNs + (deadlineSec * 1e9).toLong,
       mainStart + (150 * 1e9).toLong)
     def timeLeftSec: Double = (deadline - System.nanoTime()) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cores)
     // Silence WindowExec's "No Partition Defined for Window" WARN for
     // the bench run: it is a blanket heuristic, and every
     // unpartitioned window left in the engine runs on a relation
@@ -189,24 +197,6 @@ object Bench {
     spark.range(0, 1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
-    // Ambient-calibration probe (round 8, VERDICT r7 "what's wrong" #1
-    // cause B): a FIXED synthetic job — seeded 1e8-row shuffle + hash
-    // agg, no data dependence, no disk reads after warm-up — timed at
-    // JVM start and recorded as `calib_s` in the artifact. A reader
-    // comparing BENCH_rN across rounds can normalize by calib_s to
-    // separate code regressions from degraded-box windows (the r7
-    // bench ran in a ~2x-slow window that a judge A/B/A control had
-    // to reconstruct after the fact; now the artifact carries its own
-    // control). Min of 2 reps: same additive-noise argument as the
-    // hot statistic below.
-    def calibRun(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 100000000L, 1L, 64)
-        .selectExpr("id % 1024 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
     // optional comma-separated query filter: profile one query's cold
     // path in a fresh JVM without the full-suite warm-up ahead of it
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -273,7 +263,7 @@ object Bench {
     // 64-task shuffle/agg would JIT-warm exactly the paths that mode
     // exists to observe cold, and its degrade signal only matters for
     // full-suite deadline management.
-    val calibS = if (only.isDefined) -1.0 else math.min(calibRun(), calibRun())
+    val calibS = if (only.isDefined) -1.0 else math.min(calibRun(spark), calibRun(spark))
     // Nominal value of the same probe measured on a healthy, settled
     // box at round 8 (local[32], 128 GiB): 0.55 s (min of 2).
     // calib_ratio > ~1.5 means the box is degraded; the hot protocol

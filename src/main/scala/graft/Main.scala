@@ -70,16 +70,7 @@ object Main {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv)
-    val spark = SparkSession.builder()
-      .master(s"local[${args.parallelism}]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", args.parallelism)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, args)
+    run(GraftSession.start(args.parallelism), args)
   }
 
   private def run(spark: SparkSession, args: Args): Unit = {

@@ -178,13 +178,6 @@ object ChunkPipeline {
   def writeCsv(report: DataFrame, out: String): Unit =
     report.coalesce(1).write.option("header", "true").mode("overwrite").csv(out)
 
-  /** S7: JSON metadata sink (the reference's `--print_metadata`
-    * `json.dumps`, `pdf_reader.py:136-138`) — one JSON object per
-    * file-stats row.
-    */
-  def writeJson(stats: Dataset[graft.FileStats], out: String): Unit =
-    stats.coalesce(1).write.mode("overwrite").json(out)
-
   /** A1 with page-truth over a page Dataset and its [[chunkMetrics]]:
     * two aggregations joined on `path`, so the page source is
     * evaluated twice. [[graft.Engine.fileStats]] no longer uses it —

@@ -4,16 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import scala.util.Try
-
 /** Testdata table loaders (SURVEY.md §2.1 extension surface: parquet
   * relational scans).
   *
-  * `events.parquet` stores `ts` as parquet TIMESTAMP(NANOS), which
+  * `events.parquet` has stored `ts` as parquet TIMESTAMP(NANOS), which
   * Spark's TimestampType (µs) does not accept by default
-  * ([PARQUET_TYPE_ILLEGAL]). We read nanos as Long
-  * (`spark.sql.legacy.parquet.nanosAsLong`) and convert to a µs
-  * TimestampType column, keeping the raw nanos alongside.
+  * ([PARQUET_TYPE_ILLEGAL]). Every graft session reads nanos as Long:
+  * `spark.sql.legacy.parquet.nanosAsLong` is a session conf set by
+  * [[graft.GraftSession]] when the session is built, not patched here.
+  * [[events]] converts them to a µs TimestampType column, keeping the
+  * raw nanos alongside.
   */
 object Tables {
 
@@ -41,7 +41,6 @@ object Tables {
     * ns) and `ts_ns` as raw nanos-since-epoch.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    Try(spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     val raw = spark.read.parquet(s"$dir/events.parquet")
     // The generated table has shipped `ts` as parquet TIMESTAMP(NANOS)
     // (read as Long under nanosAsLong), TIMESTAMP(MICROS) without UTC

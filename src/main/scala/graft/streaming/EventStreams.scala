@@ -22,12 +22,13 @@ import graft.sources.{ArtifactStore, Tables}
 object EventStreams {
 
   /** Events-shaped streaming source over a parquet directory, with
-    * the same ns->timestamp normalization as the batch loader.
+    * the same ns->timestamp normalization as the batch loader. A nanos
+    * `ts` reads as Long because [[graft.GraftSession]] sets
+    * `spark.sql.legacy.parquet.nanosAsLong` on every session it builds.
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     // schema must be known up front for streaming reads; reuse the
     // batch loader's raw schema (ts read as nanos Long).
-    scala.util.Try(spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     val schema = spark.read.parquet(dir).schema
     val raw = spark.readStream.schema(schema).parquet(dir)
     // same three-flavor normalization as Tables.events: nanos-as-Long,
@@ -534,12 +535,6 @@ object EventStreams {
       copyEvents(spark, dir, file)
       // one sentinel row in the SOURCE schema (ts flavor varies by
       // generation): sample a row, rewrite user_id/event_id/ts.
-      // Save/restore the legacy-nanos conf around the build (ADVICE
-      // r14 — staging must not mutate session state as a side effect)
-      val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-      val nanosPrev = scala.util.Try(spark.conf.get(nanosKey)).toOption
-      scala.util.Try(spark.conf.set(nanosKey, "true"))
-      try {
       val raw = spark.read.parquet(file.toString)
       val marginNs = 2L * 3600L * 1000000000L
       val sentinel = raw.schema("ts").dataType match {
@@ -566,12 +561,6 @@ object EventStreams {
       if (!fs.rename(part, new Path(tmp, "01-flush.parquet")))
         throw new IllegalStateException(s"flush sentinel move failed: $part")
       fs.delete(flushTmp, true)
-      } finally {
-        nanosPrev match {
-          case Some(v) => scala.util.Try(spark.conf.set(nanosKey, v))
-          case None => scala.util.Try(spark.conf.unset(nanosKey))
-        }
-      }
     }
 
   /** Per-session gap timeout shared by [[sessionStats]] and the batch

@@ -1,40 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession}
 
-/** Standalone box-health probe (VERDICT r10 ask #7): the same fixed
-  * synthetic calibration job `Bench` times as `calib_s` (seeded 1e8-row
-  * shuffle + hash agg, min of 2 reps; healthy reference 0.55 s on this
-  * box class), runnable without the full bench so a round can cheaply
-  * poll for a healthy window before (re)publishing a round-head
-  * artifact. Prints one JSON line.
+/** Standalone box-health probe: the calibration job `Bench` times as
+  * `calib_s` ([[graft.Bench.calibRun]], min of 2 reps; healthy reference
+  * [[graft.Bench.CalibRefSec]]), runnable without the full bench so a
+  * round can cheaply poll for a healthy window before (re)publishing a
+  * round-head artifact. Its session is built like the bench's, so its
+  * `calib_s` compares with the bench's. Prints one JSON line.
   *
   * Usage: runMain graft.tools.CalibProbe
   */
 object CalibProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-calib-probe")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cores)
     spark.range(0, 1000).selectExpr("sum(id)").collect() // session warm-up
-    def rep(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 100000000L, 1L, 64)
-        .selectExpr("id % 1024 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Shared constants with graft.Bench (ADVICE r11 #3): the probe and
-    // the bench's own degraded flag can no longer drift apart.
-    val calib = math.min(rep(), rep())
-    val ref = graft.Bench.CalibRefSec
+    val calib = math.min(Bench.calibRun(spark), Bench.calibRun(spark))
+    val ref = Bench.CalibRefSec
     println(f"""{"calib_s":$calib%.3f,"calib_ref_s":$ref,""" +
-      s""""degraded":${calib > ref * graft.Bench.DegradedFactor}}""")
+      s""""degraded":${calib > ref * Bench.DegradedFactor}}""")
     spark.stop()
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.ChunkPipeline
 import graft.split.SplitConfig
 
@@ -89,12 +90,7 @@ object GoldenChunks {
   def main(args: Array[String]): Unit = {
     val out = args.head
     val sfDirs = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cores)
     writeFixture(spark, out, SplitConfig(chunkSize = 100, chunkOverlap = 0), sfDirs)
     // the overlap fixture rides along at its derived path
     val o20 = out.stripSuffix(".parquet") + "_o20.parquet"

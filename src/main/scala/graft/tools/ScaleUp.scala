@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scale-up corpus generator for the sf1.0 audit: derives a
   * factor-N corpus from an existing sf directory so the heavy
@@ -238,14 +238,7 @@ object ScaleUp {
     // ≤ 4 above — see MaxDigitAgreeHigh's soundness note).
     require(factor >= 1 && factor <= MaxReplicas,
       s"bad factor $factor (max $MaxReplicas, see comment)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaleup")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cores)
     import spark.implicits._
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))

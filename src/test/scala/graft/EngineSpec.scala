@@ -84,16 +84,6 @@ class EngineSpec extends AnyFunSuite with SparkTestBase {
     assert(Engine.sanitizeFolderPath("") == "folder")
   }
 
-  test("JSON metadata sink round-trips file stats (S7)") {
-    val out = java.nio.file.Files.createTempDirectory("enginejson").toString
-    val stats = Engine.fileStats(spark, root, opts)
-    graft.ops.ChunkPipeline.writeJson(stats, s"$out/meta")
-    val back = spark.read.json(s"$out/meta")
-    assert(back.count() == stats.count())
-    assert(back.columns.sorted.toSeq ==
-      Seq("chunks", "fileSize", "pages", "path", "ratio", "textSize", "unmappedFonts"))
-  }
-
   test("report shows basenames, not full paths (P2)") {
     val names = Engine.report(spark, root, opts)
       .collect().map(_.getString(0))

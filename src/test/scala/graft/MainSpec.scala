@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** CLI surface: per-root CSVs, arg validation (reference semantics,
   * pdf_reader.py:218-293).
   */
@@ -28,6 +30,22 @@ class MainSpec extends AnyFunSuite with SparkTestBase {
       val lines = Files.readAllLines(Paths.get(csv.head))
       assert(lines.get(lines.size - 1).startsWith("SUM TOTAL"))
     }
+  }
+
+  test("--print_metadata prints one JSON object per file (S7)") {
+    val root = mkRoot()
+    val out = Files.createTempDirectory("mainjson").toString
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed) {
+      Main.runWith(spark, Array(root, "4",
+        "--chunk_size", "10", "--output_dir", out, "--print_metadata"))
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val objects = printed.toString("UTF-8").linesIterator
+      .filter(_.startsWith("{")).map(mapper.readTree).toList
+    assert(objects.map(_.get("path").asText.split('/').last).sorted == Seq("x.txt", "y.txt"))
+    for (o <- objects) assert(o.fieldNames().asScala.toSeq.sorted ==
+      Seq("chunks", "fileSize", "pages", "path", "ratio", "textSize", "unmappedFonts"))
   }
 
   test("--file_type .pdf routes through the PDF codec end to end") {

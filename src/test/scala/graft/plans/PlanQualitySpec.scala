@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -1034,6 +1035,20 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     val plan = report.queryExecution.executedPlan
     assert(FinalPlan.collect(plan) { case e: Exchange => e }.size == 1, plan)
     assert(!plan.toString.contains("rangepartitioning"), plan)
+  }
+
+  test("a warm third pass over the operator_mix queries compiles at most 5 classes") {
+    // the codegen cache is sized by GraftSession.start; at Spark's 100
+    // entries each warm pass recompiles what the pass before evicted
+    val queries = Seq("dedup_containment", "dedup_sorted_nbhd", "graph_jaccard",
+      "sim_knn", "text_pmi", "layout_bucket")
+    def pass(): Unit = queries.foreach(q => graft.SparkEntry.queries(q)(spark, dir).collect())
+    pass() // builds the memos
+    pass() // warms the codegen cache
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled <= 5, s"a warm pass compiled $compiled classes")
   }
 }
 

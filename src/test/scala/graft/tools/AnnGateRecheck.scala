@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Re-derivation of the 0.45-threshold banding floor with the
   * round-10 Gaussian planes (ADVICE r10 #3).
   *
@@ -87,15 +89,7 @@ object AnnGateRecheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outJson = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-ann-gate-recheck")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cores)
 
     val c = measure(spark, sfDir)
     val json =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Non-vacuous parity arm for `dedup_embedding_ann_hi` (ADVICE r9 #1).
   *
@@ -126,14 +126,7 @@ object AnnHiPlanted {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outJson = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-annhi-planted")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cores)
     import spark.implicits._
 
     val src = graft.sources.Tables.table(spark, sfDir, "embeddings")
