@@ -51,10 +51,18 @@ object Engine {
   }
 
   /** Formatted report with the SUM TOTAL row last
-    * (`pdf_reader.py:151-171`).
+    * (`pdf_reader.py:151-171`), in one Spark job: the [[fileStats]]
+    * rows are collected, and the total, the order and the formatting
+    * run on the driver over a local relation, as the reference's main
+    * process totals its workers' rows (`pdf_reader.py:130-164`). The
+    * driver holds one row per file.
     */
   def report(spark: SparkSession, root: String, opts: Options = Options()): DataFrame =
-    ChunkPipeline.report(ChunkPipeline.statsWithTotal(fileStats(spark, root, opts)))
+    report(spark, fileStats(spark, root, opts).collect().toSeq)
+
+  /** The formatted report of per-file rows already on the driver. */
+  def report(spark: SparkSession, stats: Seq[FileStats]): DataFrame =
+    ChunkPipeline.report(ChunkPipeline.statsWithTotal(spark, stats))
 
   /** S4 + S8: per-root loop with sanitized per-root CSV names — the
     * reference writes one CSV per input folder

@@ -14,10 +14,12 @@ import graft.split.SplitConfig
   *   [--print_metadata] [--output_dir DIR]
   * }}}
   *
-  * Each root is processed independently (S4): console report, one CSV
-  * per root named from the sanitized root path (S8), optional JSON
-  * metadata dump (S7). Validation follows the reference: all dirs
-  * must exist, parallelism must be positive (`pdf_reader.py:283-291`).
+  * Each root is processed independently (S4), in the one Spark job of
+  * [[Engine.report]]: console report, one CSV per root named from the
+  * sanitized root path (S8), optional JSON metadata dump (S7), and the
+  * reference's closing ratio sentence (P11). Validation follows the
+  * reference: all dirs must exist, parallelism must be positive
+  * (`pdf_reader.py:283-291`).
   */
 object Main {
 
@@ -86,28 +88,42 @@ object Main {
       extractor = extractor)
     val t0 = System.nanoTime()
     for (root <- args.roots) {
-      // one pipeline execution feeds all sinks: stats are cached and
-      // the report/CSV/JSON all derive from them
-      val stats = Engine.fileStats(spark, root, opts).cache()
-      val report = graft.ops.ChunkPipeline.report(
-        graft.ops.ChunkPipeline.statsWithTotal(stats))
-      val nRows = stats.count().toInt + 1 // + SUM TOTAL
-      report.show(nRows, truncate = false) // S6 console sink, untruncated
+      // one Spark job per root, the one Engine.report runs: the per-file
+      // rows reach the driver, and the table, the metadata, the CSV and
+      // the summary all derive from them with no further job
+      val stats = Engine.fileStats(spark, root, opts).collect().toSeq
+      val report = Engine.report(spark, stats)
+      report.show(stats.size + 1, truncate = false) // S6 console sink, untruncated
       if (args.printMetadata) {
         import org.apache.spark.sql.functions.{struct, to_json, col}
-        // streamed partition-by-partition: the driver holds one
-        // partition of one-line JSON rows at a time, not the corpus
-        // (millions of files would OOM a collect() here)
-        stats.toDF().select(to_json(struct(col("*"))))
-          .toLocalIterator().forEachRemaining(r => println(r.getString(0)))
+        import spark.implicits._
+        spark.createDataset(stats).select(to_json(struct(col("*"))))
+          .collect().foreach(r => println(r.getString(0)))
       }
       val out = s"${args.outputDir}/${Engine.sanitizeFolderPath(root)}"
       graft.ops.ChunkPipeline.writeCsv(report, out)
-      stats.unpersist()
+      println(summary(stats))
       println(s"[graft] wrote $out")
     }
     println(f"[graft] total ${(System.nanoTime() - t0) / 1e9}%.2f s " +
       s"over ${args.roots.length} root(s)")
+  }
+
+  /** The reference's closing sentence (`pdf_reader.py:167-192`, SURVEY.md
+    * P11): the corpus ratio of sums and its `100 / total_ratio`
+    * extrapolation, the text that 100 MB of such files hold.
+    */
+  private[graft] def summary(stats: Seq[graft.FileStats]): String = {
+    val fileSize = stats.map(_.fileSize).sum
+    val textSize = stats.map(_.textSize).sum
+    if (textSize == 0)
+      s"[graft] ${stats.size} file(s) yielded no text, so there is no ratio to extrapolate."
+    else {
+      val ratio = fileSize.toDouble / textSize
+      ("[graft] %d file(s), %,d bytes, hold %,d characters of text: a ratio of %.2f, " +
+        "so 100 MB of such files hold about %.2f MB of text.")
+        .formatLocal(java.util.Locale.ROOT, stats.size, fileSize, textSize, ratio, 100 / ratio)
+    }
   }
 
   /** Test hook: run against an existing session. */

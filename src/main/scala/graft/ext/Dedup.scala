@@ -1332,7 +1332,7 @@ object Dedup {
     *
     * Scale shape: the edge relation is the DEDUP OUTPUT (≪ corpus),
     * so it is persisted across rounds (re-evaluating its lineage
-    * would re-run the MinHash tier per iteration); each round is one
+    * would re-read the pair index per iteration); each round is one
     * equi-join + min-aggregate on the label key, and the driver sees
     * only the changed-row COUNT. Near-dup components are
     * phrase-sharing families with tiny diameter, so propagation
@@ -1343,15 +1343,34 @@ object Dedup {
     * Iterations are capped (64) so a pathological graph terminates —
     * with path halving that covers astronomically deep components.
     *
-    * The labeling is an index: derived once per corpus state as a
-    * durable artifact and read by every downstream query
-    * (`pipeline_prep` reuses it), so a restarted driver reloads instead
-    * of re-running the MinHash pass + CC rounds.
+    * The index is the verified pair set ([[verifiedPairs]]), derived
+    * once per corpus state as a durable artifact, so a restarted driver
+    * reloads it instead of re-running the MinHash pass; the CC rounds
+    * run on every call.
     */
-  def dedupCluster(spark: SparkSession, dir: String): DataFrame =
-    ArtifactStore.frame(spark, "dedup-cluster-v1", dir, "documents") {
-      computeClusters(spark, dir)
-    }.orderBy("doc_id")
+  def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
+    val size = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
+    components(spark, dir)
+      .withColumn("cluster_size", count(lit(1)).over(size))
+      .orderBy("doc_id")
+  }
+
+  /** The component labeling `(doc_id, cluster_id)` of [[dedupCluster]]
+    * as a durable index, built once per corpus state: the `pipeline_*`
+    * queries join it to group near-dup families.
+    */
+  private[ext] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.frame(spark, "dedup-labels-v1", dir, "documents") {
+      components(spark, dir)
+    }
+
+  /** The verified near-dup pairs of [[dedupMinhash]], `(doc_a, doc_b)`:
+    * the durable index the components are labeled over.
+    */
+  private def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.frame(spark, "dedup-pairs-v1", dir, "documents") {
+      dedupMinhash(spark, dir).select(col("doc_a"), col("doc_b"))
+    }
 
   /** Iterative min-label propagation + path halving over a SYMMETRIC
     * edge set (cols `u`, `v`): returns one `(u, lbl)` row per node
@@ -1409,28 +1428,20 @@ object Dedup {
     labels
   }
 
-  private def computeClusters(spark: SparkSession, dir: String): DataFrame = {
+  /** `(doc_id, cluster_id)` over the [[verifiedPairs]] graph. */
+  private def components(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pairs = dedupMinhash(spark, dir).select(col("doc_a"), col("doc_b"))
-    // both edge directions from ONE pass over the pair tier: a
-    // two-branch union would re-evaluate the whole MinHash lineage
-    // per branch (no CSE across DataFrame branches)
-    val edges = pairs.as[(Long, Long)]
+    // both edge directions from ONE pass over the pair index
+    val edges = verifiedPairs(spark, dir).as[(Long, Long)]
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .toDF("u", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the labels are checkpointed, so their lineage no longer reads
+    // the edges; the rounds' superseded checkpoint blocks are freed by
+    // the context cleaner as each frame reference is dropped
     val labels = minLabelComponents(edges)
-    val size = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
-    // eager local checkpoint materializes the (dedup-output-scale)
-    // result; the loop rounds' checkpoint blocks are freed by the
-    // context cleaner as each superseded frame reference is dropped
-    val out = labels
-      .select(col("u").as("doc_id"), col("lbl").as("cluster_id"))
-      .withColumn("cluster_size", count(lit(1)).over(size))
-      .orderBy("doc_id")
-      .localCheckpoint(true)
     edges.unpersist()
-    out
+    labels.select(col("u").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
   /** Oracle: the same component labeling via a recursive CTE — every

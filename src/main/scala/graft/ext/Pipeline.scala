@@ -344,8 +344,9 @@ object PipelineOps {
     * Demonstrates that the operator families compose into the
     * pipeline the engine exists for, with the composition itself
     * under the hash gate. Every tier is the registered operator's
-    * own code path (`textQuality`, `sha2` grouping, `dedupCluster`),
-    * so this query cannot drift from its parts.
+    * own code path (`textQuality`, `sha2` grouping, and `dedupCluster`'s
+    * labeling via `Dedup.clusterLabels`), so this query cannot drift
+    * from its parts.
     */
   def pipelinePrep(spark: SparkSession, dir: String): DataFrame = {
     val quality = TextAnalysis.textQuality(spark, dir)
@@ -355,8 +356,7 @@ object PipelineOps {
       .groupBy(sha2(col("text"), 256))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    val clusters = Dedup.dedupCluster(spark, dir)
-      .select(col("doc_id"), col("cluster_id"))
+    val clusters = Dedup.clusterLabels(spark, dir)
     // canonical = the minimum id among the cluster's SURVIVING
     // members (docs outside any cluster are their own group): if the
     // component's global min-id doc was itself dropped by the
@@ -423,8 +423,7 @@ object PipelineOps {
     val scores = TextAnalysis.qualityLogreg(spark, dir)
       .select(col("doc_id"),
         expr("CAST(round(score * 1000000) AS BIGINT)").as("score_ppm"))
-    val clusters = Dedup.dedupCluster(spark, dir)
-      .select(col("doc_id"), col("cluster_id"))
+    val clusters = Dedup.clusterLabels(spark, dir)
     docs(spark, dir).select(col("doc_id"))
       .join(clusters, Seq("doc_id"), "left")
       .withColumn("family_id", coalesce(col("cluster_id"), col("doc_id")))
@@ -560,8 +559,7 @@ object PipelineOps {
     * a rowwise hash — nothing else.
     */
   def pipelineHoldout(spark: SparkSession, dir: String): DataFrame = {
-    val labels = Dedup.dedupCluster(spark, dir)
-      .select(col("doc_id"), col("cluster_id"))
+    val labels = Dedup.clusterLabels(spark, dir)
     docs(spark, dir)
       .select(col("doc_id"), col("source"))
       .join(labels, Seq("doc_id"), "left")

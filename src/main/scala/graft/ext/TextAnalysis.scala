@@ -1593,6 +1593,83 @@ object TextAnalysis {
   private val BpeMaxLen = 20
   private val BpeSep = "\u001F" // US control char: never in kept words
 
+  /** The greedy non-overlapping BPE application of merge (a, b) as a
+    * left fold over a [[BpeSep]]-joined symbol string — ONE
+    * definition shared by the trainer's per-iteration rewrite and
+    * the encoder's per-word application.
+    */
+  private def bpeFold(syms: Column, a: String, b: String): Column =
+    aggregate(split(syms, BpeSep), lit(""),
+      (acc, x) => when(acc === "", x)
+        .when(element_at(split(acc, BpeSep), -1) === a && x === b,
+          concat(acc, x))
+        .otherwise(concat(acc, lit(BpeSep), x)))
+
+  /** The learned merge table, a durable model read into the driver
+    * once per session: trained once per corpus from [[bpeVocab]], and
+    * read by the encoders (`text_bpe_encode`, `text_fertility`).
+    * `text_bpe` trains its own merges from [[bpeVocab]] on every call.
+    */
+  private def bpeMergeTable(
+      spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
+    import spark.implicits._
+    ArtifactStore.artifact(spark, "bpe-merges-v1", dir, "documents") {
+      trainBpe(bpeVocab(spark, dir))
+        .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
+    } {
+      _.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1).toList
+    }
+  }
+
+  /** The trainer's word-count base, `(n, syms)`: the one pass over the
+    * corpus, kept as a durable index per corpus state. Every merge
+    * iteration runs on it.
+    */
+  private def bpeVocab(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.frame(spark, "bpe-vocab-v1", dir, "documents") {
+      docs(spark, dir)
+        .select(explode(
+          expr("filter(split(text, ' +'), x -> x != '')")).as("word"))
+        .filter(length(col("word")).between(BpeMinLen, BpeMaxLen) &&
+          !col("word").contains(BpeSep))
+        .groupBy("word").agg(count(lit(1)).as("n"))
+        .filter(col("n") >= BpeMinCount)
+        .select(col("n"),
+          array_join(filter(split(col("word"), ""), c => c =!= ""), BpeSep)
+            .as("syms"))
+    }
+
+  private def trainBpe(vocab: DataFrame): Seq[(Long, String, String, Long)] = {
+    var v = vocab
+    val merges =
+      scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
+    var exhausted = false
+    for (i <- 1 to BpeMerges if !exhausted) {
+      val best = v
+        .select(col("n"), split(col("syms"), BpeSep).as("ls"))
+        .filter(size(col("ls")) >= 2)
+        .select(col("n"), explode(expr(
+          """zip_with(slice(ls, 1, size(ls) - 1), slice(ls, 2, size(ls) - 1),
+            |         (a, b) -> named_struct('a', a, 'b', b))""".stripMargin))
+          .as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("n")).as("cnt"))
+        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
+        .limit(1).collect() // ONE row: the argmax pair
+      if (best.isEmpty) exhausted = true
+      else {
+        val (a, b, cnt) =
+          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        merges += ((i.toLong, a, b, cnt))
+        v = v.select(col("n"), bpeFold(col("syms"), a, b).as("syms"))
+          .localCheckpoint(true)
+      }
+    }
+    merges.toList
+  }
+
   /** Byte-pair-encoding merge induction (Sennrich, Haddow, Birch, ACL
     * 2016) — the tokenizer-training step of an LLM data pipeline:
     * learn the [[BpeMerges]] highest-frequency adjacent-symbol merges
@@ -1614,80 +1691,9 @@ object TextAnalysis {
     * [[BpeMaxLen]] chars, frequency ≥ [[BpeMinCount]], no embedded
     * separator byte.
     */
-  /** The greedy non-overlapping BPE application of merge (a, b) as a
-    * left fold over a [[BpeSep]]-joined symbol string — ONE
-    * definition shared by the trainer's per-iteration rewrite and
-    * the encoder's per-word application.
-    */
-  private def bpeFold(syms: Column, a: String, b: String): Column =
-    aggregate(split(syms, BpeSep), lit(""),
-      (acc, x) => when(acc === "", x)
-        .when(element_at(split(acc, BpeSep), -1) === a && x === b,
-          concat(acc, x))
-        .otherwise(concat(acc, lit(BpeSep), x)))
-
-  /** The learned merge table, a durable index read into the driver
-    * once per session: the 8-iteration train runs once per corpus, and
-    * `text_bpe` and `text_bpe_encode` both read it. Model-scale driver
-    * traffic only — [[BpeMerges]] single-row argmaxes.
-    */
-  private def bpeMergeTable(
-      spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    import spark.implicits._
-    ArtifactStore.artifact(spark, "bpe-merges-v1", dir, "documents") {
-      buildBpeMerges(spark, dir)
-        .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-    } {
-      _.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .sortBy(_._1).toList
-    }
-  }
-
-  private def buildBpeMerges(
-      spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    val vocab0 = docs(spark, dir)
-          .select(explode(
-            expr("filter(split(text, ' +'), x -> x != '')")).as("word"))
-          .filter(length(col("word")).between(BpeMinLen, BpeMaxLen) &&
-            !col("word").contains(BpeSep))
-          .groupBy("word").agg(count(lit(1)).as("n"))
-          .filter(col("n") >= BpeMinCount)
-          .select(col("n"),
-            array_join(filter(split(col("word"), ""), c => c =!= ""), BpeSep)
-              .as("syms"))
-          .localCheckpoint(true)
-        var v = vocab0
-        val merges =
-          scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
-        var exhausted = false
-        for (i <- 1 to BpeMerges if !exhausted) {
-          val best = v
-            .select(col("n"), split(col("syms"), BpeSep).as("ls"))
-            .filter(size(col("ls")) >= 2)
-            .select(col("n"), explode(expr(
-              """zip_with(slice(ls, 1, size(ls) - 1), slice(ls, 2, size(ls) - 1),
-                |         (a, b) -> named_struct('a', a, 'b', b))""".stripMargin))
-              .as("p"))
-            .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-            .agg(sum(col("n")).as("cnt"))
-            .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-            .limit(1).collect() // ONE row: the argmax pair
-          if (best.isEmpty) exhausted = true
-          else {
-            val (a, b, cnt) =
-              (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-            merges += ((i.toLong, a, b, cnt))
-            v = v.select(col("n"), bpeFold(col("syms"), a, b).as("syms"))
-              .localCheckpoint(true)
-          }
-        }
-        merges.toList
-  }
-
   def textBpe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    bpeMergeTable(spark, dir)
+    trainBpe(bpeVocab(spark, dir))
       .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
       .orderBy("merge_rank")
   }

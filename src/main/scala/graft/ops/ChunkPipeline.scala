@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.{Chunk, FileStats, Page}
 import graft.sources.ExtractedPage
@@ -21,8 +25,13 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *   - running file offset `:483-485` -> window prefix-sum (C3)
   *   - per-file aggregate `:487-503` -> `groupBy(path).agg`, or the
   *     in-task [[fileStatsOf]] fold (A1)
-  *   - corpus totals + SUM TOTAL row `:130-164` -> `rollup` (A2/U1),
-  *     ordered inside the one partition the CSV sink writes
+  *   - corpus totals + SUM TOTAL row `:130-164` (A2/U1) -> on the PDF
+  *     path, the local `statsWithTotal(spark, rows)`: the collected
+  *     per-file rows totalled and ordered on the driver, as the
+  *     reference's main process does; on the documents path, the lazy
+  *     `rollup` form
+  *   - CSV sink `:174-186` (S5) -> [[writeCsv]], the lines made by
+  *     Spark's CSV generator and written by the driver
   *
   * Two shapes share the splitter and the normalization:
   *   - ingestion ([[chunk]] + [[chunkMetrics]]) keeps one row per
@@ -35,9 +44,10 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *   - stats ([[fileStatsOf]], driven by [[graft.Engine.fileStats]])
   *     folds each file to its row inside the scan task: no window, no
   *     shuffle, no join, and each chunk's normalized length counted in
-  *     one pass that builds no String ([[Normalize.normalizedLength]]);
-  *     only the [[statsWithTotal]] rollup is global, and its exchange is
-  *     the report's only one.
+  *     one pass that builds no String ([[Normalize.normalizedLength]]).
+  *     [[graft.Engine.report]] collects those rows, so a report is one
+  *     Spark job: the total, the formatting and the CSV run on the
+  *     driver over a local relation.
   */
 object ChunkPipeline {
 
@@ -148,6 +158,40 @@ object ChunkPipeline {
       .drop("is_total")
   }
 
+  /** The schema both [[statsWithTotal]] forms give. */
+  private val StatsWithTotalSchema = StructType(
+    StructField("path", StringType, nullable = false) +:
+      Seq("pages", "chunks", "file_size", "text_size", "unmapped_fonts")
+        .map(StructField(_, LongType)) :+
+      StructField("ratio", DoubleType))
+
+  /** A2 + U1 over per-file rows already on the driver: the rows and
+    * schema the lazy `rollup` form gives, as a local relation, so the
+    * [[report]] formatting over it runs on the driver with no job — the
+    * reference's main process totals its workers' rows the same way
+    * (`pdf_reader.py:130-164`). Rows of one path are summed, as the
+    * rollup groups them; they sort by the UTF-8 bytes of `path` (Spark's
+    * binary string order, not `String`'s UTF-16 order), `SUM TOTAL`
+    * comes last, every ratio is a ratio of sums, null on zero text, and
+    * a sum that overflows fails, as Spark's ANSI `sum` does. No rows, no
+    * total row: the rollup of an empty input is empty too.
+    */
+  def statsWithTotal(spark: SparkSession, rows: Seq[FileStats]): DataFrame = {
+    def add(a: FileStats, b: FileStats): FileStats = FileStats(a.path,
+      Math.addExact(a.pages, b.pages), Math.addExact(a.chunks, b.chunks),
+      Math.addExact(a.fileSize, b.fileSize), Math.addExact(a.textSize, b.textSize),
+      None, Math.addExact(a.unmappedFonts, b.unmappedFonts))
+    def row(path: String, s: FileStats): Row = Row(path, s.pages, s.chunks,
+      s.fileSize, s.textSize, s.unmappedFonts,
+      if (s.textSize == 0) null else s.fileSize.toDouble / s.textSize)
+    val utf8 = Ordering.comparatorToOrdering[Array[Byte]](java.util.Arrays.compareUnsigned(_, _))
+    val perPath = rows.groupMapReduce(_.path)(identity)(add).values.toSeq
+      .sortBy(_.path.getBytes(UTF_8))(utf8)
+    val out = perPath.map(s => row(s.path, s)) ++
+      perPath.reduceOption(add).map(row("SUM TOTAL", _))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StatsWithTotalSchema)
+  }
+
   /** Report formatting (P8/P9): thousands-separated counts and
     * 2-decimal ratio, exactly the reference's console/CSV string forms
     * (`pdf_reader.py:59-97`). Kept at the sink boundary — inner stages
@@ -173,10 +217,51 @@ object ChunkPipeline {
   }
 
   /** S5: CSV sink — header, one file (the reference writes one CSV per
-    * root, `pdf_reader.py:174-186`).
+    * root, `pdf_reader.py:174-186`). The bytes are those of
+    * `coalesce(1).write.option("header", "true").mode("overwrite").csv`:
+    * each line comes from Spark's own CSV generator (`to_csv`, with the
+    * writer's defaults), the header through the same quoting. The
+    * driver writes them through the out path's file system, so no write
+    * job or commit protocol runs: one `part-00000-*.csv` plus `_SUCCESS`
+    * go to a hidden sibling directory that then replaces `out`. The
+    * report is collected, so it must fit the driver: one row per file.
+    * A report over a local relation (as [[graft.Engine.report]] gives)
+    * starts no job at all.
     */
-  def writeCsv(report: DataFrame, out: String): Unit =
-    report.coalesce(1).write.option("header", "true").mode("overwrite").csv(out)
+  def writeCsv(report: DataFrame, out: String): Unit = {
+    val spark = report.sparkSession
+    val names = report.columns.toSeq
+    val header = spark.createDataFrame(java.util.List.of(Row.fromSeq(names)),
+      StructType(names.map(StructField(_, StringType))))
+    def lines(df: DataFrame): Array[String] =
+      df.select(to_csv(struct(col("*")))).collect().map(_.getString(0))
+    val text = (lines(header) ++ lines(report)).mkString("", "\n", "\n")
+
+    val dir = new Path(out)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = fs.makeQualified(dir)
+    val uuid = java.util.UUID.randomUUID()
+    val tmp = new Path(target.getParent, s".${target.getName}-$uuid.tmp")
+    val files = Seq(s"part-00000-$uuid-c000.csv" -> text.getBytes(UTF_8),
+      "_SUCCESS" -> Array.emptyByteArray)
+    fs match {
+      // Hadoop's local file system writes a .crc beside each file and,
+      // without its native library, forks a chmod for each file and
+      // directory it creates
+      case local: LocalFileSystem =>
+        val t = java.nio.file.Files.createDirectories(local.pathToFile(tmp).toPath)
+        for ((name, bytes) <- files) java.nio.file.Files.write(t.resolve(name), bytes)
+      case _ =>
+        fs.mkdirs(tmp)
+        for ((name, bytes) <- files) {
+          val o = fs.create(new Path(tmp, name), false)
+          try o.write(bytes) finally o.close()
+        }
+    }
+    if (fs.exists(target)) fs.delete(target, true)
+    if (!fs.rename(tmp, target))
+      throw new java.io.IOException(s"could not rename $tmp to $target")
+  }
 
   /** A1 with page-truth over a page Dataset and its [[chunkMetrics]]:
     * two aggregations joined on `path`, so the page source is

@@ -48,6 +48,31 @@ class MainSpec extends AnyFunSuite with SparkTestBase {
       Seq("chunks", "fileSize", "pages", "path", "ratio", "textSize", "unmappedFonts"))
   }
 
+  test("closes with the reference's ratio sentence and its 100 / ratio extrapolation (P11)") {
+    val root = mkRoot()
+    val out = Files.createTempDirectory("mainsummary").toString
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed) {
+      Main.runWith(spark, Array(root, "4", "--chunk_size", "10", "--output_dir", out))
+    }
+    val stats = Engine.fileStats(spark, root,
+      Engine.Options(split = graft.split.SplitConfig(chunkSize = 10))).collect().toSeq
+    val (fileSize, textSize) = (stats.map(_.fileSize).sum, stats.map(_.textSize).sum)
+    val ratio = fileSize.toDouble / textSize
+    val expected = "[graft] 2 file(s), %,d bytes, hold %,d characters of text: a ratio of %.2f, "
+      .formatLocal(java.util.Locale.ROOT, fileSize, textSize, ratio) +
+      "so 100 MB of such files hold about %.2f MB of text."
+        .formatLocal(java.util.Locale.ROOT, 100 / ratio)
+    assert(printed.toString("UTF-8").linesIterator.contains(expected), printed)
+    // the ratio is the CSV's SUM TOTAL ratio
+    val dir = Paths.get(s"$out/${Engine.sanitizeFolderPath(root)}")
+    val csv = Files.list(dir).toArray.map(_.toString).filter(_.endsWith(".csv")).head
+    assert(Files.readAllLines(Paths.get(csv)).asScala.last.split(",")(5) ==
+      "%.2f".formatLocal(java.util.Locale.ROOT, ratio))
+    assert(Main.summary(Seq(FileStats("e.pdf", 1L, 0L, 10L, 0L, None))) ==
+      "[graft] 1 file(s) yielded no text, so there is no ratio to extrapolate.")
+  }
+
   test("--file_type .pdf routes through the PDF codec end to end") {
     val root = Files.createTempDirectory("mainpdf")
     Files.write(root.resolve("doc.pdf"),

@@ -46,28 +46,32 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("cluster labeling: build once, reload cross-session, rebuild on rewrite") {
     val corpus = copyCorpus().toString
-    val before = ArtifactStore.builds("dedup-cluster-v1")
+    val before = ArtifactStore.builds("dedup-labels-v1")
+    val pairsBefore = ArtifactStore.builds("dedup-pairs-v1")
 
-    val first = Dedup.dedupCluster(spark, corpus).collect()
-    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 1)
+    val first = Dedup.clusterLabels(spark, corpus).collect()
+    assert(ArtifactStore.builds("dedup-labels-v1") == before + 1)
     assert(first.nonEmpty)
+    // dedup_cluster labels its components over the same pair index
+    Dedup.dedupCluster(spark, corpus).collect()
+    assert(ArtifactStore.builds("dedup-pairs-v1") == pairsBefore + 1)
 
     // artifact published with a completion marker
-    val ap = ArtifactStore.artifactPath(spark, corpus, "documents", "dedup-cluster-v1")
+    val ap = ArtifactStore.artifactPath(spark, corpus, "documents", "dedup-labels-v1")
     val fs = ap.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(ap, "_SUCCESS")))
 
     // a SECOND session (fresh sessionUUID -> in-session memo misses)
     // must reload the artifact, not rebuild
     val s2 = spark.newSession()
-    val second = Dedup.dedupCluster(s2, corpus).collect()
-    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 1, "second session rebuilt")
+    val second = Dedup.clusterLabels(s2, corpus).collect()
+    assert(ArtifactStore.builds("dedup-labels-v1") == before + 1, "second session rebuilt")
     assert(second.map(_.toString).sorted.sameElements(first.map(_.toString).sorted))
 
     // in-place rewrite -> fingerprint changes -> rebuild
     rewriteInPlace(java.nio.file.Paths.get(corpus), "documents")
-    Dedup.dedupCluster(spark.newSession(), corpus).collect()
-    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 2, "rewrite did not invalidate")
+    Dedup.clusterLabels(spark.newSession(), corpus).collect()
+    assert(ArtifactStore.builds("dedup-labels-v1") == before + 2, "rewrite did not invalidate")
   }
 
   test("IVF model: train once, reload cross-session, retrain on rewrite") {
@@ -206,16 +210,16 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("half-written artifact (no _SUCCESS) is discarded and rebuilt") {
     val corpus = copyCorpus().toString
-    val ap = ArtifactStore.artifactPath(spark, corpus, "documents", "dedup-cluster-v1")
+    val ap = ArtifactStore.artifactPath(spark, corpus, "documents", "dedup-pairs-v1")
     val fs = ap.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a crashed writer: directory exists, marker absent
     fs.mkdirs(ap)
     val out = fs.create(new org.apache.hadoop.fs.Path(ap, "part-garbage.parquet"))
     out.write(Array[Byte](1, 2, 3)); out.close()
 
-    val before = ArtifactStore.builds("dedup-cluster-v1")
+    val before = ArtifactStore.builds("dedup-pairs-v1")
     val rows = Dedup.dedupCluster(spark.newSession(), corpus).collect()
-    assert(ArtifactStore.builds("dedup-cluster-v1") == before + 1)
+    assert(ArtifactStore.builds("dedup-pairs-v1") == before + 1)
     assert(rows.nonEmpty)
     assert(fs.exists(new org.apache.hadoop.fs.Path(ap, "_SUCCESS")))
   }

@@ -842,6 +842,7 @@ class TextPipelineOpsSpec extends AnyFunSuite with SparkTestBase {
   test("textBpe/textBpeEncode: exact merges + compression on a crafted corpus; one train per corpus") {
     val dir = corpus(Seq((1L, "aaaa aaaa aaaa", "s")))
     val before = ArtifactStore.builds("bpe-merges-v1")
+    val vocabBefore = ArtifactStore.builds("bpe-vocab-v1")
     val merges = TextAnalysis.textBpe(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     // word "aaaa" (n=3): merge 1 = (a,a) weight 9, merge 2 = (aa,aa)
@@ -854,8 +855,12 @@ class TextPipelineOpsSpec extends AnyFunSuite with SparkTestBase {
     // 3 words x 4 chars -> 3 single-symbol tokens: 750000 ppm saved
     assert(enc.toSeq == Seq((1L, 3L, 12L, 3L, 750000L)), enc.mkString(", "))
     TextAnalysis.textBpe(spark, dir).collect()
+    // text_bpe trains from the word-count index on every call; the
+    // encoder reads the merge table, trained once from the same index
     assert(ArtifactStore.builds("bpe-merges-v1") == before + 1,
       "merge table retrained despite the session memo")
+    assert(ArtifactStore.builds("bpe-vocab-v1") == vocabBefore + 1,
+      "word counts recounted despite the session memo")
   }
 
   test("graphComponents: exact census on a crafted two-component graph") {

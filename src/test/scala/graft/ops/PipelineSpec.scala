@@ -79,6 +79,103 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(total.getAs[Double]("ratio") == fs.toDouble / txt)
   }
 
+  test("statsWithTotal: the local form gives the rollup form's schema, rows and order") {
+    import spark.implicits._
+    def both(rows: Seq[graft.FileStats]): Seq[org.apache.spark.sql.Row] = {
+      val rollup = ChunkPipeline.statsWithTotal(spark.createDataset(rows))
+      val local = ChunkPipeline.statsWithTotal(spark, rows)
+      assert(local.schema == rollup.schema)
+      val got = local.collect().toSeq
+      assert(got == rollup.collect().toSeq)
+      got
+    }
+    val piped = ChunkPipeline.fileStats(ChunkPipeline.chunkMetrics(
+      ChunkPipeline.chunk(spark.createDataset(pages), cfg))).collect().toSeq
+    assert(both(piped).map(_.getString(0)) == Seq("doc1", "doc2", "SUM TOTAL"))
+    // a zero-text file: null ratio on its row, the total's ratio of sums
+    val zero = graft.FileStats("/d/zero.pdf", 3L, 0L, 70L, 0L, None, 2L)
+    val withZero = both(piped :+ zero)
+    assert(withZero.map(_.getString(0)) == Seq("/d/zero.pdf", "doc1", "doc2", "SUM TOTAL"))
+    assert(withZero.head.isNullAt(6) && !withZero.last.isNullAt(6))
+    assert(withZero.last.getLong(5) == 2L)
+    // U+FB01 sorts after U+1F600 in UTF-16 (its surrogate D83D is
+    // lower) and before it in UTF-8, Spark's binary order
+    val names = Seq("\uD83D\uDE00.pdf", "\uFB01.pdf", "b.pdf")
+    assert(names(0) < names(1))
+    val named = names.map(n => graft.FileStats(n, 1L, 1L, 10L, 5L, Some(2.0)))
+    assert(both(named).map(_.getString(0)) ==
+      Seq("b.pdf", "\uFB01.pdf", "\uD83D\uDE00.pdf", "SUM TOTAL"))
+    // rows of one path are summed, as the rollup groups them
+    assert(both(named :+ named(0)).size == 4)
+    // no rows: the rollup has no grouping set to total, so no SUM TOTAL
+    assert(both(Nil).isEmpty)
+    assert(ChunkPipeline.report(ChunkPipeline.statsWithTotal(spark, Nil)).collect().isEmpty)
+  }
+
+  test("writeCsv writes the bytes of Spark's csv writer, one part file and _SUCCESS") {
+    import java.nio.file.{Files, Path}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField(" a,b ", StringType),
+      StructField("q\"x", StringType), StructField("n", LongType)))
+    val values = Seq("plain", "com,ma", "quo\"te", "back\\slash", "cr\rlf\n",
+      "mid\nline", "  lead", "trail  ", "", null, "\u00fcn\u00ef\uD83D\uDE00",
+      "\"", "\\\"", "a\\,b", "\r\n", " ")
+    val rows = values.indices.map(i =>
+      Row(values(i), values((i + 5) % values.size), i.toLong)) :+ Row(null, null, null)
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def listing(dir: Path): Seq[String] =
+      Files.list(dir).toArray.map(_.asInstanceOf[Path].getFileName.toString).sorted.toSeq
+    def csvBytes(dir: Path): Seq[Byte] = {
+      val parts = listing(dir).filter(_.endsWith(".csv"))
+      assert(parts.size == 1, listing(dir))
+      Files.readAllBytes(dir.resolve(parts.head)).toSeq
+    }
+    def sparkCsv(d: org.apache.spark.sql.DataFrame): Seq[Byte] = {
+      val out = Files.createTempDirectory("sparkcsv").resolve("out")
+      d.coalesce(1).write.option("header", "true").mode("overwrite").csv(out.toString)
+      csvBytes(out)
+    }
+    for (d <- Seq(df, df.limit(0))) {
+      val parent = Files.createTempDirectory("graftcsv")
+      val out = parent.resolve("out")
+      ChunkPipeline.writeCsv(d, out.toString)
+      assert(csvBytes(out) == sparkCsv(d))
+      val names = listing(out)
+      assert(names.size == 2 && names.head == "_SUCCESS" &&
+        names(1).startsWith("part-00000-"), names)
+      assert(listing(parent) == Seq("out")) // the temporary directory is gone
+    }
+    // a second write replaces the first
+    val out = Files.createTempDirectory("graftcsv2").resolve("out")
+    ChunkPipeline.writeCsv(df, out.toString)
+    ChunkPipeline.writeCsv(df.limit(1), out.toString)
+    assert(listing(out).size == 2)
+    assert(csvBytes(out) == sparkCsv(df.limit(1)))
+    assert(new String(csvBytes(out).toArray, "UTF-8").startsWith("\"a,b\",\"q\\\"x\",n\nplain,"))
+  }
+
+  test("writeCsv through a file system other than the local one") {
+    import java.nio.file.Files
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.testfs.impl", classOf[TestFs].getName)
+    conf.setBoolean("fs.testfs.impl.disable.cache", true)
+    val report = ChunkPipeline.report(ChunkPipeline.statsWithTotal(spark,
+      Seq(graft.FileStats("/d/a.pdf", 1L, 2L, 3000L, 40L, None))))
+    val viaFs = Files.createTempDirectory("testfs").resolve("out")
+    ChunkPipeline.writeCsv(report, s"testfs://$viaFs")
+    ChunkPipeline.writeCsv(report, s"testfs://$viaFs") // and replace
+    val local = Files.createTempDirectory("localfs").resolve("out")
+    ChunkPipeline.writeCsv(report, local.toString)
+    def csv(dir: java.nio.file.Path): String = {
+      val parts = Files.list(dir).toArray.map(_.toString).filter(_.endsWith(".csv"))
+      assert(parts.length == 1)
+      Files.readString(java.nio.file.Paths.get(parts.head))
+    }
+    assert(csv(viaFs) == csv(local))
+    assert(csv(local).linesIterator.toSeq.last == "SUM TOTAL,1,2,\"3,000\",40,75.00,0")
+  }
+
   test("report formatting matches the reference README sample (P8/P9, A2)") {
     import spark.implicits._
     // README.md:20-26 values re-typed as FileStats
@@ -146,4 +243,11 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(pdfFold.map(_.path.split('/').last) == Set("ok.pdf"))
     assert(pdfFold.head.pages == 3)
   }
+}
+
+/** The local disk under the scheme `testfs`: a file system that is not
+  * Hadoop's `LocalFileSystem`.
+  */
+class TestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("testfs:///")
 }

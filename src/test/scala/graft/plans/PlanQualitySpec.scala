@@ -17,6 +17,30 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** Call sites of the jobs `body` starts on this thread, counted in
+    * its own job group once the listener bus has drained.
+    */
+  private def jobsDuring(body: => Unit): List[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.add(e.stageInfos.map(_.name).mkString("; "))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    started.toArray(Array.empty[String]).toList
+  }
+
   test("q1: shipdate filter and column pruning reach the parquet scan") {
     val plan = graft.ext.Relational.q1Agg(spark, dir)
       .queryExecution.executedPlan.toString
@@ -359,27 +383,6 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
 
   test("dedup verify tier: building dedup_containment and dedup_sorted_nbhd " +
     "over a warm index starts no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    /** Call sites of the jobs `body` starts on this thread. */
-    def jobsDuring(body: => Unit): List[String] = {
-      val group = s"verify-build-${java.util.UUID.randomUUID()}"
-      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            started.add(e.stageInfos.map(_.name).mkString("; "))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, group)
-        try body finally sc.clearJobGroup()
-      } finally {
-        org.apache.spark.ListenerDrain(sc)
-        sc.removeSparkListener(listener)
-      }
-      started.toArray(Array.empty[String]).toList
-    }
     // warms the shingle-postings index and its max-df scalar
     graft.ext.Dedup.dedupContainment(spark, dir)
     // Spark resolves a parquet table's schema with a footer-read job;
@@ -1023,18 +1026,24 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(stats.collect().map(_.pages).sorted.toSeq == Seq(1L, 2L))
   }
 
-  test("Engine.report: the rollup's exchange is the only one, no range sort") {
+  test("Engine.report: one Spark job, no exchange; its CSV write starts none") {
     import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
     val root = java.nio.file.Files.createTempDirectory("reportplan")
     for ((name, text) <- Seq("c.pdf" -> "three", "a.pdf" -> "one", "b.pdf" -> "two"))
       java.nio.file.Files.write(root.resolve(name), PdfFixtures.classicPdf(Seq(text)))
-    val report = graft.Engine.report(spark, root.toString,
-      graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor))
-    val rows = report.collect().map(_.getString(0)).toSeq
+    var report: org.apache.spark.sql.DataFrame = null
+    var rows = Seq.empty[String]
+    val jobs = jobsDuring {
+      report = graft.Engine.report(spark, root.toString,
+        graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor))
+      rows = report.collect().map(_.getString(0)).toSeq
+    }
+    assert(jobs.size == 1, jobs)
     assert(rows == Seq("a.pdf", "b.pdf", "c.pdf", "SUM TOTAL"))
     val plan = report.queryExecution.executedPlan
-    assert(FinalPlan.collect(plan) { case e: Exchange => e }.size == 1, plan)
-    assert(!plan.toString.contains("rangepartitioning"), plan)
+    assert(FinalPlan.collect(plan) { case e: Exchange => e }.isEmpty, plan)
+    val out = java.nio.file.Files.createTempDirectory("reportcsv").resolve("out")
+    assert(jobsDuring(graft.ops.ChunkPipeline.writeCsv(report, out.toString)).isEmpty)
   }
 
   test("a warm third pass over the operator_mix queries compiles at most 5 classes") {
