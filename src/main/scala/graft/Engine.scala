@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.ops.ChunkPipeline
@@ -38,17 +39,29 @@ object Engine {
     * and files are represented (reference semantics: `pages =
     * len(documents)`, `pdf_reader.py:498`).
     *
-    * A per-file fold inside the scan task, like the reference's worker
-    * (`pdf_reader.py:442-503`): one `binaryFile` scan, each file
-    * decoded once and reduced by [[ChunkPipeline.fileStatsOf]] — no
-    * shuffle, window or join. [[chunks]] is the ingestion shape that
-    * keeps the per-chunk rows and the window offsets.
+    * A per-file fold inside the task that reads the file, like the
+    * reference's worker (`pdf_reader.py:442-503`): the driver lists and
+    * bins the files ([[FileSources.perFile]]), and one plain job decodes
+    * each file once and reduces it with [[ChunkPipeline.fileStatsOf]] —
+    * no shuffle, window or join. This Dataset wraps the job's RDD;
+    * [[report]] collects the RDD itself. [[chunks]] is the ingestion
+    * shape that keeps the per-chunk rows and the window offsets.
     */
   def fileStats(spark: SparkSession, root: String, opts: Options = Options()): Dataset[FileStats] = {
     import spark.implicits._
+    fileStatsRdd(spark, root, opts).toDS()
+  }
+
+  private def fileStatsRdd(spark: SparkSession, root: String, opts: Options): RDD[FileStats] =
     FileSources.perFile(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)(
       ChunkPipeline.fileStatsOf(_, _, _, opts.split))
-  }
+
+  /** The [[fileStats]] rows on the driver, from the one Spark job of the
+    * report path.
+    */
+  private[graft] def collectFileStats(
+      spark: SparkSession, root: String, opts: Options): Seq[FileStats] =
+    fileStatsRdd(spark, root, opts).collect().toSeq
 
   /** Formatted report with the SUM TOTAL row last
     * (`pdf_reader.py:151-171`), in one Spark job: the [[fileStats]]
@@ -58,7 +71,7 @@ object Engine {
     * driver holds one row per file.
     */
   def report(spark: SparkSession, root: String, opts: Options = Options()): DataFrame =
-    report(spark, fileStats(spark, root, opts).collect().toSeq)
+    report(spark, collectFileStats(spark, root, opts))
 
   /** The formatted report of per-file rows already on the driver. */
   def report(spark: SparkSession, stats: Seq[FileStats]): DataFrame =

@@ -91,7 +91,7 @@ object Main {
       // one Spark job per root, the one Engine.report runs: the per-file
       // rows reach the driver, and the table, the metadata, the CSV and
       // the summary all derive from them with no further job
-      val stats = Engine.fileStats(spark, root, opts).collect().toSeq
+      val stats = Engine.collectFileStats(spark, root, opts)
       val report = Engine.report(spark, stats)
       report.show(stats.size + 1, truncate = false) // S6 console sink, untruncated
       if (args.printMetadata) {

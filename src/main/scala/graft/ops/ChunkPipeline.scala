@@ -42,9 +42,11 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *     manual `b_get_content=False` (`pdf_reader.py:406`) is
   *     unnecessary.
   *   - stats ([[fileStatsOf]], driven by [[graft.Engine.fileStats]])
-  *     folds each file to its row inside the scan task: no window, no
-  *     shuffle, no join, and each chunk's normalized length counted in
-  *     one pass that builds no String ([[Normalize.normalizedLength]]).
+  *     folds each file to its row inside the task that reads it (a
+  *     driver-planned file job, [[graft.sources.FileSources.perFile]]):
+  *     no window, no shuffle, no join, and each chunk's normalized
+  *     length counted in one pass that builds no String
+  *     ([[Normalize.normalizedLength]]).
   *     [[graft.Engine.report]] collects those rows, so a report is one
   *     Spark job: the total, the formatting and the CSV run on the
   *     driver over a local relation.

@@ -10,7 +10,7 @@ import graft.split.SplitConfig
 
 /** The end-to-end PDF-binary gate query (`pdf_chunk_stats`, round 9):
   * the mm_video synthesize-and-decode discipline applied to the
-  * reference's PRIMARY source path — real `.pdf` FILES scanned with
+  * reference's PRIMARY source path — real `.pdf` FILES listed by
   * `binaryFile`, parsed/decrypted/decoded by [[PdfTextExtractor]],
   * chunked by the recursive splitter, aggregated to per-file stats
   * (`/root/reference/pdf_reader.py:442-443,543-615`). Every prior
@@ -41,9 +41,9 @@ import graft.split.SplitConfig
   * Scale shape: synthesis is a fingerprint-keyed durable artifact
   * (one write per corpus state, tasks write files in parallel via
   * the Hadoop FS — a shared URI on a real cluster); the read side is
-  * one distributed scan whose tasks decode each file once and fold it
-  * to its row (`ChunkPipeline.fileStatsOf`); nothing is collected,
-  * and only the SUM TOTAL rollup shuffles.
+  * one driver-planned file job whose tasks decode each file once and
+  * fold it to its row (`ChunkPipeline.fileStatsOf`); nothing is
+  * collected, and only the SUM TOTAL rollup shuffles.
   */
 object PdfCorpus {
 

@@ -1,11 +1,14 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.internal.SQLConf
 
 import graft.Page
 
@@ -59,18 +62,9 @@ object FileSources {
   /** S1 + S2: recursive directory scan with extension filter pushed to
     * the listing (the reference's `os.walk` + lowercase-endswith,
     * `/root/reference/pdf_reader.py:327-359`), file size for free.
-    * [[perFile]] selects only `path` and `length`, so Catalyst prunes
-    * `content` and the scan reads no file bytes: each file is read
-    * once, in the task that decodes it, and the length bound lives in
-    * [[perFile]]. `binaryFile` partitions the listing across tasks by
-    * Spark's next-fit size packing, which does NOT reproduce the
-    * reference's LPT big-files-first heuristic (O1,
-    * `pdf_reader.py:361-388`): files are taken largest first, but each
-    * costs its length plus a 4 MB open cost, and on a corpus of many
-    * small files that cost lifts the split cap to 128 MB, so the
-    * largest files share one task.
-    * Spark has no per-read option for this; the split size comes only
-    * from session confs (ROADMAP A).
+    * Spark lists the files when the relation is created; [[perFile]]
+    * takes that listing and reads each file itself, so this relation
+    * is never scanned on the PDF path.
     */
   def binaryFiles(spark: SparkSession, root: String, glob: String = "*.txt"): DataFrame =
     spark.read.format("binaryFile")
@@ -79,44 +73,98 @@ object FileSources {
       .load(root)
 
   /** Files -> one decode per file: `f` sees each file's path, byte
-    * length and extracted pages (in page order) inside the scan task,
-    * so a per-file result needs no shuffle back to the file.
+    * length and extracted pages (in page order) inside the task that
+    * reads the file, so a per-file result needs no shuffle back to the
+    * file.
     *
-    * The scan lists `path` and `length` only; the task reads each file
-    * through the session's Hadoop FileSystem into one array of exactly
-    * `length` bytes, with none of the copies a `content` column makes
-    * into and out of the scan's rows. With `content` pruned, `binaryFile`
-    * no longer checks `spark.sql.sources.binaryFile.maxLength`, so this
-    * does, failing the task with `binaryFile`'s own error.
+    * A file job planned on the driver, which reproduces the reference's
+    * big-files-first pool map (O1, `pdf_reader.py:361-388,543-544`):
+    *   - the listing is the file index of the [[binaryFiles]] relation
+    *     `files` (which must be that bare relation), so Spark's recursive
+    *     lookup, glob, hidden-file and empty-file rules apply, no job
+    *     runs, and `spark.sql.sources.binaryFile.maxLength` fails the
+    *     call before any task starts;
+    *   - [[packBins]] packs the files largest first into
+    *     `min(files, 4 x defaultParallelism)` bins, heaviest bin first;
+    *   - one plain job reads and folds the bins, one task each: every
+    *     file is read through the session's Hadoop FileSystem into one
+    *     array of exactly `length` bytes. A file gone since the listing
+    *     fails the task, or is skipped under `ignoreMissingFiles`, as a
+    *     file scan does.
     */
-  def perFile[T: Encoder](files: DataFrame, extractor: PageExtractor)(
-      f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): Dataset[T] = {
+  def perFile[T: ClassTag](files: DataFrame, extractor: PageExtractor)(
+      f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): RDD[T] = {
     val spark = files.sparkSession
-    import spark.implicits._
+    val listing = ColumnBridge.binaryFileListing(files)
+    val bins = packBins(listing.files.map(s => (s.getPath.toString, s.getLen)),
+      4 * spark.sparkContext.defaultParallelism, listing.openCostInBytes)
     val hadoopConf = ColumnBridge.hadoopConfInTask(spark)
-    val maxLength = spark.conf.get(SQLConf.SOURCES_BINARY_FILE_MAX_LENGTH.key).toInt
-    files.select(col("path"), col("length")).as[(String, Long)]
-      .flatMap { case (path, length) =>
-        val bytes = readFile(new Path(path), length, hadoopConf(), maxLength)
-        f(path, length, extractor.extractDetailed(path, bytes))
+    val ignoreMissing = listing.ignoreMissingFiles
+    spark.sparkContext.parallelize(bins, bins.size max 1).mapPartitions { it =>
+      val counted = ColumnBridge.inputCounter()
+      it.flatMap(_.iterator).flatMap { case (path, length) =>
+        readFile(path, length, hadoopConf(), ignoreMissing).iterator.flatMap { bytes =>
+          counted()
+          f(path, length, extractor.extractDetailed(path, bytes))
+        }
       }
+    }
   }
 
-  /** The whole file in one array of exactly `length` bytes. */
+  /** Graham's LPT rule over `(path, length)`: each file costs its length
+    * plus `openCost` (Spark's `spark.sql.files.openCostInBytes`); files
+    * are taken in descending cost, equal costs by path, and each goes to
+    * the least-loaded of `min(files, maxBins)` bins, the first of equally
+    * loaded ones. Bins come out heaviest first, each in the order its
+    * files were placed. The plan depends on the set of files only, and
+    * its makespan is within 4/3 of the optimum.
+    */
+  private[graft] def packBins(
+      files: Seq[(String, Long)], maxBins: Int, openCost: Long): Seq[Seq[(String, Long)]] = {
+    val n = math.min(files.size, maxBins)
+    val loads = new Array[Long](n)
+    val members = Array.fill(n)(Vector.newBuilder[(String, Long)])
+    val leastLoaded = new java.util.PriorityQueue[Integer](math.max(n, 1),
+      (a: Integer, b: Integer) =>
+        if (loads(a) != loads(b)) java.lang.Long.compare(loads(a), loads(b))
+        else Integer.compare(a, b))
+    (0 until n).foreach(i => leastLoaded.add(i))
+    for (file @ (_, length) <- files.sortBy { case (path, length) => (-length, path) }) {
+      val bin: Int = leastLoaded.poll()
+      loads(bin) += length + openCost
+      members(bin) += file
+      leastLoaded.add(bin)
+    }
+    (0 until n).sortBy(i => (-loads(i), i)).map(members(_).result())
+  }
+
+  /** The whole file in one array of exactly `length` bytes; None if it is
+    * gone and `ignoreMissing` holds.
+    */
   private def readFile(
-      path: Path, length: Long, conf: Configuration, maxLength: Int): Array[Byte] = {
-    val fs = path.getFileSystem(conf)
-    if (length > maxLength) throw ColumnBridge.fileTooLong(fs.getFileStatus(path), maxLength)
-    val bytes = new Array[Byte](length.toInt)
-    val in = fs.open(path)
-    try in.readFully(bytes) finally in.close()
-    bytes
+      path: String, length: Long, conf: Configuration,
+      ignoreMissing: Boolean): Option[Array[Byte]] = {
+    val p = new Path(path)
+    try {
+      val in = p.getFileSystem(conf).open(p)
+      val bytes = new Array[Byte](length.toInt)
+      try in.readFully(bytes) finally in.close()
+      Some(bytes)
+    } catch {
+      case e: FileNotFoundException if ignoreMissing =>
+        log.warn(s"Skipped missing file: $path", e)
+        None
+      case e: FileNotFoundException =>
+        throw ColumnBridge.fileNotFound(p.toUri.toString, e)
+    }
   }
 
-  /** Files -> typed pages through a [[PageExtractor]] (typed flatMap:
-    * streams per-file, no driver materialization; a 10 GB file's pages
-    * iterate through the task, unlike the reference which holds the
-    * whole file's pages+chunks in worker memory, SURVEY.md §4).
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Files -> typed pages through a [[PageExtractor]] (streams per file,
+    * no driver materialization; a 10 GB file's pages iterate through the
+    * task, unlike the reference which holds the whole file's pages+chunks
+    * in worker memory, SURVEY.md §4).
     */
   def pages(
       files: DataFrame,
@@ -124,6 +172,6 @@ object FileSources {
     import files.sparkSession.implicits._
     perFile(files, extractor) { (path, length, pages) =>
       pages.map(p => Page(path, p.page, p.text, length, p.unmappedFonts))
-    }
+    }.toDS()
   }
 }

@@ -1,12 +1,19 @@
 package org.apache.spark.sql.graft
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 
-import org.apache.spark.sql.Column
+import org.apache.spark.TaskContext
+import org.apache.spark.deploy.SparkHadoopUtil
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.SerializableConfiguration
 
 /** Expression <-> Column bridge. Spark 4 made the classic converters
@@ -46,9 +53,54 @@ object ColumnBridge {
     () => conf.value.value
   }
 
-  /** `binaryFile`'s error for a file longer than
-    * `spark.sql.sources.binaryFile.maxLength`.
+  /** What a `binaryFile` scan would read, taken from the relation's file
+    * index on the driver, so no job runs: the files that Spark's own
+    * recursive lookup, glob, hidden-file and empty-file rules keep, with
+    * the session's `spark.sql.files.openCostInBytes` and
+    * `spark.sql.files.ignoreMissingFiles`. A file longer than
+    * `spark.sql.sources.binaryFile.maxLength` fails here with
+    * `binaryFile`'s own error, before any task starts. `files` must be
+    * the bare relation `spark.read.format("binaryFile").load(...)` gives;
+    * any other plan fails.
     */
-  def fileTooLong(status: FileStatus, maxLength: Int): Throwable =
-    QueryExecutionErrors.fileLengthExceedsMaxLengthError(status, maxLength)
+  def binaryFileListing(files: DataFrame): BinaryFileListing = {
+    val plan = files.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed
+    val relation = plan match {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _)
+          if r.fileFormat.isInstanceOf[BinaryFileFormat] => r
+      case _ => throw new IllegalArgumentException(
+        s"expected a bare binaryFile relation as the listing, got:\n$plan")
+    }
+    val conf = files.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    val maxLength = conf.getConf(SQLConf.SOURCES_BINARY_FILE_MAX_LENGTH)
+    val listed = relation.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+    listed.find(_.getLen > maxLength).foreach { status =>
+      throw QueryExecutionErrors.fileLengthExceedsMaxLengthError(status, maxLength)
+    }
+    BinaryFileListing(listed, conf.filesOpenCostInBytes, conf.ignoreMissingFiles)
+  }
+
+  final case class BinaryFileListing(
+      files: Seq[FileStatus], openCostInBytes: Long, ignoreMissingFiles: Boolean)
+
+  /** A file scan's error for a listed file that is gone when read. */
+  def fileNotFound(path: String, e: FileNotFoundException): Throwable =
+    QueryExecutionErrors.fileNotExistError(path, e)
+
+  /** Inside a task: counts the task's input as a file scan does. The
+    * returned function, called after each file, adds one record and sets
+    * the bytes read to those this thread has read through Hadoop
+    * FileSystems since this call.
+    */
+  def inputCounter(): () => Unit = {
+    val metrics = TaskContext.get().taskMetrics().inputMetrics
+    val before = metrics.bytesRead
+    val readOnThread = SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+    () => {
+      metrics.incRecordsRead(1)
+      metrics.setBytesRead(before + readOnThread())
+    }
+  }
 }

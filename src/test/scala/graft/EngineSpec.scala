@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+
 import graft.split.SplitConfig
 
 /** End-to-end over the binaryFile source: real files on disk ->
@@ -144,5 +146,45 @@ class EngineSpec extends AnyFunSuite with SparkTestBase {
     val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .map(e => String.valueOf(e.getMessage))
     assert(messages.exists(_.contains("exceeds the max length allowed: 10")), err)
+  }
+
+  test("the maxLength bound fails at listing time, before any job starts") {
+    val key = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(key, "10")
+    var err: Exception = null
+    val jobs = try jobsDuring {
+      err = intercept[Exception](Engine.report(spark, root, opts))
+    } finally spark.conf.unset(key)
+    assert(jobs.isEmpty, jobs)
+    assert(String.valueOf(err.getMessage).contains("exceeds the max length allowed: 10"), err)
+  }
+
+  test("a file gone since the listing fails the job, or is skipped under " +
+    "ignoreMissingFiles, as the binaryFile scan does") {
+    import graft.sources.FileSources
+    val key = "spark.sql.files.ignoreMissingFiles"
+    def listedThenGone(): (Dataset[FileStats], DataFrame) = {
+      val dir = Files.createTempDirectory("enginegone")
+      Files.writeString(dir.resolve("kept.txt"), "kept words here")
+      Files.writeString(dir.resolve("gone.txt"), "gone words here")
+      val both = (Engine.fileStats(spark, dir.toString, opts),
+        FileSources.binaryFiles(spark, dir.toString).select("path", "length"))
+      Files.delete(dir.resolve("gone.txt"))
+      both
+    }
+    spark.conf.set(key, "true")
+    try {
+      val (skipped, scanSkipped) = listedThenGone()
+      assert(skipped.collect().map(_.path.split('/').last).toSeq == Seq("kept.txt"))
+      assert(scanSkipped.collect().map(_.getString(0).split('/').last).toSeq == Seq("kept.txt"))
+    } finally spark.conf.unset(key)
+    val (failed, scanFailed) = listedThenGone()
+    def notFound(run: => Any): Boolean = {
+      val err = intercept[Exception](run)
+      Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.FileNotFoundException])
+    }
+    assert(notFound(failed.collect()))
+    assert(notFound(scanFailed.collect()))
   }
 }

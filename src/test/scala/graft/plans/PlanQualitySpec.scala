@@ -17,30 +17,6 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Call sites of the jobs `body` starts on this thread, counted in
-    * its own job group once the listener bus has drained.
-    */
-  private def jobsDuring(body: => Unit): List[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.add(e.stageInfos.map(_.name).mkString("; "))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-    } finally {
-      org.apache.spark.ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    started.toArray(Array.empty[String]).toList
-  }
-
   test("q1: shipdate filter and column pruning reach the parquet scan") {
     val plan = graft.ext.Relational.q1Agg(spark, dir)
       .queryExecution.executedPlan.toString
@@ -1007,23 +983,33 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
       !phys.contains("BroadcastNestedLoopJoin"), phys)
   }
 
-  test("Engine.fileStats is one binaryFile scan folded per file: no join, " +
-    "window or shuffle") {
+  test("Engine.report and writeCsv: one job of one stage, a task per bin") {
+    import graft.sources.FileSources
     import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
     val root = java.nio.file.Files.createTempDirectory("statsplan")
-    java.nio.file.Files.write(root.resolve("a.pdf"), PdfFixtures.classicPdf(Seq("one", "two")))
-    java.nio.file.Files.write(root.resolve("b.pdf"), PdfFixtures.xrefStreamPdf(Seq("three")))
-    val stats = graft.Engine.fileStats(spark, root.toString,
-      graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor))
-    val plan = stats.queryExecution.executedPlan.toString
-    assert("FileScan binaryFile".r.findAllIn(plan).size == 1, plan)
-    assert(!plan.contains("Join"), plan)
-    assert(!plan.contains("Window"), plan)
-    assert(!plan.contains("Exchange"), plan)
-    // the scan lists files only; each task reads its file's bytes itself
-    val readSchemas = "ReadSchema: struct<[^>]*>".r.findAllIn(plan).toSeq
-    assert(readSchemas == Seq("ReadSchema: struct<path:string,length:bigint>"), plan)
-    assert(stats.collect().map(_.pages).sorted.toSeq == Seq(1L, 2L))
+    // more files than bins, of unequal sizes
+    val names = (1 to 20).map(i => f"f$i%02d.pdf")
+    for ((name, i) <- names.zipWithIndex)
+      java.nio.file.Files.write(root.resolve(name),
+        PdfFixtures.classicPdf(Seq.fill(1 + i % 5)("page " * (1 + i))))
+    val opts = graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor)
+    val listing = org.apache.spark.sql.graft.ColumnBridge.binaryFileListing(
+      FileSources.binaryFiles(spark, root.toString, opts.glob))
+    val bins = FileSources.packBins(listing.files.map(s => (s.getPath.toString, s.getLen)),
+      4 * spark.sparkContext.defaultParallelism, listing.openCostInBytes)
+    assert(bins.size == math.min(names.size, 4 * spark.sparkContext.defaultParallelism))
+    var rows = Seq.empty[String]
+    val run = sparkRunDuring {
+      val report = graft.Engine.report(spark, root.toString, opts)
+      graft.ops.ChunkPipeline.writeCsv(report,
+        java.nio.file.Files.createTempDirectory("statscsv").resolve("out").toString)
+      rows = report.collect().map(_.getString(0)).toSeq
+    }
+    assert(run.jobs.size == 1, run)
+    assert(run.stages == 1, run)
+    assert(run.shuffleBytes == 0, run)
+    assert(run.tasks == bins.size, run)
+    assert(rows == names :+ "SUM TOTAL")
   }
 
   test("Engine.report: one Spark job, no exchange; its CSV write starts none") {
