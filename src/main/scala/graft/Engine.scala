@@ -15,9 +15,9 @@ import graft.split.SplitConfig
   *     -> [[fileStats]] (the un-aggregated per-file Dataset);
   *   - `_read_pdf_file(..., b_get_content=True)`
   *     (`pdf_reader.py:405-503`) -> [[chunks]] (with content; callers
-  *     that don't select `rawText` get it column-pruned — the
-  *     reference's manual `b_get_content` flag is subsumed by
-  *     Catalyst, SURVEY.md §2.2 P12);
+  *     that don't select `rawText` get it column-pruned from their
+  *     rows, which subsumes the reference's `b_get_content` flag,
+  *     SURVEY.md §2.2 P12; the splitter builds the strings either way);
   *   - the CLI per-root loop + CSV naming
   *     (`pdf_reader.py:653-666`, `:195-215`) -> [[processRoots]].
   */
@@ -28,11 +28,15 @@ object Engine {
       split: SplitConfig = SplitConfig(),
       extractor: PageExtractor = PlainTextExtractor)
 
-  /** Chunks with content retained (the vector-db ingestion shape). */
-  def chunks(spark: SparkSession, root: String, opts: Options = Options()): Dataset[Chunk] =
-    ChunkPipeline.chunk(
-      FileSources.pages(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor),
-      opts.split)
+  /** Chunks with content and file offsets (the vector-db ingestion
+    * shape): [[ChunkPipeline.chunksOf]] walks each file in the task that
+    * reads it, so writing them is one scan → sink stage, no shuffle.
+    */
+  def chunks(spark: SparkSession, root: String, opts: Options = Options()): Dataset[Chunk] = {
+    import spark.implicits._
+    FileSources.perFile(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)(
+      ChunkPipeline.chunksOf(_, _, _, opts.split)).toDS()
+  }
 
   /** Per-file statistics (pages, chunks, sizes, ratio). Pages are
     * counted from the page source, not from chunks, so chunkless pages
@@ -45,7 +49,7 @@ object Engine {
     * each file once and reduces it with [[ChunkPipeline.fileStatsOf]] —
     * no shuffle, window or join. This Dataset wraps the job's RDD;
     * [[report]] collects the RDD itself. [[chunks]] is the ingestion
-    * shape that keeps the per-chunk rows and the window offsets.
+    * shape: the same walk over each file, keeping the chunk rows.
     */
   def fileStats(spark: SparkSession, root: String, opts: Options = Options()): Dataset[FileStats] = {
     import spark.implicits._

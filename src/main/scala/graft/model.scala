@@ -40,9 +40,9 @@ final case class Page(
   * `offsetInPage` is langchain's `start_index` — the chunk's char offset
   * in the *raw* page text; `chunkLen` is measured on the *normalized*
   * chunk text (`pdf_reader.py:460-477`, SURVEY.md §2.4 C2). The
-  * file-level running offset (`chunk_offset_in_file`,
-  * `pdf_reader.py:483-485`) is derived downstream with a window
-  * prefix-sum, not carried here.
+  * file-level ordinal and running offset (`chunk_offset_in_file`,
+  * `pdf_reader.py:483-485`) are counted as the file's chunks are made,
+  * in (page, chunk) order, by `ChunkPipeline.chunksOf`.
   *
   * @param path         source identifier
   * @param page         0-based page ordinal
@@ -50,6 +50,9 @@ final case class Page(
   * @param offsetInPage char offset of the chunk in the raw page text
   * @param rawText      chunk text as split (pre-normalization)
   * @param fileSize     source file size (carried for the ratio agg)
+  * @param chunkLen     code points of the normalized chunk text
+  * @param chunkInFile  0-based chunk ordinal within the file
+  * @param offsetInFile sum of the `chunkLen`s of the file's earlier chunks
   */
 final case class Chunk(
     path: String,
@@ -57,7 +60,10 @@ final case class Chunk(
     chunkIdx: Int,
     offsetInPage: Int,
     rawText: String,
-    fileSize: Long)
+    fileSize: Long,
+    chunkLen: Long,
+    chunkInFile: Long,
+    offsetInFile: Long)
 
 /** Per-file aggregate — the reference's file result
   * (`/root/reference/pdf_reader.py:495-503`), minus wall-clock

@@ -3,8 +3,7 @@ package graft.ops
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
@@ -15,16 +14,18 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
 /** The reference's core dataflow, Spark-first (SURVEY.md §0):
   *
   * {{{
-  * pages --flatMap splitter--> chunks --normalize/measure-->
-  *   window prefix-sum offsets --> per-file agg --> rollup report
+  * a file's pages --chunksOf--> chunks with file ordinal and offset
+  *   --> chunk rows (ingestion), or count + sum --> per-file row
+  *   --> rollup report
   * }}}
   *
   * Stage mapping to `/root/reference/pdf_reader.py`:
-  *   - chunking `:446-453` -> typed `flatMap` (C1)
-  *   - per-chunk normalize+measure `:459-477` -> codegen'd columns (C2)
-  *   - running file offset `:483-485` -> window prefix-sum (C3)
-  *   - per-file aggregate `:487-503` -> `groupBy(path).agg`, or the
-  *     in-task [[fileStatsOf]] fold (A1)
+  *   - chunking `:446-453`, per-chunk normalize+measure `:459-477` and
+  *     the chunk ordinal and running file offset `:483-485` ->
+  *     [[chunksOf]], one walk over one file's pages in page order
+  *     (C1-C4); [[chunkMetrics]] adds the normalized text as a column
+  *   - per-file aggregate `:487-503` -> [[fileStatsOf]], a count and a
+  *     sum over [[chunksOf]] (A1)
   *   - corpus totals + SUM TOTAL row `:130-164` (A2/U1) -> on the PDF
   *     path, the local `statsWithTotal(spark, rows)`: the collected
   *     per-file rows totalled and ordered on the driver, as the
@@ -33,23 +34,14 @@ import graft.split.{RecursiveCharacterSplitter, SplitConfig}
   *   - CSV sink `:174-186` (S5) -> [[writeCsv]], the lines made by
   *     Spark's CSV generator and written by the driver
   *
-  * Two shapes share the splitter and the normalization:
-  *   - ingestion ([[chunk]] + [[chunkMetrics]]) keeps one row per
-  *     chunk; its single shuffle is the hash-partition on `path` for
-  *     the window, and a following `groupBy(path)` reuses that
-  *     partitioning. Chunk `content` is dropped by Catalyst column
-  *     pruning whenever downstream doesn't select it — the reference's
-  *     manual `b_get_content=False` (`pdf_reader.py:406`) is
-  *     unnecessary.
-  *   - stats ([[fileStatsOf]], driven by [[graft.Engine.fileStats]])
-  *     folds each file to its row inside the task that reads it (a
-  *     driver-planned file job, [[graft.sources.FileSources.perFile]]):
-  *     no window, no shuffle, no join, and each chunk's normalized
-  *     length counted in one pass that builds no String
-  *     ([[Normalize.normalizedLength]]).
-  *     [[graft.Engine.report]] collects those rows, so a report is one
-  *     Spark job: the total, the formatting and the CSV run on the
-  *     driver over a local relation.
+  * Every chunk or stats producer runs the kernel once per file, in the
+  * task that holds the file's pages, so no chunk is shuffled to learn
+  * its place in the file. The source decides which pages make up a
+  * file: [[graft.sources.FileSources.perFile]] (a decoded file),
+  * [[perDocument]] (a `documents` row) or [[chunk]] (a page Dataset
+  * grouped by `path`). Column pruning keeps `rawText` out of rows whose
+  * consumer doesn't select it — the reference's `b_get_content=False`
+  * (`pdf_reader.py:406`) — though the splitter builds it either way.
   */
 object ChunkPipeline {
 
@@ -69,65 +61,62 @@ object ChunkPipeline {
       .as[Page]
   }
 
-  /** C1: recursive character split as a typed flatMap.
-    * One task per input partition; chunks never span pages (the
-    * reference splits per-`Document`, SURVEY.md §2.4).
+  /** [[pagesFromDocuments]] as a file source: `f` sees each row as one
+    * file, as [[graft.sources.FileSources.perFile]] shows a decoded file.
     */
-  def chunk(pages: Dataset[Page], cfg: SplitConfig = SplitConfig()): Dataset[Chunk] = {
-    import pages.sparkSession.implicits._
-    pages.flatMap { p =>
-      RecursiveCharacterSplitter.splitWithStartIndex(p.text, cfg)
-        .iterator.zipWithIndex.map { case ((chunkText, start), idx) =>
-          Chunk(p.path, p.page, idx, start, chunkText, p.fileSize)
-        }
+  def perDocument[T: Encoder](spark: SparkSession, dir: String)(
+      f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): Dataset[T] =
+    pagesFromDocuments(spark, dir).flatMap(p =>
+      f(p.path, p.fileSize, Seq(ExtractedPage(p.page, p.text, p.unmappedFonts))))
+
+  /** C1-C4, the chunk kernel: one file's chunks from its pages in page
+    * order, as the reference's worker walks them (`pdf_reader.py:446-485`).
+    * No chunk spans pages. Each carries its normalized length in code
+    * points ([[Normalize.normalizedLength]]), its ordinal in the file and
+    * the sum of the lengths of the file's chunks before it.
+    */
+  def chunksOf(
+      path: String, fileSize: Long, pages: Seq[ExtractedPage],
+      cfg: SplitConfig): Iterator[Chunk] = {
+    var chunkInFile = 0L
+    var offsetInFile = 0L
+    for {
+      p <- pages.iterator
+      ((text, start), idx) <-
+        RecursiveCharacterSplitter.splitWithStartIndex(p.text, cfg).iterator.zipWithIndex
+    } yield {
+      val len = Normalize.normalizedLength(text).toLong
+      val c = Chunk(path, p.page, idx, start, text, fileSize, len, chunkInFile, offsetInFile)
+      chunkInFile += 1
+      offsetInFile += len
+      c
     }
   }
 
-  /** C2-C4: normalized text, chunk length, file-order ordinal, and the
-    * running `offset_in_file` prefix-sum (the reference's only
-    * window-shaped computation, `pdf_reader.py:483-485`).
+  /** [[chunksOf]] over any page Dataset: one shuffle groups each file's
+    * pages by `path`, and they are walked in page order, whatever the
+    * input's partitioning and order.
     */
-  def chunkMetrics(chunks: Dataset[Chunk]): DataFrame = {
-    val byFile = Window.partitionBy("path").orderBy("page", "chunkIdx")
-    val prefix = byFile.rowsBetween(Window.unboundedPreceding, -1)
-    chunks.toDF()
-      .withColumn("norm_text", Normalize.normalizeCol(col("rawText")))
-      .withColumn("chunk_len", length(col("norm_text")).cast("long"))
-      .withColumn("chunk_in_file", (row_number().over(byFile) - 1).cast("long"))
-      .withColumn("offset_in_file",
-        coalesce(sum(col("chunk_len")).over(prefix), lit(0L)))
+  def chunk(pages: Dataset[Page], cfg: SplitConfig = SplitConfig()): Dataset[Chunk] = {
+    import pages.sparkSession.implicits._
+    pages.groupByKey(_.path).flatMapGroups { (path, group) =>
+      val inOrder = group.toVector.sortBy(_.page)
+      chunksOf(path, inOrder.head.fileSize,
+        inOrder.map(p => ExtractedPage(p.page, p.text, p.unmappedFonts)), cfg)
+    }
   }
 
-  /** A1: per-file stats. Runs on the output of [[chunkMetrics]] and
-    * reuses its hash-partitioning on `path` — no extra shuffle.
-    * `ratio` is null (not an error) for zero-text files — documented
-    * deviation from the reference's ZeroDivisionError
-    * (`pdf_reader.py:491`, SURVEY.md §7.4).
+  /** C2-C4 under the reference's names: the [[chunksOf]] fields plus
+    * the normalized chunk text ([[Normalize.normalizeCol]]).
     */
-  def fileStats(chunkMetrics: DataFrame): Dataset[FileStats] = {
-    val spark = chunkMetrics.sparkSession
-    import spark.implicits._
-    chunkMetrics.groupBy(col("path"))
-      .agg(
-        // pages are 0-based consecutive ordinals, so max+1 == count —
-        // avoids the extra expand+exchange a count(DISTINCT) plans
-        (max(col("page")) + 1).cast("long").as("pages"),
-        count(lit(1)).as("chunks"),
-        max(col("fileSize")).as("fileSize"),
-        sum(col("chunk_len")).as("textSize"))
-      .withColumn("ratio",
-        when(col("textSize") === 0, lit(null).cast("double"))
-          .otherwise(col("fileSize").cast("double") / col("textSize")))
-      .select(
-        col("path"), col("pages"), col("chunks"),
-        col("fileSize"), col("textSize"), col("ratio"),
-        // chunk rows exist only for pages that yielded text, so font
-        // telemetry cannot flow through this overload — it is 0 by
-        // construction here (documents-table sources have no fonts);
-        // the page-aware overload below carries the real counts
-        lit(0L).as("unmappedFonts"))
-      .as[FileStats]
-  }
+  def chunkMetrics(chunks: Dataset[Chunk]): DataFrame =
+    chunks.toDF().select(
+      col("path"), col("page"), col("chunkIdx"), col("offsetInPage"),
+      col("rawText"), col("fileSize"),
+      Normalize.normalizeCol(col("rawText")).as("norm_text"),
+      col("chunkLen").as("chunk_len"),
+      col("chunkInFile").as("chunk_in_file"),
+      col("offsetInFile").as("offset_in_file"))
 
   /** A2 + U1: per-file rows plus the corpus-total row — expressed as a
     * `rollup("path")` (one pass, partial aggregation map-side) with the
@@ -267,9 +256,8 @@ object ChunkPipeline {
 
   /** A1 with page-truth over a page Dataset and its [[chunkMetrics]]:
     * two aggregations joined on `path`, so the page source is
-    * evaluated twice. [[graft.Engine.fileStats]] no longer uses it —
-    * it folds each file with [[fileStatsOf]] — and it stays only for
-    * callers that already hold both inputs.
+    * evaluated twice. It gives the [[fileStatsOf]] rows and serves as
+    * their relational reference; no engine path uses it.
     */
   def fileStats(pages: Dataset[Page], chunkMetrics: DataFrame): Dataset[FileStats] = {
     val spark = pages.sparkSession
@@ -302,9 +290,7 @@ object ChunkPipeline {
     * (empty/whitespace text) gets `chunks = 0` and a null ratio (the
     * documented deviation from the reference's ZeroDivisionError,
     * SURVEY.md §7.4). A file with no pages (undecodable) has no row.
-    * Chunk lengths are code points of the normalized chunk, the same
-    * count Spark's `length` gives in [[chunkMetrics]], counted without
-    * building the normalized chunk.
+    * `chunks` and `textSize` are a count and a sum over [[chunksOf]].
     * `unmappedFonts` sums the per-page counts: one entry per (page,
     * font resource) whose text was dropped as opaque — the
     * honest-telemetry flag for silently-empty CJK extractions.
@@ -316,9 +302,9 @@ object ChunkPipeline {
     else {
       var chunks = 0L
       var textSize = 0L
-      for (p <- pages; c <- RecursiveCharacterSplitter.splitText(p.text, cfg)) {
+      for (c <- chunksOf(path, length, pages, cfg)) {
         chunks += 1
-        textSize += Normalize.normalizedLength(c)
+        textSize += c.chunkLen
       }
       Some(FileStats(path, pages.map(_.page).max + 1L, chunks, length, textSize,
         if (textSize == 0) None else Some(length.toDouble / textSize),
@@ -329,6 +315,8 @@ object ChunkPipeline {
   def docChunkStats(
       spark: SparkSession,
       dir: String,
-      cfg: SplitConfig = SplitConfig()): DataFrame =
-    statsWithTotal(fileStats(chunkMetrics(chunk(pagesFromDocuments(spark, dir), cfg))))
+      cfg: SplitConfig = SplitConfig()): DataFrame = {
+    import spark.implicits._
+    statsWithTotal(perDocument(spark, dir)(fileStatsOf(_, _, _, cfg)))
+  }
 }

@@ -14,7 +14,7 @@ import graft.split.SplitConfig
   * oracle strategy (SURVEY.md §5.1) is: (a) the full pipeline runs
   * with the real splitter as `doc_chunk_stats` (rows-only check +
   * ScalaTest golden/property coverage), and (b) a fixed-width chunker
-  * variant exercises the identical downstream dataflow
+  * variant recomputes the same downstream quantities in SQL
   * (explode/normalize/measure/window/agg/rollup) with a
   * `generate_series`+`substr` DuckDB oracle.
   */
@@ -27,15 +27,9 @@ object CoreQueries {
     * splitting and merging; the reference default 1200 would yield one
     * chunk per doc).
     */
-  /** Cold-time note (VERDICT r3 #9): the plan is unchanged since r1
-    * (flatMap split → window prefix-sum → path-partitioned agg →
-    * rollup; one shuffle, pinned by PlanQualitySpec). Measured: hot
-    * 0.32–0.40 s at sf0.1 across r3/r4 driver benches — *better*
-    * than r1's 0.57 s cold — while "cold" swings 0.5–1.0 s with run
-    * ORDER (it's dominated by whichever whole-stage-codegen paths
-    * earlier queries already compiled: 2.7 s alone in a fresh JVM,
-    * `SPARK_GRAFT_ONLY=doc_chunk_stats`). No per-query cost was
-    * added; the golden fixture rides only the DuckDB oracle side.
+  /** One shuffle, the rollup's (pinned by PlanQualitySpec): each
+    * `documents` row is folded to its per-file row by
+    * `ChunkPipeline.fileStatsOf` in the scan task.
     */
   def docChunkStats(spark: SparkSession, dir: String): DataFrame =
     ChunkPipeline.docChunkStats(spark, dir, SplitConfig(chunkSize = 100, chunkOverlap = 0))
@@ -52,14 +46,17 @@ object CoreQueries {
   def docChunksOverlap(spark: SparkSession, dir: String): DataFrame =
     docChunksAt(spark, dir, graft.tools.GoldenChunks.OverlapCfg)
 
-  private def docChunksAt(spark: SparkSession, dir: String, cfg: SplitConfig): DataFrame =
-    ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ChunkPipeline.pagesFromDocuments(spark, dir), cfg))
+  private def docChunksAt(spark: SparkSession, dir: String, cfg: SplitConfig): DataFrame = {
+    import spark.implicits._
+    ChunkPipeline.chunkMetrics(
+        ChunkPipeline.perDocument(spark, dir)(ChunkPipeline.chunksOf(_, _, _, cfg)))
       .select(
         col("path").cast("long").as("doc_id"),
         col("chunkIdx").cast("long").as("chunk_idx"),
         col("offsetInPage").cast("long").as("offset_in_page"),
         col("chunk_len"), col("offset_in_file"), col("norm_text"))
       .orderBy("doc_id", "chunk_idx")
+  }
 
   // ---------------------------------------------------------------
   // Golden-fixture oracles for the real-splitter queries.

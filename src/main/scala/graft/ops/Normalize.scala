@@ -18,11 +18,11 @@ import org.apache.spark.sql.functions._
   *
   * Three forms:
   *   - [[normalizeCol]], a `Column` transform (codegen'd
-  *     `regexp_replace` + `lower`), used by the ingestion shape's
-  *     `chunkMetrics`;
-  *   - [[normalizedLength]], the stats hot path: `ChunkPipeline.fileStatsOf`
-  *     only counts each chunk's normalized code points inside the scan
-  *     task, so it builds no String;
+  *     `regexp_replace` + `lower`), which gives `chunkMetrics` its
+  *     `norm_text`;
+  *   - [[normalizedLength]], the chunk kernel's measure:
+  *     `ChunkPipeline.chunksOf` counts each chunk's normalized code
+  *     points inside the scan task, so it builds no String;
   *   - [[normalize]], the String function, one left-to-right pass then
   *     one lowercase; it is off the hot path and stays as the readable
   *     twin of the other two (the benchmark's closed-form check and the

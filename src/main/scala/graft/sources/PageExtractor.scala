@@ -161,10 +161,10 @@ object FileSources {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Files -> typed pages through a [[PageExtractor]] (streams per file,
-    * no driver materialization; a 10 GB file's pages iterate through the
-    * task, unlike the reference which holds the whole file's pages+chunks
-    * in worker memory, SURVEY.md §4).
+  /** Files -> typed pages through a [[PageExtractor]], one [[perFile]]
+    * decode per file: nothing on the driver, but a task holds one whole
+    * file's bytes and pages at a time (bounded by `binaryFile.maxLength`),
+    * as the reference's worker holds a file's pages (SURVEY.md §4).
     */
   def pages(
       files: DataFrame,

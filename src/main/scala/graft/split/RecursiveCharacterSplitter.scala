@@ -41,8 +41,9 @@ final case class SplitConfig(
   *     remain, the oversize piece passes through unsplit;
   *   - merged chunks are whitespace-stripped; empty chunks dropped.
   *
-  * Zero Spark dependencies: invoked from a typed `flatMap`
-  * (SURVEY.md §2.4 C1) and directly unit/property-testable.
+  * Zero Spark dependencies: invoked per page by the chunk kernel
+  * `ChunkPipeline.chunksOf` (SURVEY.md §2.4 C1) and directly
+  * unit/property-testable.
   */
 object RecursiveCharacterSplitter {
 

@@ -54,8 +54,9 @@ object GoldenChunks {
     val key = graft.sources.Tables.table(spark, dir, "documents")
       .agg(count(lit(1)), sum(col("n_chars")).cast("long")).head()
     val (nDocs, nChars) = (key.getLong(0), key.getLong(1))
+    import spark.implicits._
     ChunkPipeline.chunkMetrics(
-        ChunkPipeline.chunk(ChunkPipeline.pagesFromDocuments(spark, dir), cfg))
+        ChunkPipeline.perDocument(spark, dir)(ChunkPipeline.chunksOf(_, _, _, cfg)))
       .select(
         col("path").cast("long").as("doc_id"),
         col("chunkIdx").cast("int").as("chunk_idx"),

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{Page, SparkTestBase}
 import graft.split.{RecursiveCharacterSplitter, SplitConfig}
 
-/** End-to-end chunk pipeline semantics: C2-C4 offsets (scanLeft
-  * oracle), A1 per-file agg, A2 rollup with SUM-TOTAL-last invariant,
-  * P11 null ratio on zero text (documented deviation from the
-  * reference's ZeroDivisionError, SURVEY.md §7.4).
+/** End-to-end chunk pipeline semantics: C2-C4 ordinals and offsets
+  * (scanLeft oracle), A1 per-file agg, A2 rollup with SUM-TOTAL-last
+  * invariant, P11 null ratio on zero text (documented deviation from
+  * the reference's ZeroDivisionError, SURVEY.md §7.4).
   */
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
@@ -23,17 +23,23 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("chunk offsets: offset_in_file is the scanLeft prefix sum in (page, chunk) order") {
     import spark.implicits._
-    val ds = spark.createDataset(pages)
-    val metrics = ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg))
-      .select("path", "page", "chunkIdx", "chunk_len", "offset_in_file")
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-      .sortBy(t => (t._1, t._2, t._3))
+    // in order, and with each file's pages reversed and spread over
+    // partitions: the kernel must see a file's pages in page order
+    val input = pages ++ (0 until 7).map(i => Page("doc4", i, s"page $i of doc four, one chunk", 90))
+    for (ds <- Seq(spark.createDataset(input), spark.createDataset(input.reverse).repartition(3))) {
+      val metrics = ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg))
+        .select("path", "page", "chunkIdx", "chunk_len", "chunk_in_file", "offset_in_file")
+        .collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      assert(metrics.map(_._1).toSet == Set("doc1", "doc2", "doc4"))
+      assert(metrics.count(_._1 == "doc1") > 2 && metrics.count(_._1 == "doc4") == 7)
 
-    for ((path, group) <- metrics.groupBy(_._1)) {
-      val ordered = group.sortBy(t => (t._2, t._3))
-      val expectedOffsets = ordered.map(_._4).scanLeft(0L)(_ + _).init
-      assert(ordered.map(_._5).toSeq == expectedOffsets.toSeq, s"path=$path")
+      for ((path, group) <- metrics.groupBy(_._1)) {
+        val ordered = group.sortBy(t => (t._2, t._3))
+        assert(ordered.map(_._5).toSeq == ordered.indices.map(_.toLong), s"path=$path")
+        val expectedOffsets = ordered.map(_._4).scanLeft(0L)(_ + _).init
+        assert(ordered.map(_._6).toSeq == expectedOffsets.toSeq, s"path=$path")
+      }
     }
   }
 
@@ -51,24 +57,30 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   test("fileStats: pages, chunks, textSize, null-safe ratio") {
     import spark.implicits._
     val ds = spark.createDataset(pages)
-    val stats = ChunkPipeline.fileStats(ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg)))
+    val joined = ChunkPipeline.fileStats(ds, ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg)))
       .collect().map(s => s.path -> s).toMap
+    val folded = pages.groupBy(_.path).map { case (path, ps) =>
+      path -> ChunkPipeline.fileStatsOf(path, ps.head.fileSize,
+        ps.map(p => graft.sources.ExtractedPage(p.page, p.text)), cfg).get
+    }
+    assert(folded == joined)
 
-    assert(stats("doc1").pages == 2)
+    assert(folded("doc1").pages == 2)
     val expectedChunks1 =
       RecursiveCharacterSplitter.splitText(pages(0).text, cfg).size +
         RecursiveCharacterSplitter.splitText(pages(1).text, cfg).size
-    assert(stats("doc1").chunks == expectedChunks1)
-    assert(stats("doc2").ratio.get == 40.0 / stats("doc2").textSize)
-    // zero-text file: flatMap yields no chunks at all -> absent from stats
-    assert(!stats.contains("doc3"))
+    assert(folded("doc1").chunks == expectedChunks1)
+    assert(folded("doc2").ratio.get == 40.0 / folded("doc2").textSize)
+    assert(folded("doc2").textSize == Normalize.normalize("short text").length)
+    // zero-text file: its page counts, no chunks, null ratio
+    assert(folded("doc3") == graft.FileStats("doc3", 1L, 0L, 7L, 0L, None))
   }
 
   test("statsWithTotal: SUM TOTAL row last, ratio of sums not mean of ratios") {
     import spark.implicits._
     val ds = spark.createDataset(pages.take(3))
     val rows = ChunkPipeline.statsWithTotal(
-      ChunkPipeline.fileStats(ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg))))
+      ChunkPipeline.fileStats(ds, ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg))))
       .collect()
     assert(rows.last.getString(0) == "SUM TOTAL")
     val details = rows.init
@@ -89,8 +101,9 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       assert(got == rollup.collect().toSeq)
       got
     }
-    val piped = ChunkPipeline.fileStats(ChunkPipeline.chunkMetrics(
-      ChunkPipeline.chunk(spark.createDataset(pages), cfg))).collect().toSeq
+    val ds = spark.createDataset(pages.take(3))
+    val piped = ChunkPipeline.fileStats(ds,
+      ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(ds, cfg))).collect().toSeq
     assert(both(piped).map(_.getString(0)) == Seq("doc1", "doc2", "SUM TOTAL"))
     // a zero-text file: null ratio on its row, the total's ratio of sums
     val zero = graft.FileStats("/d/zero.pdf", 3L, 0L, 70L, 0L, None, 2L)
@@ -208,14 +221,15 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(stats.textSize == 5)
   }
 
-  test("per-file fold equals the page/chunk join it replaced") {
+  /** Text and PDF roots: a chunkless trailing page (form feed), an
+    * all-whitespace file, final sigma, dotted capital I, capital sharp
+    * s, titlecase digraph, supplementary-plane letters, an xref-stream
+    * PDF with an empty middle page, and an undecodable PDF.
+    */
+  private lazy val foldCorpus: (String, String) = {
     import java.nio.file.Files
-    import graft.sources.{FileSources, PageExtractor, PlainTextExtractor}
-    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    import graft.sources.pdf.PdfFixtures
     val txt = Files.createTempDirectory("foldtxt")
-    // chunkless trailing page (form feed), all-whitespace file,
-    // final sigma, dotted capital I, capital sharp s, titlecase
-    // digraph, supplementary-plane letters
     Files.writeString(txt.resolve("tail.txt"), "alpha beta gamma\f  \n ")
     Files.writeString(txt.resolve("blank.txt"), " \n\t ")
     Files.writeString(txt.resolve("greek.txt"), "ΟΔΟΣ ΣΣ. ΣΟΦΙΑ\n\nΣΣ.\fτελοΣ")
@@ -225,7 +239,16 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     Files.write(pdf.resolve("ok.pdf"),
       PdfFixtures.xrefStreamPdf(Seq("one two three four five six", "", "seven")))
     Files.write(pdf.resolve("bad.pdf"), "not a pdf at all".getBytes)
-    val cfg = SplitConfig(chunkSize = 12, chunkOverlap = 0)
+    (txt.toString, pdf.toString)
+  }
+
+  private val foldCfg = SplitConfig(chunkSize = 12, chunkOverlap = 0)
+
+  test("per-file fold equals the page/chunk join it replaced") {
+    import graft.sources.{FileSources, PageExtractor, PlainTextExtractor}
+    import graft.sources.pdf.PdfTextExtractor
+    val (txt, pdf) = foldCorpus
+    val cfg = foldCfg
     def viaJoin(root: String, glob: String, ex: PageExtractor) = {
       val pages = FileSources.pages(FileSources.binaryFiles(spark, root, glob), ex)
       ChunkPipeline.fileStats(pages, ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(pages, cfg)))
@@ -233,15 +256,49 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     }
     def viaFold(root: String, glob: String, ex: PageExtractor) =
       graft.Engine.fileStats(spark, root, graft.Engine.Options(glob, cfg, ex)).collect().toSet
-    val txtFold = viaFold(txt.toString, "*.txt", PlainTextExtractor)
-    assert(txtFold == viaJoin(txt.toString, "*.txt", PlainTextExtractor))
+    val txtFold = viaFold(txt, "*.txt", PlainTextExtractor)
+    assert(txtFold == viaJoin(txt, "*.txt", PlainTextExtractor))
     val byName = txtFold.map(s => s.path.split('/').last -> s).toMap
     assert(byName("tail.txt").pages == 2 && byName("tail.txt").chunks == 2)
     assert(byName("blank.txt").chunks == 0 && byName("blank.txt").ratio.isEmpty)
-    val pdfFold = viaFold(pdf.toString, "*.pdf", PdfTextExtractor)
-    assert(pdfFold == viaJoin(pdf.toString, "*.pdf", PdfTextExtractor))
+    val pdfFold = viaFold(pdf, "*.pdf", PdfTextExtractor)
+    assert(pdfFold == viaJoin(pdf, "*.pdf", PdfTextExtractor))
     assert(pdfFold.map(_.path.split('/').last) == Set("ok.pdf"))
     assert(pdfFold.head.pages == 3)
+  }
+
+  test("Engine.chunks gives the chunk rows of the page source grouped by file") {
+    import org.apache.spark.sql.functions.{col, length}
+    import graft.sources.{FileSources, PageExtractor, PlainTextExtractor}
+    import graft.sources.pdf.PdfTextExtractor
+    val (txt, pdf) = foldCorpus
+    for ((root, glob, ex) <- Seq[(String, String, PageExtractor)](
+        (txt, "*.txt", PlainTextExtractor), (pdf, "*.pdf", PdfTextExtractor))) {
+      val perFile = graft.Engine.chunks(spark, root, graft.Engine.Options(glob, foldCfg, ex))
+      val grouped = ChunkPipeline.chunk(
+        FileSources.pages(FileSources.binaryFiles(spark, root, glob), ex), foldCfg)
+      val rows = perFile.collect().toSeq
+      assert(rows.toSet == grouped.collect().toSet, root)
+      assert(rows.size == rows.toSet.size, root)
+      // each file's chunks: numbered 0..n-1 and offset by the lengths
+      // before them in (page, chunk) order, each the splitter's chunk
+      // of its page, measured as Spark's length of the normalized text
+      for ((path, cs) <- rows.groupBy(_.path)) {
+        val ordered = cs.sortBy(c => (c.page, c.chunkIdx))
+        assert(ordered.map(_.chunkInFile) == ordered.indices.map(_.toLong), path)
+        assert(ordered.map(_.offsetInFile) == ordered.map(_.chunkLen).scanLeft(0L)(_ + _).init, path)
+      }
+      val mismatched = ChunkPipeline.chunkMetrics(perFile)
+        .filter(col("chunk_len") =!= length(col("norm_text"))).count()
+      assert(mismatched == 0, root)
+    }
+    val txtFiles = graft.Engine.chunks(spark, txt, graft.Engine.Options("*.txt", foldCfg))
+      .collect().map(_.path.split('/').last).toSet
+    assert(txtFiles == Set("tail.txt", "greek.txt", "mixed.txt"))
+    val pdfChunks = graft.Engine.chunks(spark, pdf,
+      graft.Engine.Options("*.pdf", foldCfg, PdfTextExtractor)).collect()
+    assert(pdfChunks.map(_.path.split('/').last).toSet == Set("ok.pdf"))
+    assert(pdfChunks.map(_.page).toSet == Set(0, 2)) // the empty middle page has none
   }
 }
 

@@ -444,16 +444,34 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("chunk pipeline: window and per-file agg share one path partition") {
-    val df = graft.ops.ChunkPipeline.docChunkStats(spark, dir,
+  test("chunk pipeline: no window, one exchange; ingestion has no shuffle") {
+    val plan = graft.ops.ChunkPipeline.docChunkStats(spark, dir,
       graft.split.SplitConfig(chunkSize = 100, chunkOverlap = 0))
-    val plan = df.queryExecution.executedPlan.toString
-    // exactly two hash exchanges: one hash-partition on path feeding
-    // BOTH the offset window and the per-file aggregate (a third
-    // would mean the agg re-shuffled), plus the rollup's re-agg; the
-    // report is ordered inside its one output partition, no range sort
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2, plan)
-    assert("Exchange rangepartitioning".r.findAllIn(plan).isEmpty, plan)
+      .queryExecution.executedPlan.toString
+    // each document is folded to its row in the scan task: the rollup's
+    // re-agg is the one exchange, and the report is ordered inside its
+    // one output partition, no range sort
+    assert(!plan.contains("Window"), plan)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("rangepartitioning"), plan)
+
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val root = java.nio.file.Files.createTempDirectory("ingestplan")
+    for (i <- 1 to 6)
+      java.nio.file.Files.write(root.resolve(s"f$i.pdf"),
+        PdfFixtures.classicPdf(Seq.fill(i)("word " * (20 * i))))
+    val opts = graft.Engine.Options(glob = "*.pdf",
+      split = graft.split.SplitConfig(chunkSize = 60), extractor = PdfTextExtractor)
+    val out = java.nio.file.Files.createTempDirectory("ingestsink").resolve("out").toString
+    val run = sparkRunDuring {
+      graft.ops.ChunkPipeline.chunkMetrics(graft.Engine.chunks(spark, root.toString, opts))
+        .write.mode("overwrite").parquet(out)
+    }
+    assert(run.jobs.size == 1, run)
+    assert(run.stages == 1, run)
+    assert(run.shuffleBytes == 0, run)
+    val written = spark.read.parquet(out)
+    assert(written.count() > 21 && written.filter(col("offset_in_file") > 0).count() > 0)
   }
 
   test("rewrite does NOT fire when the rank column is observed") {
