@@ -34,7 +34,7 @@ object Engine {
     */
   def chunks(spark: SparkSession, root: String, opts: Options = Options()): Dataset[Chunk] = {
     import spark.implicits._
-    FileSources.perFile(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)(
+    FileSources.perFile(spark, root, opts.glob, opts.extractor)(
       ChunkPipeline.chunksOf(_, _, _, opts.split)).toDS()
   }
 
@@ -57,7 +57,7 @@ object Engine {
   }
 
   private def fileStatsRdd(spark: SparkSession, root: String, opts: Options): RDD[FileStats] =
-    FileSources.perFile(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)(
+    FileSources.perFile(spark, root, opts.glob, opts.extractor)(
       ChunkPipeline.fileStatsOf(_, _, _, opts.split))
 
   /** The [[fileStats]] rows on the driver, from the one Spark job of the
@@ -70,20 +70,19 @@ object Engine {
   /** Formatted report with the SUM TOTAL row last
     * (`pdf_reader.py:151-171`), in one Spark job: the [[fileStats]]
     * rows are collected, and the total, the order and the formatting
-    * run on the driver over a local relation, as the reference's main
-    * process totals its workers' rows (`pdf_reader.py:130-164`). The
-    * driver holds one row per file.
+    * run on the driver with no plan ([[ChunkPipeline.localReport]]), as
+    * the reference's main process totals its workers' rows
+    * (`pdf_reader.py:130-164`). The driver holds one row per file; the
+    * DataFrame is a local relation of the formatted rows.
     */
   def report(spark: SparkSession, root: String, opts: Options = Options()): DataFrame =
-    report(spark, collectFileStats(spark, root, opts))
-
-  /** The formatted report of per-file rows already on the driver. */
-  def report(spark: SparkSession, stats: Seq[FileStats]): DataFrame =
-    ChunkPipeline.report(ChunkPipeline.statsWithTotal(spark, stats))
+    ChunkPipeline.localReport(collectFileStats(spark, root, opts)).toDF(spark)
 
   /** S4 + S8: per-root loop with sanitized per-root CSV names — the
     * reference writes one CSV per input folder
-    * (`pdf_reader.py:653-666`). Returns root -> written CSV dir.
+    * (`pdf_reader.py:653-666`). Returns root -> written CSV dir. Each
+    * root runs the one job of [[report]]; its CSV is formatted and
+    * written by the driver with no further plan.
     */
   def processRoots(
       spark: SparkSession,
@@ -92,7 +91,8 @@ object Engine {
       opts: Options = Options()): Map[String, String] =
     roots.map { root =>
       val out = s"$outDir/${sanitizeFolderPath(root)}"
-      ChunkPipeline.writeCsv(report(spark, root, opts), out)
+      ChunkPipeline.writeCsv(spark,
+        ChunkPipeline.localReport(collectFileStats(spark, root, opts)), out)
       root -> out
     }.toMap
 

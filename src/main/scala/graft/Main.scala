@@ -92,8 +92,9 @@ object Main {
       // rows reach the driver, and the table, the metadata, the CSV and
       // the summary all derive from them with no further job
       val stats = Engine.collectFileStats(spark, root, opts)
-      val report = Engine.report(spark, stats)
-      report.show(stats.size + 1, truncate = false) // S6 console sink, untruncated
+      val report = graft.ops.ChunkPipeline.localReport(stats)
+      // S6 console sink, untruncated
+      report.toDF(spark).show(report.rows.size, truncate = false)
       if (args.printMetadata) {
         import org.apache.spark.sql.functions.{struct, to_json, col}
         import spark.implicits._
@@ -101,7 +102,7 @@ object Main {
           .collect().foreach(r => println(r.getString(0)))
       }
       val out = s"${args.outputDir}/${Engine.sanitizeFolderPath(root)}"
-      graft.ops.ChunkPipeline.writeCsv(report, out)
+      graft.ops.ChunkPipeline.writeCsv(spark, report, out)
       println(summary(stats))
       println(s"[graft] wrote $out")
     }

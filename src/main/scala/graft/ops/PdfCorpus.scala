@@ -235,8 +235,7 @@ object PdfCorpus {
       spark: SparkSession, root: String, variantMod: Int): DataFrame = {
     import spark.implicits._
     val cfg = SplitConfig()
-    val perDoc = FileSources.perFile(FileSources.binaryFiles(spark, root, "*.pdf"),
-        PdfTextExtractor) { (path, length, pages) =>
+    val perDoc = FileSources.perFile(spark, root, "*.pdf", PdfTextExtractor) { (path, length, pages) =>
       ChunkPipeline.fileStatsOf(path, length, pages, cfg).map(s =>
         (s.path, s.pages, s.chunks, s.textSize, s.unmappedFonts, textMd5(pages)))
     }.toDF("path", "pages", "chunks", "text_size", "unmapped_fonts", "text_md5")

@@ -63,27 +63,30 @@ object FileSources {
     * the listing (the reference's `os.walk` + lowercase-endswith,
     * `/root/reference/pdf_reader.py:327-359`), file size for free.
     * Spark lists the files when the relation is created; [[perFile]]
-    * takes that listing and reads each file itself, so this relation
-    * is never scanned on the PDF path.
+    * lists the same files from the same file index without the
+    * relation, and reads each file itself, so this relation is never
+    * scanned on the PDF path.
     */
   def binaryFiles(spark: SparkSession, root: String, glob: String = "*.txt"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", glob)
-      .load(root)
+    spark.read.format("binaryFile").options(binaryFileOptions(glob)).load(root)
 
-  /** Files -> one decode per file: `f` sees each file's path, byte
-    * length and extracted pages (in page order) inside the task that
-    * reads the file, so a per-file result needs no shuffle back to the
-    * file.
+  private[graft] def binaryFileOptions(glob: String): Map[String, String] =
+    Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> glob)
+
+  /** Files under `root` matching `glob` -> one decode per file: `f` sees
+    * each file's path, byte length and extracted pages (in page order)
+    * inside the task that reads the file, so a per-file result needs no
+    * shuffle back to the file.
     *
     * A file job planned on the driver, which reproduces the reference's
     * big-files-first pool map (O1, `pdf_reader.py:361-388,543-544`):
-    *   - the listing is the file index of the [[binaryFiles]] relation
-    *     `files` (which must be that bare relation), so Spark's recursive
+    *   - the listing is that of the [[binaryFiles]] relation of `root`
+    *     and `glob`, from the file index that relation would hold, built
+    *     directly ([[ColumnBridge.binaryFileListing]]): Spark's recursive
     *     lookup, glob, hidden-file and empty-file rules apply, no job
-    *     runs, and `spark.sql.sources.binaryFile.maxLength` fails the
-    *     call before any task starts;
+    *     runs, a missing root fails as the relation does, and
+    *     `spark.sql.sources.binaryFile.maxLength` fails the call before
+    *     any task starts;
     *   - [[packBins]] packs the files largest first into
     *     `min(files, 4 x defaultParallelism)` bins, heaviest bin first;
     *   - one plain job reads and folds the bins, one task each: every
@@ -92,10 +95,20 @@ object FileSources {
     *     fails the task, or is skipped under `ignoreMissingFiles`, as a
     *     file scan does.
     */
+  def perFile[T: ClassTag](spark: SparkSession, root: String, glob: String, extractor: PageExtractor)(
+      f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): RDD[T] =
+    perFile(spark, ColumnBridge.binaryFileListing(spark, root, binaryFileOptions(glob)), extractor)(f)
+
+  /** [[perFile]] over the listing of `files`, which must be a bare
+    * [[binaryFiles]] relation.
+    */
   def perFile[T: ClassTag](files: DataFrame, extractor: PageExtractor)(
+      f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): RDD[T] =
+    perFile(files.sparkSession, ColumnBridge.binaryFileListing(files), extractor)(f)
+
+  private def perFile[T: ClassTag](
+      spark: SparkSession, listing: ColumnBridge.BinaryFileListing, extractor: PageExtractor)(
       f: (String, Long, Seq[ExtractedPage]) => IterableOnce[T]): RDD[T] = {
-    val spark = files.sparkSession
-    val listing = ColumnBridge.binaryFileListing(files)
     val bins = packBins(listing.files.map(s => (s.getPath.toString, s.getLen)),
       4 * spark.sparkContext.defaultParallelism, listing.openCostInBytes)
     val hadoopConf = ColumnBridge.hadoopConfInTask(spark)

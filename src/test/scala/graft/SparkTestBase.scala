@@ -17,16 +17,20 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   def jobsDuring(body: => Unit): List[String] = sparkRunDuring(body).jobs
 
   /** What `body` runs on Spark from this thread, counted in its own job
-    * group once the listener bus has drained.
+    * group once the listener bus has drained: its jobs, stages, tasks and
+    * shuffle bytes, and the SQL executions it starts.
     */
   def sparkRunDuring(body: => Unit): SparkTestBase.SparkRun = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
     val group = s"jobs-during-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val tasks = new java.util.concurrent.atomic.AtomicInteger()
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
@@ -39,6 +43,11 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
           Option(e.taskMetrics).foreach(m =>
             shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          sqlExecutions.incrementAndGet()
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -49,16 +58,18 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
       sc.removeSparkListener(listener)
     }
     SparkTestBase.SparkRun(jobs.toArray(Array.empty[String]).toList, stages.size,
-      tasks.get, shuffleBytes.get)
+      tasks.get, shuffleBytes.get, sqlExecutions.get)
   }
 }
 
 object SparkTestBase {
 
   /** Per job, the names of its stages; over all jobs, the stages, the
-    * tasks that ended and the shuffle bytes they wrote.
+    * tasks that ended and the shuffle bytes they wrote; and the SQL
+    * executions started.
     */
-  final case class SparkRun(jobs: List[String], stages: Int, tasks: Int, shuffleBytes: Long)
+  final case class SparkRun(
+      jobs: List[String], stages: Int, tasks: Int, shuffleBytes: Long, sqlExecutions: Int)
 
   lazy val session: SparkSession = GraftSession.start(4,
     // fresh artifact root per test JVM: durable index artifacts must not

@@ -189,6 +189,78 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(csv(local).linesIterator.toSeq.last == "SUM TOTAL,1,2,\"3,000\",40,75.00,0")
   }
 
+  test("the driver report equals the DataFrame report, cell for cell and byte for byte") {
+    import java.nio.file.{Files, Path}
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    def file(path: String, size: Long = 3000L, text: Long = 40L) =
+      graft.FileStats(path, 2L, 3L, size, text, None, 1L)
+    val hostile = Seq(
+      file("/d/com,ma.pdf"), file("/d/quo\"te.pdf"), file("/d/back\\slash.pdf"),
+      file("/d/cr\rlf\n.pdf"), file("/d/mid\nline.pdf"), file("/d/  lead.pdf"),
+      file("/d/trail.pdf  "), file("no-slash.pdf"), file("/d/\uD83D\uDE00.pdf"),
+      file("/d/\uFB01.pdf"), file("/d/SUM TOTAL"), file("SUM TOTAL"),
+      file("/d/dup.pdf"), file("/d/dup.pdf"), file("/d/zero.pdf", 5L, 0L),
+      file("/d/\"\\\"\r\n,.pdf"), file("/d/"), file(""))
+    // the sums of this set reach Long.MaxValue exactly
+    val rest = hostile.map(_.fileSize).sum
+    val nearMax = hostile :+ graft.FileStats("/d/huge.pdf", Long.MaxValue - 100L,
+      Long.MaxValue - 100L, Long.MaxValue - rest, Long.MaxValue / 3, None, 0L)
+    def csvBytes(dir: Path): Seq[Byte] = {
+      val parts = Files.list(dir).toArray.map(_.asInstanceOf[Path])
+        .filter(_.getFileName.toString.endsWith(".csv"))
+      assert(parts.length == 1)
+      Files.readAllBytes(parts.head).toSeq
+    }
+    def dir(): String = Files.createTempDirectory("driverreport").resolve("out").toString
+    for (rows <- Seq(hostile, nearMax, Nil)) {
+      val viaPlan: DataFrame = ChunkPipeline.report(ChunkPipeline.statsWithTotal(spark.createDataset(rows)))
+      val local = ChunkPipeline.localReport(rows)
+      val viaDriver = local.toDF(spark)
+      assert(viaDriver.schema == viaPlan.schema)
+      val cells = viaPlan.collect().toSeq
+      assert(viaDriver.collect().toSeq == cells)
+      assert(cells.size == (if (rows.isEmpty) 0 else rows.map(_.path).distinct.size + 1))
+      val written = dir()
+      viaPlan.coalesce(1).write.option("header", "true").csv(written)
+      val driverCsv = dir()
+      ChunkPipeline.writeCsv(spark, local, driverCsv)
+      val dfCsv = dir()
+      ChunkPipeline.writeCsv(viaPlan, dfCsv)
+      assert(csvBytes(Path.of(driverCsv)) == csvBytes(Path.of(written)))
+      assert(csvBytes(Path.of(dfCsv)) == csvBytes(Path.of(written)))
+    }
+    val byName = ChunkPipeline.localReport(hostile).toDF(spark).collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(byName("dup.pdf").getString(3) == "6,000" && byName("dup.pdf").getString(5) == "75.00")
+    assert(byName("zero.pdf").getString(5) == "N/A")
+    assert(byName("no-slash.pdf").getString(1) == "2")
+    // one more byte overflows the file-size sum: both forms fail, as
+    // ANSI sum does
+    val over = nearMax :+ file("/d/one-more.pdf", 1L)
+    def overflows(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+    assert(overflows(intercept[Exception](
+      ChunkPipeline.report(ChunkPipeline.statsWithTotal(spark.createDataset(over))).collect())))
+    assert(overflows(intercept[Exception](ChunkPipeline.localReport(over))))
+  }
+
+  test("writeCsv removes its temporary directory when the rename fails") {
+    import java.nio.file.Files
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norenamefs.impl", classOf[NoRenameFs].getName)
+    conf.setBoolean("fs.norenamefs.impl.disable.cache", true)
+    val parent = Files.createTempDirectory("norename")
+    val local = ChunkPipeline.localReport(Seq(graft.FileStats("/d/a.pdf", 1L, 2L, 30L, 4L, None)))
+    val err = intercept[java.io.IOException](
+      ChunkPipeline.writeCsv(spark, local, s"norenamefs://$parent/out"))
+    assert(err.getMessage.startsWith("could not rename"), err)
+    assert(Files.list(parent).count() == 0)
+    intercept[java.io.IOException](
+      ChunkPipeline.writeCsv(local.toDF(spark), s"norenamefs://$parent/out"))
+    assert(Files.list(parent).count() == 0)
+  }
+
   test("report formatting matches the reference README sample (P8/P9, A2)") {
     import spark.implicits._
     // README.md:20-26 values re-typed as FileStats
@@ -307,4 +379,10 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   */
 class TestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("testfs:///")
+}
+
+/** [[TestFs]] under the scheme `norenamefs`, whose rename always fails. */
+class NoRenameFs extends TestFs {
+  override def getUri: java.net.URI = java.net.URI.create("norenamefs:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = false
 }

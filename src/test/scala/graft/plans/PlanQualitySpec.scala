@@ -1050,6 +1050,31 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
     assert(jobsDuring(graft.ops.ChunkPipeline.writeCsv(report, out.toString)).isEmpty)
   }
 
+  test("Engine.processRoots: one job of one stage and no SQL execution; " +
+    "writeCsv of a DataFrame collects it in one") {
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val root = java.nio.file.Files.createTempDirectory("rootsplan")
+    for (i <- 1 to 20)
+      java.nio.file.Files.write(root.resolve(f"f$i%02d.pdf"),
+        PdfFixtures.classicPdf(Seq.fill(1 + i % 5)("page " * i)))
+    val opts = graft.Engine.Options(glob = "*.pdf", extractor = PdfTextExtractor)
+    val outDir = java.nio.file.Files.createTempDirectory("rootscsv")
+    val run = sparkRunDuring(graft.Engine.processRoots(spark, Seq(root.toString), outDir.toString, opts))
+    assert(run.jobs.size == 1, run)
+    assert(run.stages == 1, run)
+    assert(run.sqlExecutions == 0, run)
+    val out = outDir.resolve(graft.Engine.sanitizeFolderPath(root.toString))
+    val csv = java.nio.file.Files.list(out).toArray.map(_.toString).filter(_.endsWith(".csv"))
+    assert(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(csv.head)).size == 22)
+
+    for (df <- Seq(graft.Engine.report(spark, root.toString, opts),
+        spark.range(30).selectExpr("id", "cast(id * 7 as string) AS s").repartition(3))) {
+      val write = sparkRunDuring(graft.ops.ChunkPipeline.writeCsv(df,
+        java.nio.file.Files.createTempDirectory("dfcsv").resolve("out").toString))
+      assert(write.sqlExecutions == 1, write)
+    }
+  }
+
   test("a warm third pass over the operator_mix queries compiles at most 5 classes") {
     // the codegen cache is sized by GraftSession.start; at Spark's 100
     // entries each warm pass recompiles what the pass before evicted

@@ -37,12 +37,67 @@ class FileSourcesSpec extends AnyFunSuite with SparkTestBase {
         .map(s => (s.getPath.toString, s.getLen)).toSet
       val read = FileSources.perFile(files, PlainTextExtractor)(
         (path, length, _) => Iterator((path, length))).collect().toSet
+      val fromRoot = FileSources.perFile(spark, root.toString, glob, PlainTextExtractor)(
+        (path, length, _) => Iterator((path, length))).collect().toSet
       assert(listed == scanned, s"$root $glob")
       assert(read == scanned, s"$root $glob")
+      assert(fromRoot == scanned, s"$root $glob")
     }
     val pdfs = FileSources.binaryFiles(spark, tree.toString, "*.pdf").select("path")
       .collect().map(_.getString(0).split('/').last).toSet
     assert(pdfs == Set("top.pdf", "deep.pdf", "odd name %41 #1.pdf"))
+  }
+
+  test("the root listing is the relation's: options, root globs, missing roots") {
+    val tree = Files.createTempDirectory("rootlisting")
+    write(tree, "a/one.pdf", 10)
+    write(tree, "a/deep/two.pdf", 20)
+    write(tree, "b/three.pdf", 30)
+    write(tree, "b/skip.txt", 40)
+    def both(root: String, glob: String): (ColumnBridge.BinaryFileListing, ColumnBridge.BinaryFileListing) =
+      (ColumnBridge.binaryFileListing(FileSources.binaryFiles(spark, root, glob)),
+        ColumnBridge.binaryFileListing(spark, root, FileSources.binaryFileOptions(glob)))
+    for (root <- Seq(tree.toString, s"$tree/*", s"$tree/{a,b}", s"file://$tree/b");
+         glob <- Seq("*.pdf", "*")) {
+      val (relation, direct) = both(root, glob)
+      def files(l: ColumnBridge.BinaryFileListing) =
+        l.files.map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
+      assert(files(direct) == files(relation), s"$root $glob")
+      assert(files(direct).nonEmpty, s"$root $glob")
+      assert(direct.copy(files = Nil) == relation.copy(files = Nil))
+    }
+    for (missing <- Seq(s"$tree/nope", s"$tree/nope*")) {
+      val viaRelation = intercept[org.apache.spark.sql.AnalysisException](
+        FileSources.binaryFiles(spark, missing, "*.pdf"))
+      val viaRoot = intercept[org.apache.spark.sql.AnalysisException](
+        FileSources.perFile(spark, missing, "*.pdf", PlainTextExtractor)((p, _, _) => Some(p)))
+      assert(viaRoot.getCondition == viaRelation.getCondition, viaRoot)
+      assert(viaRoot.getMessage == viaRelation.getMessage)
+    }
+  }
+
+  test("one conf broadcast per conf state: reused while unchanged, renewed when a key changes") {
+    import graft.sources.pdf.{PdfFixtures, PdfTextExtractor}
+    val dir = Files.createTempDirectory("confkey")
+    Files.write(dir.resolve("a.pdf"), PdfFixtures.classicPdf(Seq("one page", "and two")))
+    def pages(root: String): Seq[(String, Int)] =
+      FileSources.perFile(spark, root, "*.pdf", PdfTextExtractor)(
+        (path, _, pages) => Iterator((path.split('/').last, pages.size))).collect().toSeq
+    val before = ColumnBridge.hadoopConfInTask(spark).broadcastId
+    assert(pages(dir.toString) == Seq("a.pdf" -> 2))
+    assert(pages(dir.toString) == Seq("a.pdf" -> 2))
+    assert(ColumnBridge.hadoopConfInTask(spark).broadcastId == before)
+    // a session conf that newHadoopConf copies: the tasks must read
+    // through the file system it names
+    val keys = Seq("fs.confkeyfs.impl" -> classOf[ConfKeyFs].getName,
+      "fs.confkeyfs.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assert(pages(s"confkeyfs://$dir") == Seq("a.pdf" -> 2))
+      assert(ColumnBridge.hadoopConfInTask(spark).broadcastId != before)
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+    val err = intercept[Exception](pages(s"confkeyfs://$dir"))
+    assert(String.valueOf(err.getMessage).contains("confkeyfs"), err)
   }
 
   test("perFile takes the bare binaryFile relation only") {
@@ -113,4 +168,11 @@ class FileSourcesSpec extends AnyFunSuite with SparkTestBase {
     val four = FileSources.packBins((1 to 4).map(i => (s"f$i", 30L)), 3, 0)
     assert(loads(four, 0).max == 60L)
   }
+}
+
+/** [[graft.ops.TestFs]] under the scheme `confkeyfs`, which only a conf
+  * that names it can open.
+  */
+class ConfKeyFs extends graft.ops.TestFs {
+  override def getUri: java.net.URI = java.net.URI.create("confkeyfs:///")
 }
